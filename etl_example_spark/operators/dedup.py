@@ -1871,6 +1871,9 @@ def _span_occurrences(
 #: and again by the apply form; staging it once is the production move
 #: (a parquet staging table at 100 TB, localCheckpoint locally).
 _STAGED_SPANS: OrderedDict[tuple, DataFrame] = OrderedDict()
+#: the get-or-create below is check-then-act; engine code issues Spark
+#: work from several threads (session.run_concurrently, pooled sweeps)
+_STAGED_SPANS_LOCK = __import__("threading").Lock()
 _STAGED_SPANS_MAX = 4
 
 
@@ -1931,23 +1934,24 @@ def staged_span_occurrences(
         text_col,
         id_col,
     )
-    if sem is None or key not in _STAGED_SPANS:
-        # restore scan parallelism before pinning (single-file corpus =
-        # one partition; see staged_shingles)
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
-        occ = _span_occurrences(
-            df, text_col, id_col, span_tokens
-        ).localCheckpoint(eager=True)
-        if sem is None:
-            return occ
-        _STAGED_SPANS[key] = occ
-        while len(_STAGED_SPANS) > _STAGED_SPANS_MAX:
-            _STAGED_SPANS.popitem(last=False)
-    else:
-        _STAGED_SPANS.move_to_end(key)
-    return _STAGED_SPANS[key]
+    with _STAGED_SPANS_LOCK:
+        if sem is None or key not in _STAGED_SPANS:
+            # restore scan parallelism before pinning (single-file corpus =
+            # one partition; see staged_shingles)
+            par = df.sparkSession.sparkContext.defaultParallelism
+            if df.rdd.getNumPartitions() < par:
+                df = df.repartition(par)
+            occ = _span_occurrences(
+                df, text_col, id_col, span_tokens
+            ).localCheckpoint(eager=True)
+            if sem is None:
+                return occ
+            _STAGED_SPANS[key] = occ
+            while len(_STAGED_SPANS) > _STAGED_SPANS_MAX:
+                _STAGED_SPANS.popitem(last=False)
+        else:
+            _STAGED_SPANS.move_to_end(key)
+        return _STAGED_SPANS[key]
 
 
 def duplicated_spans(

@@ -12,14 +12,21 @@ configuration:
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   (DuckDB timestamps are UTC-naive).
 - Arrow enabled for any pandas interchange (vectorized UDF boundary).
+
+:func:`run_concurrently` is the one way engine code issues independent
+Spark actions at once.
 """
 
 from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable, Hashable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def get_spark(
@@ -108,3 +115,32 @@ def configure_session(spark: SparkSession) -> SparkSession:
     if spark.conf.get("spark.sql.shuffle.partitions") == "200":
         spark.conf.set("spark.sql.shuffle.partitions", "32")
     return spark
+
+
+def run_concurrently(
+    spark: SparkSession, actions: dict[Hashable, Callable[[], Any]]
+) -> dict[Hashable, Any]:
+    """Run independent zero-argument Spark actions at once; return
+    name -> result in the order of ``actions``.
+
+    Each action gets its own thread (one action runs inline), so tiny
+    jobs that would otherwise queue behind each other share the cores.
+    Each task is wrapped in its own ``inheritable_thread_target(spark)``:
+    that clones the caller's local properties (job group, description)
+    at wrap time, so every job carries the caller's group, and a group
+    one task sets for itself does not leak into its siblings, as it
+    would through one shared clone.
+
+    Every action runs to completion before this returns or raises; if
+    any failed, the first failure in the order of ``actions`` is
+    re-raised.
+    """
+    if len(actions) <= 1:
+        return {name: action() for name, action in actions.items()}
+    # leaving the pool's block waits for every future, failed or not
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(action))
+            for name, action in actions.items()
+        }
+    return {name: future.result() for name, future in futures.items()}

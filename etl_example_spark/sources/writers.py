@@ -21,12 +21,15 @@ similar scan cost, an IO-bandwidth win at scale.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_example_spark.session import run_concurrently
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -342,6 +345,14 @@ def backup_catalog(
     (no pg_dump single-stream bottleneck — at 100 TB each table's
     partitions upload from their own executors).
 
+    Each table is one task — write, read-back count, schema — and the
+    tasks run concurrently (``session.run_concurrently``). The read-back
+    count, not the source frame's, is what the manifest records.
+    ``_MANIFEST.json`` is written last, only after every task succeeded:
+    if any table fails, the error is re-raised once the other tasks end
+    and no manifest exists, so :func:`restore_catalog` refuses the
+    partial snapshot.
+
     Returns the backup directory path. Restore with
     :func:`restore_catalog`.
     """
@@ -355,17 +366,22 @@ def backup_catalog(
         }
     label = label or time.strftime("%Y%m%dT%H%M%S")
     backup_dir = os.path.join(dest, f"backup_{label}")
-    manifest: dict[str, dict] = {}
-    for name, df in tables.items():
-        df.write.mode("overwrite").option("compression", "zstd").parquet(
-            os.path.join(backup_dir, name)
-        )
-        manifest[name] = {
-            "rows": spark.read.parquet(
-                os.path.join(backup_dir, name)
-            ).count(),
+
+    def backup_table(name: str, df: DataFrame) -> dict:
+        path = os.path.join(backup_dir, name)
+        df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+        return {
+            "rows": spark.read.parquet(path).count(),
             "schema": df.schema.jsonValue(),
         }
+
+    manifest = run_concurrently(
+        spark,
+        {
+            name: functools.partial(backup_table, name, df)
+            for name, df in tables.items()
+        },
+    )
     # through the Hadoop FS API, not open(): on a remote dest (s3a://,
     # hdfs://) the tables upload via the parquet writer and the manifest
     # must land on the SAME filesystem, or the snapshot is unrestorable

@@ -12,6 +12,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from etl_example_spark.session import get_spark  # noqa: E402
 
+#: tests that replay the reference's own dataset; they skip as a module
+#: when it is absent, which a bare skip count would not say
+REFERENCE_TEST_FILES = (
+    "tests/test_reference_golden.py",
+    "tests/test_sql_script_reference.py",
+)
+
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SF_SMOKE", "/root/testdata/sf0.001")
 SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_SF_CORRECTNESS", "/root/testdata/sf0.01")
 
@@ -31,3 +38,20 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_correctness_dir() -> str:
     return SF_CORRECTNESS
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name the reference-dataset skips in one line."""
+    skipped = [
+        rep
+        for rep in terminalreporter.stats.get("skipped", [])
+        if rep.nodeid.startswith(REFERENCE_TEST_FILES)
+    ]
+    if skipped:
+        reasons = sorted(
+            {rep.longrepr[2].removeprefix("Skipped: ") for rep in skipped}
+        )
+        terminalreporter.write_line(
+            f"reference-golden tests skipped: {'; '.join(reasons)} "
+            f"({len(skipped)} tests)"
+        )

@@ -976,6 +976,43 @@ class TestStagedSpanFileSnapshot:
         dedup.clear_staged_caches()
         assert not dedup._STAGED_SPANS and not dedup._STAGED
 
+    def test_concurrent_callers_build_each_key_once(self, spark, monkeypatch):
+        """8 threads racing on 2 keys: each key's occurrence table is
+        built once, and every caller of a key gets that one artifact."""
+        import sys
+        import threading
+        from concurrent.futures import ThreadPoolExecutor
+
+        from etl_example_spark.operators import dedup
+
+        builds: list[str] = []
+        build = dedup._span_occurrences
+
+        def counting_build(df, *args, **kwargs):
+            builds.append(df.first().text)
+            return build(df, *args, **kwargs)
+
+        monkeypatch.setattr(dedup, "_span_occurrences", counting_build)
+        texts = ["race alpha beta gamma delta", "race epsilon zeta eta theta"]
+        frames = [_docs(spark, [(1, t)]) for t in texts]
+        barrier = threading.Barrier(8, timeout=60)
+
+        def call(i):
+            barrier.wait()
+            return dedup.staged_span_occurrences(frames[i % 2], span_tokens=3)
+
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                futures = [pool.submit(call, i) for i in range(8)]
+                got = [f.result(timeout=120) for f in futures]
+        finally:
+            sys.setswitchinterval(switch)
+        assert sorted(builds) == sorted(texts)
+        for i in range(2):
+            assert all(occ is got[i] for occ in got[i::2])
+
 
 class TestIvfDegenerateVectors:
     def test_zero_norm_vector_survives_with_null_centroid(self, spark):

@@ -13,6 +13,7 @@ convergence count — not a re-execution of prior rounds).
 from __future__ import annotations
 
 from etl_example_spark.operators.dedup import dedup_clusters
+from tests.jobs import launched_jobs
 
 
 def _chain_pairs(spark, n):
@@ -24,13 +25,14 @@ def _chain_pairs(spark, n):
 
 
 def _run(spark, n):
-    st = spark.sparkContext.statusTracker()
-    before = len(st.getJobIdsForGroup(None) or [])
-    df = dedup_clusters(_chain_pairs(spark, n))
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    rows = {r["doc_id"]: r["cluster_id"] for r in df.collect()}
-    jobs = len(st.getJobIdsForGroup(None) or []) - before
-    return plan, jobs, rows
+    # counted by job id, not as a difference of the status store's job
+    # list: the store keeps only the last spark.ui.retainedJobs jobs and
+    # evicts 100 at a time, which can make that difference negative
+    with launched_jobs(spark) as jobs:
+        df = dedup_clusters(_chain_pairs(spark, n))
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        rows = {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+    return plan, len(jobs), rows
 
 
 def test_final_plan_is_flat_across_iteration_depths(spark):

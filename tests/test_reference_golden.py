@@ -21,7 +21,7 @@ from etl_example_spark.schemas import REFERENCE_SCHEMAS
 REF = "/root/reference/ddl"
 
 pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF), reason="reference dataset not present"
+    not os.path.isdir(REF), reason=f"{os.path.dirname(REF)} absent"
 )
 
 

@@ -14,6 +14,7 @@ from etl_example_spark.plans.reference_queries import (
 )
 from etl_example_spark.schemas import REFERENCE_SCHEMAS
 from etl_example_spark.fixtures import make_reference_tables
+from tests.jobs import launched_jobs
 from tests.oracle import compare_frames
 
 
@@ -44,6 +45,31 @@ def test_problematic_count_matches_pandas(result, ref_tables):
     expected = int((q.isna() | (q <= 0) | (q > 1_000_000)).sum())
     assert result.problematic == expected
     assert result.post_counts["sellout"] == len(pdfs["sellout"]) - expected
+
+
+def test_post_counts_derived_from_pre_counts(result, ref_tables):
+    """Dimensions keep their pre-count; the fact loses exactly the
+    problematic rows. Both dicts keep the order of ``tables``, which the
+    CLI's logged counts depend on."""
+    pdfs, _ = ref_tables
+    assert list(result.pre_counts) == list(pdfs)
+    assert list(result.post_counts) == list(pdfs)
+    for name, pre in result.pre_counts.items():
+        if name == "sellout":
+            assert result.post_counts[name] == pre - result.problematic
+        else:
+            assert result.post_counts[name] == pre
+    assert result.post_counts["sellout"] == result.curated.count()
+
+
+def test_run_pipeline_job_budget(spark, ref_tables):
+    """One count per table plus the problematic count, in one concurrent
+    batch; post-counts launch no job. 18 jobs when every table was
+    counted again after curation."""
+    _, sdfs = ref_tables
+    with launched_jobs(spark) as jobs:
+        run_pipeline(spark, sdfs)
+    assert len(jobs) <= 10, f"run_pipeline launched {len(jobs)} jobs"
 
 
 def test_duplicates_kept(result):

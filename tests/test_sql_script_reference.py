@@ -18,7 +18,7 @@ from etl_example_spark.sources.sql_script import (
 REF = "/root/reference/ddl"
 
 pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REF), reason="reference dataset not present"
+    not os.path.isdir(REF), reason=f"{os.path.dirname(REF)} absent"
 )
 
 EXPECTED_COUNTS = {

@@ -360,6 +360,35 @@ class TestCatalogBackup:
         with pytest.raises(ValueError, match="damaged"):
             restore_catalog(spark, backup_dir)
 
+    def test_failed_table_leaves_no_manifest(self, spark, sf_dir, tmp_path):
+        """One table's write fails: the error surfaces once the other
+        tables' tasks have ended, and no ``_MANIFEST.json`` is written,
+        so the partial snapshot cannot be restored."""
+        import os
+
+        import pytest
+
+        from etl_example_spark.sources.writers import (
+            backup_catalog,
+            restore_catalog,
+        )
+
+        tables = {
+            "broken": spark.range(0, 100, 1, 4).selectExpr(
+                "id", "IF(id = 97, raise_error('backup boom'), id) AS v"
+            ),
+            "region": load_table(spark, sf_dir, "region"),
+            "nation": load_table(spark, sf_dir, "nation"),
+        }
+        with pytest.raises(Exception, match="backup boom"):
+            backup_catalog(spark, str(tmp_path), tables=tables, label="bad")
+        backup_dir = os.path.join(str(tmp_path), "backup_bad")
+        assert not os.path.exists(os.path.join(backup_dir, "_MANIFEST.json"))
+        for name in ("region", "nation"):
+            assert os.path.exists(os.path.join(backup_dir, name, "_SUCCESS"))
+        with pytest.raises(Exception, match="_MANIFEST.json"):
+            restore_catalog(spark, backup_dir)
+
 
 class TestPartitionPruning:
     def test_partition_filter_prunes_scan(self, spark, sf_dir, tmp_path):
