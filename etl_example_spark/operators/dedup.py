@@ -23,7 +23,9 @@ All of them consume one STAGED artifact per corpus (``staged_shingles``):
 the per-doc shingle arrays, a hashed inverted index, and MinHash
 signatures, each materialized once and shared across queries — the local
 analog of staging the dedup index to parquet, which is how a 100 TB
-pipeline amortizes its one wide text scan over many dedup passes.
+pipeline amortizes its one wide text scan over many dedup passes. The
+staged artifacts live in :mod:`etl_example_spark.artifacts`, which
+keys, locks, bounds and invalidates them.
 
 Signatures use deterministic md5 hashing so results are bit-reproducible
 and oracle-comparable; the intersection join uses xxhash64'd shingles
@@ -32,84 +34,11 @@ and oracle-comparable; the intersection join uses xxhash64'd shingles
 
 from __future__ import annotations
 
-import os
-import weakref
-from collections import OrderedDict
-from urllib.parse import unquote, urlparse
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_example_spark import artifacts
 from etl_example_spark.operators.text import normalized_fingerprint, tokens
-
-
-#: memoized per live session (weak keys — the cache must never keep a
-#: session alive): _session_key sits on hot paths (every load_table
-#: call) and the JVM handles cost py4j round trips
-_SESSION_KEYS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def _session_key(spark) -> str:
-    """Stable identity for a SparkSession in staged-cache keys.
-
-    ``id(sparkSession)`` can ALIAS: after the old session is
-    garbage-collected, CPython may hand its address to a new session,
-    silently serving staged artifacts across session boundaries. The
-    applicationId + sessionUUID pair is unique for the lifetime of the
-    process (sessionUUID is per-Dataset-session even when sessions
-    share one SparkContext). Spark Connect has neither handle; its
-    client carries its own server-issued session id — use that, and
-    only as a dead-last resort fall back to ``id`` (a constant string
-    here would deterministically COLLIDE every Connect session, worse
-    than the rare GC-aliasing the helper exists to fix)."""
-    try:
-        return _SESSION_KEYS[spark]
-    except (KeyError, TypeError):
-        pass
-
-    def compute() -> str:
-        try:
-            app = spark.sparkContext.applicationId
-        except Exception:  # noqa: BLE001 — no context handle (Connect)
-            try:
-                return f"connect:{spark._client._session_id}"
-            except Exception:  # noqa: BLE001 — unknown runtime
-                return f"unknown:{id(spark)}"
-        try:
-            return f"{app}:{spark._jsparkSession.sessionUUID()}"
-        except Exception:  # noqa: BLE001 — no JVM handle: app key
-            return app
-
-    key = compute()
-    try:
-        _SESSION_KEYS[spark] = key
-    except TypeError:  # not weakref-able: recompute per call
-        pass
-    return key
-
-
-def _input_file_snapshot(df: DataFrame) -> tuple:
-    """Fingerprint of the plan's leaf input files — (uri, size,
-    mtime_ns) per file, sorted. Folded into the staged-artifact cache
-    keys so overwriting a parquet source IN-SESSION (testdata
-    regeneration, a rewritten staging table) is a cache miss instead of
-    silently serving occurrence data scanned from the old bytes: a
-    semantic plan hash names the *plan*, not the bytes under it.
-    In-memory inputs (createDataFrame) have no files → empty tuple, and
-    the semantic hash alone remains the correct key."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — unanalyzable plan: no file key
-        return ()
-    sig = []
-    for uri in sorted(files):
-        path = unquote(urlparse(uri).path) if uri.startswith("file:") else uri
-        try:
-            st = os.stat(path)
-            sig.append((uri, st.st_size, st.st_mtime_ns))
-        except OSError:
-            sig.append((uri, -1, -1))
-    return tuple(sig)
 
 
 def word_shingles(col: Column | str, n: int = 3) -> Column:
@@ -173,34 +102,40 @@ class _StagedShingles:
     - ``hashed_index``: exploded (doc_id, n_shingles, h=xxhash64(shingle))
       — the self-join representation. 8-byte keys shuffle ~4× less than
       shingle strings and compare branch-free in the sort-merge join.
-    - ``sigs``: MinHash signatures per num_hashes, computed from ``sets``
-      via explode + codegen'd min-aggregate (the interpreted
+    - ``signatures(num_hashes)``: MinHash signatures, computed from
+      ``sets`` via explode + codegen'd min-aggregate (the interpreted
       higher-order-function formulation measures ~8× slower).
+
+    The derived tables are built on first use, once, through the
+    artifact store. Their key carries a token unique to this build, so
+    a rebuilt (or unkeyable) parent never serves another build's tables.
     """
 
-    def __init__(self, sets: DataFrame):
+    def __init__(self, sets: DataFrame, params):
         self.sets = sets
-        self._hashed_index: DataFrame | None = None
-        self._sigs: dict[int, DataFrame] = {}
+        self._params = (params, object())
 
     @property
     def hashed_index(self) -> DataFrame:
-        if self._hashed_index is None:
-            self._hashed_index = self.sets.select(
+        return artifacts.get_or_build(
+            "hashed_index",
+            self.sets.sparkSession,
+            self._params,
+            lambda: self.sets.select(
                 "doc_id",
                 "n_shingles",
                 F.explode(
                     F.expr("transform(sh_set, s -> xxhash64(s))")
                 ).alias("h"),
-            ).localCheckpoint(eager=True)
-        return self._hashed_index
+            ).localCheckpoint(eager=True),
+        )
 
     def signatures(self, num_hashes: int) -> DataFrame:
-        if num_hashes not in self._sigs:
+        def build() -> DataFrame:
             exploded = self.sets.select(
                 "doc_id", F.explode("sh_set").alias("shingle")
             )
-            self._sigs[num_hashes] = (
+            return (
                 exploded.groupBy("doc_id")
                 .agg(
                     *[
@@ -212,19 +147,24 @@ class _StagedShingles:
                 )
                 .localCheckpoint(eager=True)
             )
-        return self._sigs[num_hashes]
+
+        return artifacts.get_or_build(
+            "signatures",
+            self.sets.sparkSession,
+            (*self._params, num_hashes),
+            build,
+        )
 
 
-#: staged artifacts keyed by (session, input-plan semantics, params);
-#: LRU-bounded — evicted entries' checkpoint blocks are freed by the
-#: ContextCleaner once unreferenced.
-_STAGED: OrderedDict[tuple, _StagedShingles] = OrderedDict()
-#: round-14: concurrent registrations (thread-pooled sweeps) must not
-#: race the LRU get-or-create
-_STAGED_LOCK = __import__("threading").Lock()
-#: full corpus + deduped subset (d53) + existing/new splits (d55) can be
-#: live in one verify pass; 8 keeps them all resident without thrash
-_STAGED_MAX = 8
+def _restore_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition a corpus to the default parallelism before an
+    artifact over it is pinned: a single-file corpus (one row group)
+    arrives as ONE partition, which would make every downstream pass
+    over the staged artifact — the self-join probe, the signature
+    min-aggregate — a single task regardless of cluster size. At 100 TB
+    the source already has thousands of splits and this is a no-op."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
 
 def staged_shingles(
@@ -239,47 +179,23 @@ def staged_shingles(
     ``sources.loaders.warm_tables`` (BASELINE.md compares warm-server
     latencies; Postgres likewise serves repeat queries from warm buffers).
     """
-    try:
-        sem = df.semanticHash()
-    except Exception:  # noqa: BLE001 — no stable key: treat as cache MISS
-        # (an id(df)-based key could alias a garbage-collected DataFrame
-        # whose id was reused, serving a stale staged index)
-        sem = None
-    key = (
-        _session_key(df.sparkSession),
-        sem,
-        _input_file_snapshot(df),
-        n,
-        text_col,
-        id_col,
-    )
-    with _STAGED_LOCK:
-        if sem is None or key not in _STAGED:
-            # Restore scan parallelism before the staged artifact is pinned:
-            # a single-file corpus (one row group) arrives as ONE partition,
-            # which would make every downstream pass over the staged index —
-            # the self-join probe, the signature min-aggregate — a single
-            # task regardless of cluster size. At 100 TB the source already
-            # has thousands of splits and this is a no-op.
-            par = df.sparkSession.sparkContext.defaultParallelism
-            if df.rdd.getNumPartitions() < par:
-                df = df.repartition(par)
-            sets = (
-                df.select(
-                    F.col(id_col).alias("doc_id"),
-                    word_shingles(text_col, n).alias("sh_set"),
-                )
-                .withColumn("n_shingles", F.size("sh_set"))
-                .localCheckpoint(eager=True)
+    params = artifacts.plan_params(df, n, text_col, id_col)
+
+    def build() -> _StagedShingles:
+        sets = (
+            _restore_parallelism(df)
+            .select(
+                F.col(id_col).alias("doc_id"),
+                word_shingles(text_col, n).alias("sh_set"),
             )
-            if sem is None:  # unkeyable input: never cached, never served
-                return _StagedShingles(sets)
-            _STAGED[key] = _StagedShingles(sets)
-            while len(_STAGED) > _STAGED_MAX:
-                _STAGED.popitem(last=False)
-        else:
-            _STAGED.move_to_end(key)
-        return _STAGED[key]
+            .withColumn("n_shingles", F.size("sh_set"))
+            .localCheckpoint(eager=True)
+        )
+        return _StagedShingles(sets, params)
+
+    return artifacts.get_or_build(
+        "shingles", df.sparkSession, params, build, sources=(df,)
+    )
 
 
 def shingle_index(
@@ -1864,27 +1780,10 @@ def _span_occurrences(
     ).select("doc_id", "pos", *_content_hash_pair("_s"))
 
 
-#: staged span-occurrence tables keyed like the shingle artifacts:
-#: (session, input-plan semantics, params) with a small LRU. The occ
-#: scan (tokenize -> sliding-window hash -> explode) is consumed twice
-#: per detection query (first-occurrence aggregate + anti-join probe)
-#: and again by the apply form; staging it once is the production move
-#: (a parquet staging table at 100 TB, localCheckpoint locally).
-_STAGED_SPANS: OrderedDict[tuple, DataFrame] = OrderedDict()
-#: the get-or-create below is check-then-act; engine code issues Spark
-#: work from several threads (session.run_concurrently, pooled sweeps)
-_STAGED_SPANS_LOCK = __import__("threading").Lock()
-_STAGED_SPANS_MAX = 4
-
-
 def clear_staged_caches() -> None:
-    """Drop every staged shingle/span artifact for the process — the
-    explicit invalidation hook for tests and tools that rewrite source
-    files in place (the file-snapshot cache key already misses on
-    changed paths/sizes/mtimes; this covers same-second rewrites on
-    filesystems with coarse mtime granularity)."""
-    _STAGED.clear()
-    _STAGED_SPANS.clear()
+    """Drop every staged artifact of every kind (see
+    :func:`etl_example_spark.artifacts.clear`)."""
+    artifacts.clear()
 
 
 def staged_span_occurrences(
@@ -1907,8 +1806,8 @@ def staged_span_occurrences(
     parquet back without touching the text again. Executor memory/disk
     no longer bounds the artifact, and it survives the session. The
     caller owns the path's lifecycle (delete it to force a re-scan;
-    the in-memory LRU's file-snapshot keying does not apply here:
-    presence of the artifact IS the cache)."""
+    the artifact store's file snapshot does not apply here: presence
+    of the artifact IS the cache)."""
     if stage_path is not None:
         spark = df.sparkSession
         jpath = spark._jvm.org.apache.hadoop.fs.Path(stage_path)
@@ -1922,36 +1821,15 @@ def staged_span_occurrences(
                 "overwrite"
             ).parquet(stage_path)
         return spark.read.parquet(stage_path)
-    try:
-        sem = df.semanticHash()
-    except Exception:  # noqa: BLE001 — no stable key: treat as cache MISS
-        sem = None
-    key = (
-        _session_key(df.sparkSession),
-        sem,
-        _input_file_snapshot(df),
-        span_tokens,
-        text_col,
-        id_col,
+    return artifacts.get_or_build(
+        "spans",
+        df.sparkSession,
+        artifacts.plan_params(df, span_tokens, text_col, id_col),
+        lambda: _span_occurrences(
+            _restore_parallelism(df), text_col, id_col, span_tokens
+        ).localCheckpoint(eager=True),
+        sources=(df,),
     )
-    with _STAGED_SPANS_LOCK:
-        if sem is None or key not in _STAGED_SPANS:
-            # restore scan parallelism before pinning (single-file corpus =
-            # one partition; see staged_shingles)
-            par = df.sparkSession.sparkContext.defaultParallelism
-            if df.rdd.getNumPartitions() < par:
-                df = df.repartition(par)
-            occ = _span_occurrences(
-                df, text_col, id_col, span_tokens
-            ).localCheckpoint(eager=True)
-            if sem is None:
-                return occ
-            _STAGED_SPANS[key] = occ
-            while len(_STAGED_SPANS) > _STAGED_SPANS_MAX:
-                _STAGED_SPANS.popitem(last=False)
-        else:
-            _STAGED_SPANS.move_to_end(key)
-        return _STAGED_SPANS[key]
 
 
 def duplicated_spans(

@@ -11,12 +11,11 @@ DuckDB oracles in plans/llm_ops.py mirror the same expressions).
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_example_spark import artifacts
 from etl_example_spark.functions.localrel import local_df
 
 # Marker stopwords per language for the n-gram/stopword language-ID
@@ -1216,22 +1215,6 @@ def bigram_logprob_score(
     )
 
 
-#: Session-keyed staged (doc_id, term, tf, dl) tables for BM25 — the
-#: staged_shingles discipline (operators/dedup.py): the matched-term
-#: postings artifact is built from ONE corpus scan and reused by every
-#: branch (df fold, score join) and every repeat build over the same
-#: (corpus, query set). Keyed by semantic plan hash + input-file
-#: snapshot so in-session source overwrites miss instead of serving
-#: stale postings. At 100 TB this artifact is a written parquet
-#: postings table; locally localCheckpoint pins it.
-_STAGED_BM25: OrderedDict = OrderedDict()
-_STAGED_BM25_MAX = 8
-#: round-14: the thread-pooled test sweeps run registrations
-#: concurrently; the LRU get-or-create (popitem + move_to_end) is not
-#: thread-safe and an unguarded race double-builds the staged artifact
-_STAGED_BM25_LOCK = __import__("threading").Lock()
-
-
 def bm25_postings(
     df: DataFrame,
     terms: tuple[str, ...] | None,
@@ -1356,12 +1339,14 @@ def _staged_bm25_tf(
     which silently defeated plan-hash keying (measured: the bench's 7
     builds re-staged 7 times) — and it lets the explode filter be a
     literal ``isin`` evaluated inside the scan stage, no join node at
-    all."""
-    from etl_example_spark.operators.dedup import (
-        _input_file_snapshot,
-        _session_key,
-    )
+    all.
 
+    The artifact store keys the table by the corpus's semantic plan
+    hash plus that term set, and rebuilds it when the corpus files
+    change. It is reused by every branch (df fold, score join) and
+    every repeat build over the same (corpus, query set). At 100 TB it
+    is a written parquet postings table; locally localCheckpoint pins
+    it."""
     # no .distinct() before the collect: the set() dedupes driver-side,
     # and dropping the aggregate lets a LocalRelation query workload
     # collect on the driver fast path — zero Spark jobs — instead of
@@ -1369,39 +1354,15 @@ def _staged_bm25_tf(
     terms = tuple(
         sorted({r[0] for r in queries.select("term").collect()})
     )
-
-    def build() -> DataFrame:
-        return bm25_postings(
+    return artifacts.get_or_build(
+        "bm25_tf",
+        df.sparkSession,
+        artifacts.plan_params(df, terms, text_col, id_col),
+        lambda: bm25_postings(
             df, terms, text_col, id_col
-        ).localCheckpoint(eager=True)
-
-    try:
-        sem = df.semanticHash()
-    except Exception:  # noqa: BLE001 — no stable key: treat as MISS
-        return build()
-    key = (
-        _session_key(df.sparkSession),
-        sem,
-        _input_file_snapshot(df),
-        terms,
-        text_col,
-        id_col,
+        ).localCheckpoint(eager=True),
+        sources=(df,),
     )
-    with _STAGED_BM25_LOCK:
-        if key not in _STAGED_BM25:
-            _STAGED_BM25[key] = build()
-            while len(_STAGED_BM25) > _STAGED_BM25_MAX:
-                # eviction drops OUR reference only; the ContextCleaner
-                # frees the checkpoint blocks once the last reference is
-                # gone. A forcible unpersist here would be use-after-free:
-                # localCheckpoint TRUNCATES lineage, so any still-held
-                # DataFrame built over the evicted postings (a bench loop
-                # re-executing an earlier bm25_topk result) would fail with
-                # 'checkpoint block not found' instead of recomputing.
-                _STAGED_BM25.popitem(last=False)
-        else:
-            _STAGED_BM25.move_to_end(key)
-        return _STAGED_BM25[key]
 
 
 def bm25_topk(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_example_spark import artifacts
 from etl_example_spark.functions.localrel import local_df
 
 from etl_example_spark.operators import (
@@ -2404,26 +2405,6 @@ def s53_bm25_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rk")
 
 
-#: (session key, sf_dir) -> corpus fingerprint of the LIVE bucketed
-#: BM25 artifact. The fingerprint (leaf files + sizes + mtimes) makes
-#: an in-session corpus overwrite a STAGING MISS instead of silently
-#: serving an index built from the old bytes. A dict keyed WITHOUT the
-#: fingerprint (not a set of triples): the artifact tables are named by
-#: sf_dir alone, so only the latest build exists on disk — a set would
-#: keep the old fingerprint as a stale hit when the corpus reverts to
-#: previously-seen bytes (e.g. a backup restored via mv, which
-#: preserves sizes+mtimes) even though the tables now hold the
-#: intermediate corpus's index.
-_BM25_BUCKETED_STAGED: dict[tuple, tuple] = {}
-
-#: Serializes the catalog-writing get-or-create stagers (round-14: the
-#: thread-pooled test sweeps run registrations concurrently, and two
-#: threads racing the fingerprint check would saveAsTable the SAME
-#: table name at once). One lock for all stagers — staging is rare
-#: (once per (session, corpus)) and correctness beats granularity.
-_STAGE_LOCK = __import__("threading").Lock()
-
-
 def _stage_bm25_bucketed(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, int, int]:
@@ -2436,47 +2417,39 @@ def _stage_bm25_bucketed(
     buckets its query terms hash into."""
     import hashlib
 
-    from etl_example_spark.operators.dedup import (
-        _input_file_snapshot,
-        _session_key,
+    from etl_example_spark.sources.writers import (
+        drop_table_and_location,
+        write_bucketed_table,
     )
-    from etl_example_spark.sources.writers import write_bucketed_table
 
     slug = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     name = f"bm25_postings_bkt_{slug}"
     stats_name = f"bm25_stats_{slug}"
     docs = load_table(spark, sf_dir, "documents")
-    # _session_key, not id(spark): a GC'd session's address can be
-    # reused, and a stale staging hit on a fresh session would raise
-    # TABLE_OR_VIEW_NOT_FOUND from its empty in-memory catalog.
-    # The corpus fingerprint (leaf files+sizes+mtimes) values the BYTES:
-    # any fingerprint change — including a revert to previously-seen
-    # bytes — re-stages instead of serving a stale index.
-    key = (_session_key(spark), sf_dir)
-    fingerprint = _input_file_snapshot(docs)
-    with _STAGE_LOCK:
-        if _BM25_BUCKETED_STAGED.get(key) != fingerprint:
-            from etl_example_spark.sources.writers import (
-                drop_table_and_location,
-            )
-            write_bucketed_table(
-                text.bm25_postings(docs, None),
-                name,
-                ["term"],
-                32,
-                sort_by=["term"],
-            )
-            drop_table_and_location(spark, stats_name)
-            docs.select(
-                F.count("*").alias("n_docs"),
-                F.coalesce(
-                    F.sum(
-                        text.token_count(F.coalesce(F.col("text"), F.lit("")))
-                    ),
-                    F.lit(0),
-                ).alias("t_total"),
-            ).write.mode("overwrite").saveAsTable(stats_name)
-            _BM25_BUCKETED_STAGED[key] = fingerprint
+
+    def build() -> str:
+        write_bucketed_table(
+            text.bm25_postings(docs, None),
+            name,
+            ["term"],
+            32,
+            sort_by=["term"],
+        )
+        drop_table_and_location(spark, stats_name)
+        docs.select(
+            F.count("*").alias("n_docs"),
+            F.coalesce(
+                F.sum(
+                    text.token_count(F.coalesce(F.col("text"), F.lit("")))
+                ),
+                F.lit(0),
+            ).alias("t_total"),
+        ).write.mode("overwrite").saveAsTable(stats_name)
+        return name
+
+    artifacts.get_or_build(
+        "bm25_bucketed", spark, sf_dir, build, sources=(docs,)
+    )
     stats = spark.table(stats_name).collect()[0]
     return name, int(stats["n_docs"]), int(stats["t_total"])
 
@@ -2655,12 +2628,6 @@ HYBRID_SERVE_TERMS: list[tuple[int, str]] = [
 ]
 
 
-#: (session key, sf_dir) -> corpus fingerprint of the LIVE stored IVF
-#: index — same invalidation contract as _BM25_BUCKETED_STAGED (one
-#: fingerprint per key; any byte change, including a revert, re-stages).
-_IVF_ARTIFACTS_STAGED: dict[tuple, tuple] = {}
-
-
 def _stage_ivf_artifacts(
     spark: SparkSession, sf_dir: str, n_centroids: int = 16
 ) -> tuple[DataFrame, DataFrame]:
@@ -2676,36 +2643,34 @@ def _stage_ivf_artifacts(
     operators/similarity.ivf_append (s47) / st49 streaming."""
     import hashlib
 
-    from etl_example_spark.operators.dedup import (
-        _input_file_snapshot,
-        _session_key,
-    )
     from etl_example_spark.sources.writers import drop_table_and_location
 
     slug = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     cents_name = f"ivf_centroids_{slug}"
     assign_name = f"ivf_assign_{slug}"
     emb = load_table(spark, sf_dir, "embeddings")
-    key = (_session_key(spark), sf_dir)
-    fingerprint = _input_file_snapshot(emb)
-    with _STAGE_LOCK:
-        if _IVF_ARTIFACTS_STAGED.get(key) != fingerprint:
-            drop_table_and_location(spark, cents_name)
-            (
-                emb.orderBy("vec_id")
-                .limit(n_centroids)
-                .select(
-                    F.col("vec_id").alias("centroid_id"),
-                    F.col("embedding").alias("centroid_vec"),
-                )
-                .write.mode("overwrite")
-                .saveAsTable(cents_name)
+
+    def build() -> tuple[str, str]:
+        drop_table_and_location(spark, cents_name)
+        (
+            emb.orderBy("vec_id")
+            .limit(n_centroids)
+            .select(
+                F.col("vec_id").alias("centroid_id"),
+                F.col("embedding").alias("centroid_vec"),
             )
-            drop_table_and_location(spark, assign_name)
-            similarity.ivf_assign_with_centroids(
-                emb, spark.table(cents_name)
-            ).write.mode("overwrite").saveAsTable(assign_name)
-            _IVF_ARTIFACTS_STAGED[key] = fingerprint
+            .write.mode("overwrite")
+            .saveAsTable(cents_name)
+        )
+        drop_table_and_location(spark, assign_name)
+        similarity.ivf_assign_with_centroids(
+            emb, spark.table(cents_name)
+        ).write.mode("overwrite").saveAsTable(assign_name)
+        return cents_name, assign_name
+
+    artifacts.get_or_build(
+        "ivf_artifacts", spark, sf_dir, build, sources=(emb,)
+    )
     return spark.table(cents_name), spark.table(assign_name)
 
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_example_spark import artifacts
 from etl_example_spark.functions.numeric import as_scaled_long
 from etl_example_spark.plans.registry import register
 from etl_example_spark.sources.loaders import load_table
@@ -2065,10 +2066,6 @@ def q76_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: bucketed staging (session id, sf_dir) pairs already materialized
-_BUCKETED_STAGED: set[tuple[int, str]] = set()
-
-
 def _stage_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Get-or-create the bucketed lineitem/orders twins for q77 — the
     local analog of maintaining bucketed fact tables in the warehouse so
@@ -2082,26 +2079,28 @@ def _stage_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     slug = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     li_name = f"q77_lineitem_bkt_{slug}"
     ord_name = f"q77_orders_bkt_{slug}"
-    key = (id(spark), sf_dir)
-    if key in _BUCKETED_STAGED:
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+
+    def build() -> tuple[str, str]:
+        write_bucketed_table(
+            lineitem.select(
+                "l_orderkey",
+                F.round(F.col("l_extendedprice") * 100)
+                .cast("long")
+                .alias("price_cents"),
+            ),
+            li_name, ["l_orderkey"], 8, sort_by=["l_orderkey"],
+        )
+        write_bucketed_table(
+            orders.select("o_orderkey", "o_orderpriority"),
+            ord_name, ["o_orderkey"], 8, sort_by=["o_orderkey"],
+        )
         return li_name, ord_name
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.round(F.col("l_extendedprice") * 100)
-        .cast("long")
-        .alias("price_cents"),
+
+    return artifacts.get_or_build(
+        "q77_twins", spark, sf_dir, build, sources=(lineitem, orders)
     )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    write_bucketed_table(
-        lineitem, li_name, ["l_orderkey"], 8, sort_by=["l_orderkey"],
-    )
-    write_bucketed_table(
-        orders, ord_name, ["o_orderkey"], 8, sort_by=["o_orderkey"],
-    )
-    _BUCKETED_STAGED.add(key)
-    return li_name, ord_name
 
 
 @register(

@@ -21,22 +21,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_example_spark import artifacts
 from etl_example_spark.schemas import TESTDATA_TABLES
 
-# Warm-table cache: the engine's buffer pool. The reference's baseline
-# numbers are warm-server Postgres latencies (BASELINE.md) — the Spark
-# analog is tables pinned in the in-memory columnar store. Keyed by
-# (session id, sf_dir, table); populated explicitly via warm_tables().
-_WARM: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def warm_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    names: list[str] | None = None,
-    partitions: int | None = None,
+    spark: SparkSession, sf_dir: str, partitions: int | None = None
 ) -> None:
-    """Pin tables in memory, optionally repartitioned for parallel scans.
+    """Pin every testdata table in memory, optionally repartitioned for
+    parallel scans — the engine's buffer pool. The reference's baseline
+    numbers are warm-server Postgres latencies (BASELINE.md); the Spark
+    analog is tables pinned in the in-memory columnar store. The pinned
+    tables are one artifact per (session, sf_dir) in the artifact store,
+    which :func:`load_table` serves from until ``clear_staged_caches``.
 
     The testdata parquet files are single-row-group, so a cold scan is a
     single task no matter the cluster size; repartitioning the cached copy
@@ -50,8 +46,6 @@ def warm_tables(
     d83 1.36→0.83 s, d86 1.39→0.86 s, s49 0.98→0.39 s, d97 1.91→1.25 s
     at sf0.1). Dimensions stay unrepartitioned — they broadcast.
     """
-    from etl_example_spark.operators.dedup import _session_key
-
     # SPARK_GRAFT_COLD=1: skip the persist entirely — the cold-scan
     # control sweep (round-14, VERDICT r13 #5/#8: publishes the
     # warm-vs-cold gap so the warm-Postgres-parity claim BASELINE.md
@@ -62,22 +56,21 @@ def warm_tables(
     if os.environ.get("SPARK_GRAFT_COLD"):
         return
 
-    for name in names or TESTDATA_TABLES:
-        # _session_key, not id(spark): a GC'd session's address can be
-        # reused, which would silently skip warming the NEW session
-        # (cold single-partition scans) while pinning the dead one's
-        # DataFrames forever
-        key = (_session_key(spark), sf_dir, name)
-        if key in _WARM:
-            continue
-        df = load_table(spark, sf_dir, name)
-        if partitions and name in (
-            "lineitem", "orders", "events", "documents", "embeddings",
-        ):
-            df = df.repartition(partitions)
-        df = df.persist()
-        df.count()
-        _WARM[key] = df
+    def build() -> dict[str, DataFrame]:
+        warm = {}
+        for name in TESTDATA_TABLES:
+            df = _read_table(spark, sf_dir, name)
+            if partitions and name in (
+                "lineitem", "orders", "events", "documents", "embeddings",
+            ):
+                df = df.repartition(partitions)
+            warm[name] = df.persist()
+            warm[name].count()
+        return warm
+
+    # no sources: a read of a persisted plan is served from the cache
+    # and lists no files, so the snapshot could not stay equal
+    artifacts.get_or_build("warm", spark, sf_dir, build)
 
 
 def repair_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -117,11 +110,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     :func:`repair_event_ts`), the same derive-don't-mutate pattern as
     operators/curation.py.
     """
-    from etl_example_spark.operators.dedup import _session_key
+    warm = artifacts.get("warm", spark, sf_dir)
+    return warm[name] if warm else _read_table(spark, sf_dir, name)
 
-    warm = _WARM.get((_session_key(spark), sf_dir, name))
-    if warm is not None:
-        return warm
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # nanosAsLong=true is set by session.get_spark so a NANOS file

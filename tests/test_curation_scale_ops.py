@@ -6,8 +6,11 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from etl_example_spark import artifacts
+from etl_example_spark.operators import dedup, text
 from etl_example_spark.operators.dedup import (
     bloom_build,
     bloom_positions,
@@ -21,6 +24,8 @@ from etl_example_spark.operators.sampling import (
     shard_assign,
 )
 from etl_example_spark.operators.text import unigram_rarity
+from etl_example_spark.plans import llm_ops, relational
+from etl_example_spark.sources import loaders
 from etl_example_spark.sources.writers import write_training_shards
 
 
@@ -935,27 +940,90 @@ class TestBigramLogprobVocabAlignment:
         assert got[1] == want
 
 
+@pytest.fixture(scope="module")
+def staged_inputs(spark, sf_dir, tmp_path_factory):
+    """Two of each input the artifact kinds stage from: sf_dir copies
+    (the catalog stagers and warm tables key by directory) and small
+    corpora (the checkpoint kinds key by plan)."""
+    import shutil
+
+    root = tmp_path_factory.mktemp("staged")
+    dirs = [str(root / f"sf{k}") for k in range(2)]
+    for d in dirs:
+        shutil.copytree(sf_dir, d)
+    return {
+        "dirs": dirs,
+        "docs": [
+            _docs(spark, [(1, f"race {k} alpha beta gamma delta")])
+            for k in range(2)
+        ],
+        "queries": spark.createDataFrame(
+            [(1, "alpha")], "query_id int, term string"
+        ),
+    }
+
+
+def _by_dir(kind, stage):
+    """Run a catalog/warm stager over sf copy ``k`` and return what the
+    store holds for it (the table names, or the warm tables)."""
+
+    def call(spark, inputs, k):
+        stage(spark, inputs["dirs"][k])
+        return artifacts.get(kind, spark, inputs["dirs"][k])
+
+    return call
+
+
+#: one call per artifact kind: (spark, staged_inputs, key 0 or 1) ->
+#: the artifact the store served for that key
+STAGERS = {
+    "shingles": lambda spark, inputs, k: dedup.staged_shingles(
+        inputs["docs"][k]
+    ),
+    "hashed_index": lambda spark, inputs, k: dedup.staged_shingles(
+        inputs["docs"][k]
+    ).hashed_index,
+    "signatures": lambda spark, inputs, k: dedup.staged_shingles(
+        inputs["docs"][k]
+    ).signatures(4),
+    "spans": lambda spark, inputs, k: dedup.staged_span_occurrences(
+        inputs["docs"][k], span_tokens=3
+    ),
+    "bm25_tf": lambda spark, inputs, k: text._staged_bm25_tf(
+        inputs["docs"][k], inputs["queries"], "text", "doc_id"
+    ),
+    "bm25_bucketed": _by_dir("bm25_bucketed", llm_ops._stage_bm25_bucketed),
+    "ivf_artifacts": _by_dir("ivf_artifacts", llm_ops._stage_ivf_artifacts),
+    "q77_twins": _by_dir("q77_twins", relational._stage_bucketed),
+    "warm": _by_dir("warm", loaders.warm_tables),
+}
+
+
 class TestStagedSpanFileSnapshot:
     def test_overwritten_parquet_is_cache_miss(self, spark, tmp_path):
         """ADVICE r8 #4 regression: overwriting the source parquet
         in-session must MISS the staged-span LRU (the semantic plan hash
         is path-keyed, not byte-keyed), so d80-family queries never
         serve occurrence data scanned from the old bytes."""
+        import shutil
+
         from etl_example_spark.operators.dedup import (
             staged_span_occurrences,
         )
 
         path = str(tmp_path / "docs.parquet")
-        _docs(spark, [(1, "one two three four")]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
+        backup = str(tmp_path / "backup.parquet")
+        _docs(spark, [(1, "one two three four")]).coalesce(1).write.parquet(
+            backup
+        )
+        shutil.copytree(backup, path, copy_function=shutil.copy2)
         occ1 = staged_span_occurrences(
             spark.read.parquet(path), span_tokens=3
         )
         n1 = occ1.count()
         assert n1 == 2  # 4 tokens, two 3-token windows
 
-        # overwrite with a LONGER corpus (different size => different key)
+        # overwrite with a LONGER corpus (different size => rebuilt)
         _docs(
             spark, [(1, "one two three four five six seven eight")]
         ).coalesce(1).write.mode("overwrite").parquet(path)
@@ -964,54 +1032,71 @@ class TestStagedSpanFileSnapshot:
         )
         assert occ2.count() == 6  # 8 tokens, six windows
         # and the first artifact was not clobbered in place
-        assert n1 == 2
+        assert occ1.count() == 2
 
-    def test_clear_staged_caches_hook(self, spark):
-        from etl_example_spark.operators import dedup
+        # revert to the first bytes (sizes and mtimes preserved)
+        shutil.rmtree(path)
+        shutil.copytree(backup, path, copy_function=shutil.copy2)
+        occ3 = staged_span_occurrences(
+            spark.read.parquet(path), span_tokens=3
+        )
+        assert occ3.count() == 2
 
-        df = _docs(spark, [(1, "alpha beta gamma delta")])
-        dedup.staged_span_occurrences(df, span_tokens=3)
-        dedup.staged_shingles(df)
-        assert dedup._STAGED_SPANS or dedup._STAGED
+    def test_clear_staged_caches_hook(self, spark, staged_inputs):
+        """The hook empties the artifact store for every kind, and a
+        cleared warm table is unpersisted and no longer served."""
+        for call in STAGERS.values():
+            call(spark, staged_inputs, 0)
+        assert set(artifacts._STORE) == set(STAGERS)
+        warm_dir = staged_inputs["dirs"][0]
+        warm = loaders.load_table(spark, warm_dir, "region")
+        assert warm.storageLevel.useMemory
         dedup.clear_staged_caches()
-        assert not dedup._STAGED_SPANS and not dedup._STAGED
+        assert artifacts._STORE == {}
+        assert not warm.storageLevel.useMemory
+        assert loaders.load_table(spark, warm_dir, "region") is not warm
 
-    def test_concurrent_callers_build_each_key_once(self, spark, monkeypatch):
-        """8 threads racing on 2 keys: each key's occurrence table is
-        built once, and every caller of a key gets that one artifact."""
+    @pytest.mark.parametrize("kind", sorted(STAGERS))
+    def test_concurrent_callers_build_each_key_once(
+        self, spark, staged_inputs, monkeypatch, kind
+    ):
+        """8 threads racing on 2 keys: each key's artifact is built
+        once, and every caller of a key gets that one artifact."""
         import sys
         import threading
         from concurrent.futures import ThreadPoolExecutor
 
-        from etl_example_spark.operators import dedup
+        builds: list[tuple] = []
+        get_or_build = artifacts.get_or_build
 
-        builds: list[str] = []
-        build = dedup._span_occurrences
+        def counting(kind, spark, params, build, sources=()):
+            def counted():
+                builds.append((kind, params))
+                return build()
 
-        def counting_build(df, *args, **kwargs):
-            builds.append(df.first().text)
-            return build(df, *args, **kwargs)
+            return get_or_build(kind, spark, params, counted, sources)
 
-        monkeypatch.setattr(dedup, "_span_occurrences", counting_build)
-        texts = ["race alpha beta gamma delta", "race epsilon zeta eta theta"]
-        frames = [_docs(spark, [(1, t)]) for t in texts]
+        monkeypatch.setattr(artifacts, "get_or_build", counting)
         barrier = threading.Barrier(8, timeout=60)
 
         def call(i):
             barrier.wait()
-            return dedup.staged_span_occurrences(frames[i % 2], span_tokens=3)
+            return STAGERS[kind](spark, staged_inputs, i % 2)
 
         switch = sys.getswitchinterval()
         sys.setswitchinterval(1e-6)
         try:
             with ThreadPoolExecutor(max_workers=8) as pool:
                 futures = [pool.submit(call, i) for i in range(8)]
-                got = [f.result(timeout=120) for f in futures]
+                got = [f.result(timeout=300) for f in futures]
         finally:
             sys.setswitchinterval(switch)
-        assert sorted(builds) == sorted(texts)
+            artifacts.clear()
+        assert len(builds) == len(set(builds)), builds
+        assert sum(k == kind for k, _ in builds) == 2, builds
         for i in range(2):
-            assert all(occ is got[i] for occ in got[i::2])
+            assert got[i] is not None
+            assert all(a is got[i] for a in got[i::2])
 
 
 class TestIvfDegenerateVectors:

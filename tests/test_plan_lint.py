@@ -267,45 +267,37 @@ def test_rank_consuming_plans_build_without_input_jobs(spark, sf_dir):
         )
 
 
-def test_filters_push_into_parquet_scans(spark, sf_dir):
+def test_filters_push_into_parquet_scans(spark, sf_dir, monkeypatch):
     """Filters on base columns must reach the vectorized parquet reader
     (PushedFilters), not run post-scan only — spot-checked on queries
     that filter base tables directly (cold plans: the warm-table cache
     would replace the file scan entirely)."""
-    from etl_example_spark.sources import loaders
+    from etl_example_spark import artifacts
 
-    saved = dict(loaders._WARM)
-    loaders._WARM.clear()
-    try:
-        checks = {
-            "q66_small_quantity_revenue": r"PushedFilters: \[.*p_brand",
-            "q5_curation_filter": r"PushedFilters: \[.*\]",
-        }
-        for name, pattern in checks.items():
-            df = REGISTRY[name].spark_builder(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert re.search(pattern, plan), f"{name}: filter not pushed"
-    finally:
-        loaders._WARM.update(saved)
+    monkeypatch.setattr(artifacts, "_STORE", {})
+    checks = {
+        "q66_small_quantity_revenue": r"PushedFilters: \[.*p_brand",
+        "q5_curation_filter": r"PushedFilters: \[.*\]",
+    }
+    for name, pattern in checks.items():
+        df = REGISTRY[name].spark_builder(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(pattern, plan), f"{name}: filter not pushed"
 
 
-def test_scans_prune_columns(spark, sf_dir):
+def test_scans_prune_columns(spark, sf_dir, monkeypatch):
     """A 2-column projection must not read 11 columns: ReadSchema on the
     lineitem scan should contain only referenced fields."""
-    from etl_example_spark.sources import loaders
+    from etl_example_spark import artifacts
 
-    saved = dict(loaders._WARM)
-    loaders._WARM.clear()
-    try:
-        df = REGISTRY["q1_weekly_units"].spark_builder(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
-        assert m, "no parquet ReadSchema found"
-        read_cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
-        assert "l_extendedprice" not in read_cols, read_cols
-        assert len(read_cols) <= 4, read_cols
-    finally:
-        loaders._WARM.update(saved)
+    monkeypatch.setattr(artifacts, "_STORE", {})
+    df = REGISTRY["q1_weekly_units"].spark_builder(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
+    assert m, "no parquet ReadSchema found"
+    read_cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
+    assert "l_extendedprice" not in read_cols, read_cols
+    assert len(read_cols) <= 4, read_cols
 
 
 @pytest.mark.parametrize(

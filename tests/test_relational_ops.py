@@ -97,3 +97,37 @@ class TestBucketJoin:
         assert not re.search(
             r"Exchange hashpartitioning\([lo]_orderkey", below_join
         ), below_join[:800]
+
+    def test_lineitem_overwrite_and_revert_restage(self, spark, sf_dir, tmp_path):
+        """The bucketed twins are valid for the bytes they were built
+        from: overwriting lineitem in-session re-stages them, and so
+        does reverting it to bytes seen before (one snapshot per
+        (session, sf_dir), like the bucketed BM25 index)."""
+        import shutil
+
+        from pyspark.sql import functions as F
+
+        from etl_example_spark.plans.registry import load_all
+
+        q77 = load_all()["q77_bucket_join"].spark_builder
+        sf = tmp_path / "sf_q77"
+        sf.mkdir()
+        lineitem = sf / "lineitem.parquet"
+        # the testdata tables are single parquet files; copy2 keeps
+        # their mtimes, as restoring a backup with mv would
+        backup = shutil.copy2(f"{sf_dir}/lineitem.parquet", tmp_path)
+        shutil.copy2(f"{sf_dir}/orders.parquet", sf)
+        shutil.copy2(backup, lineitem)
+        full = spark.read.parquet(backup)
+
+        def n_items():
+            return q77(spark, str(sf)).agg(F.sum("n_items")).first()[0]
+
+        assert n_items() == full.count()
+        lineitem.unlink()
+        few = full.filter(F.col("l_orderkey") % 3 == 0)
+        few.coalesce(1).write.parquet(str(lineitem))
+        assert n_items() == few.count(), "stale twins served after overwrite"
+        shutil.rmtree(lineitem)
+        shutil.copy2(backup, lineitem)
+        assert n_items() == full.count(), "stale twins served after revert"

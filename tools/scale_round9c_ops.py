@@ -71,7 +71,7 @@ def main() -> None:
         print(f"x{n}: {docs.count():,} docs", flush=True)
 
         # s51 staging cost alone (the once-per-(corpus, terms) artifact)
-        text._STAGED_BM25.clear()
+        dedup.clear_staged_caches()
         t0 = time.monotonic()
         text._staged_bm25_tf(docs, queries, "text", "doc_id")
         print(
