@@ -130,7 +130,9 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     int/float/str/bool/None/nested-list values) and a DDL ``schema``
     string ("name type, name type, ...). A value type outside the
     supported subset falls back to ``createDataFrame`` — identical
-    rows, just without the zero-job fast path."""
+    rows, just without the zero-job fast path. ``rows`` may be any
+    iterable; it is read once."""
+    rows = list(rows)
     try:
         return _local_df(spark, rows, schema)
     except TypeError:

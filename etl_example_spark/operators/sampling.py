@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_example_spark.artifacts import materialize_if_derived
 from etl_example_spark.functions.localrel import local_df
 
 #: hex prefix width compared against the threshold; 8 hex digits = 32
@@ -126,7 +127,7 @@ def temperature_sample(
     Rows with a NULL stratum are dropped (a NULL never equals a stratum
     value in the filter) — normalize unknowns to a sentinel stratum
     upstream if they must be sampled."""
-    df = _materialize_if_derived(df)
+    df = materialize_if_derived(df)
     counts = {
         r[0]: r[1]
         for r in df.groupBy(stratum_col).count().collect()
@@ -135,56 +136,6 @@ def temperature_sample(
     return stratified_sample(
         df, rates=rates, stratum_col=stratum_col, id_col=id_col
     )
-
-
-#: Optimized-logical-plan node classes whose re-execution is
-#: non-trivial (shuffles, row expansion, multi-input scans).
-_EXPENSIVE_NODES = frozenset(
-    {"Join", "Aggregate", "Window", "Generate", "Expand", "Union"}
-)
-
-
-def _has_expensive_node(jplan) -> bool:
-    """Walk the optimized logical plan's node CLASSES (round-14, ADVICE
-    r13: the previous rendered-string substring match could
-    false-positive on attribute names containing 'Join'/'Window'/...,
-    and missed Expand/Union). Subquery expressions are not traversed —
-    a scalar-subquery-only derived input falls back to the two-pass
-    shape, which only costs the second (cheap) pass."""
-    if jplan.getClass().getSimpleName() in _EXPENSIVE_NODES:
-        return True
-    children = jplan.children()
-    for i in range(children.size()):
-        if _has_expensive_node(children.apply(i)):
-            return True
-    return False
-
-
-def _materialize_if_derived(df: DataFrame) -> DataFrame:
-    """The count-then-filter samplers execute their input TWICE — once
-    for the stratum counts (driver rates), once in the returned plan.
-    Over a plain (projected/filtered) table scan that is the optimal
-    shape: the counts pass is a column-pruned scan, the cheapest op
-    there is, and materializing the corpus to re-read it would cost
-    more than the second scan. Over a DERIVED input (the d53/d97
-    curation chains: dedup joins, LSH, aggregates) the second execution
-    repeats all of that work, so materialize once and let both passes
-    read the checkpoint (round-13, guide §5 compute-once; re-adjudicated
-    round-14 GC-stabilized interleaved A/B — materialize-once wins d97
-    1.85s vs 2.36s and d53 1.46s vs 2.03s, tools/opt_r14_ab.py). The
-    heuristic is the plan itself: any Join/Aggregate/Window/Generate/
-    Expand/Union node upstream means re-execution is non-trivial.
-
-    Caveat (documented per ADVICE r13): ``localCheckpoint`` trades
-    fault-tolerance for speed — the checkpointed blocks are
-    executor-local and unreplicated, so on a real cluster an executor
-    loss mid-query fails the job instead of recomputing lineage; it
-    also pins the sampler's input, blocking further filter pushdown
-    into the source. Both are the right trade for a chain that would
-    otherwise execute twice."""
-    if _has_expensive_node(df._jdf.queryExecution().optimizedPlan()):
-        return df.localCheckpoint(eager=True)
-    return df
 
 
 def mixture_rates(
@@ -233,7 +184,7 @@ def mixture_sample(
     the hash-threshold filter — same two-narrow-pass, zero-shuffle shape
     as ``temperature_sample``, but with an explicit mixture spec instead
     of the count^alpha rule."""
-    df = _materialize_if_derived(df)
+    df = materialize_if_derived(df)
     counts = {
         r[0]: r[1]
         for r in df.groupBy(stratum_col).count().collect()

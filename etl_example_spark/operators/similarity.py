@@ -916,6 +916,15 @@ def _subvectors(df: DataFrame, m: int, dim: int, id_col: str, vec_col: str):
     )
 
 
+def _probe_dim(vectors) -> int:
+    """Length of the first non-NULL vector in ``vectors``; a probe of
+    only NULL vectors has no dimension to infer."""
+    v = next((v for v in vectors if v is not None), None)
+    if v is None:
+        raise ValueError("no non-null vectors to infer dim from")
+    return len(v)
+
+
 def pq_train(
     embeddings: DataFrame,
     m: int = 8,
@@ -994,7 +1003,7 @@ def pq_train(
         return embeddings.sparkSession.createDataFrame(
             [], "j int, code int, cv array<double>"
         )
-    dim = len(next((r["_v"] for r in seed_rows if r["_v"] is not None), None))
+    dim = _probe_dim(r["_v"] for r in seed_rows)
     sub = _subvectors(normalized, m, dim, id_col, vec_col).localCheckpoint(
         eager=True
     )
@@ -1471,16 +1480,7 @@ def ivfpq_topk(
             return embeddings.sparkSession.createDataFrame(
                 [], "query_id long, neighbor_id long, cosine_sim double"
             )
-        dim = len(
-            next(
-                (
-                    r["centroid_vec"]
-                    for r in cent_rows
-                    if r["centroid_vec"] is not None
-                ),
-                None,
-            )
-        )
+        dim = _probe_dim(r["centroid_vec"] for r in cent_rows)
         id_type = normalized.schema[id_col].dataType.simpleString()
         centroids = local_df(
             embeddings.sparkSession,
@@ -1751,16 +1751,7 @@ def ivfpq_residual_topk(
             return embeddings.sparkSession.createDataFrame(
                 [], "query_id long, neighbor_id long, cosine_sim double"
             )
-        dim = len(
-            next(
-                (
-                    r["centroid_vec"]
-                    for r in cent_rows
-                    if r["centroid_vec"] is not None
-                ),
-                None,
-            )
-        )
+        dim = _probe_dim(r["centroid_vec"] for r in cent_rows)
         id_type = normalized.schema[id_col].dataType.simpleString()
         centroids = local_df(
             spark,

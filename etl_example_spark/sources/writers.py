@@ -434,9 +434,14 @@ def write_training_shards(
     ``order_col`` within each shard so a training run streams documents
     in a stable, auditable order.
 
-    ``repartition(shard_col)`` puts each shard's rows in one task, and
-    ``sortWithinPartitions`` orders them — hash-partitioned write, no
-    global sort. At 100 TB, raise the number of distinct shard values
+    ``repartition(defaultParallelism, shard_col)`` hashes each shard's
+    rows into one task, so every shard lands in exactly one file, and
+    the shards spread over every core. The count is fixed on purpose:
+    AQE coalesces a bare ``repartition(shard_col)`` of a small corpus
+    into ONE task that writes every shard serially, but never coalesces
+    an explicit partition count. ``sortWithinPartitions`` orders each
+    task's rows by shard, then ``order_col`` — hash-partitioned write,
+    no global sort. At 100 TB, raise the number of distinct shard values
     (``sampling.shard_assign(hex_digits=...)`` scales 16x per digit) so
     shards stay executor-sized; shard assignment is uniform by
     construction, so no shard is a straggler.
@@ -445,16 +450,18 @@ def write_training_shards(
     counted from the WRITTEN dataset — one execution of the input plan
     (the write), and a manifest that by construction agrees with what
     landed on disk rather than with a second computation of the input.
+    The read-back takes ``df``'s schema instead of inferring one from
+    the files, which would cost a job of its own.
     """
     spark = df.sparkSession
     (
-        df.repartition(F.col(shard_col))
+        df.repartition(spark.sparkContext.defaultParallelism, F.col(shard_col))
         .sortWithinPartitions(shard_col, order_col)
         .write.mode("overwrite")
         .partitionBy(shard_col)
         .parquet(dest)
     )
+    written = spark.read.schema(df.schema).parquet(dest)
     return {
-        str(r[0]): r[1]
-        for r in spark.read.parquet(dest).groupBy(shard_col).count().collect()
+        str(r[0]): r[1] for r in written.groupBy(shard_col).count().collect()
     }

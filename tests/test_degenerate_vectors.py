@@ -92,3 +92,27 @@ def test_every_embeddings_query_survives_zero_vectors(
     assert not failures, f"{len(failures)} queries diverge:\n" + "\n".join(
         failures
     )
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda emb, sim: sim.pq_train(emb, m=2, n_codes=2, iters=1),
+        lambda emb, sim: sim.ivfpq_topk(emb, k=2, n_centroids=2, m=2),
+        lambda emb, sim: sim.ivfpq_residual_topk(
+            emb, k=2, n_centroids=2, m=2
+        ),
+    ],
+    ids=["pq_train", "ivfpq_topk", "ivfpq_residual_topk"],
+)
+def test_all_null_vectors_raise_a_named_error(spark, call):
+    """The dimension probe of an all-NULL corpus has nothing to read:
+    it must say so instead of raising a bare TypeError from len(None)."""
+    from etl_example_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [(1, None), (2, None), (3, None)],
+        "vec_id bigint, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="no non-null vectors to infer dim"):
+        call(emb, similarity).collect()

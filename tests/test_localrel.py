@@ -145,3 +145,23 @@ def test_unsupported_scalar_falls_back_to_createDataFrame(spark):
     rows = [(datetime.date(2020, 1, 2),)]
     df = local_df(spark, rows, "d date")
     assert [r["d"].isoformat() for r in df.collect()] == ["2020-01-02"]
+
+
+def test_generator_rows_are_read_once_before_the_fallback(spark):
+    """A generator is consumed by the render pass; the createDataFrame
+    fallback must still see every row. The date in the last row forces
+    the fallback only after the first rows have rendered."""
+    import datetime
+
+    values = [datetime.date(2020, 1, d) for d in (1, 2, 3)]
+
+    def rows():
+        for i, d in enumerate(values):
+            yield (i, d if i == len(values) - 1 else None)
+
+    df = local_df(spark, rows(), "i int, d date")
+    assert sorted((r["i"], r["d"]) for r in df.collect()) == [
+        (0, None),
+        (1, None),
+        (2, values[-1]),
+    ]

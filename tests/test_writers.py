@@ -5,14 +5,21 @@ the actual physical plan, not assumed."""
 
 from __future__ import annotations
 
+import os
+import random
+import re
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from etl_example_spark.operators.sampling import shard_assign
 from etl_example_spark.sources.loaders import load_table
 from etl_example_spark.sources.writers import (
     write_bucketed_table,
     write_partitioned,
+    write_training_shards,
 )
 
 
@@ -451,3 +458,63 @@ class TestSchemaEvolution:
         assert rows[2] == (4, None)  # old file: evolved column is NULL
         assert rows[7] == (14, "new")
         assert len(rows) == 10
+
+
+class TestTrainingShards:
+    """write_training_shards: one file per shard, rows in ``doc_id``
+    order inside it, a manifest that matches the written rows, and the
+    shards written by more than one task."""
+
+    N_DOCS = 300
+
+    @pytest.fixture
+    def written(self, spark, tmp_path):
+        ids = list(range(self.N_DOCS))
+        random.Random(7).shuffle(ids)
+        docs = spark.createDataFrame(
+            [(i, f"doc {i}") for i in ids], "doc_id bigint, text string"
+        ).coalesce(1)
+        dest = str(tmp_path / "shards")
+        manifest = write_training_shards(shard_assign(docs), dest)
+        files = {
+            d.split("=", 1)[1]: [
+                os.path.join(dest, d, f)
+                for f in os.listdir(os.path.join(dest, d))
+                if not f.startswith(("_", "."))
+            ]
+            for d in os.listdir(dest)
+            if d.startswith("shard=")
+        }
+        return dest, manifest, files
+
+    def test_each_shard_is_one_file(self, written):
+        _, _, files = written
+        assert len(files) == 16
+        assert {s: len(fs) for s, fs in files.items()} == {s: 1 for s in files}
+
+    def test_rows_in_each_shard_are_ordered_by_doc_id(self, written):
+        _, _, files = written
+        for (path,) in files.values():
+            ids = pq.read_table(path, columns=["doc_id"])["doc_id"].to_pylist()
+            assert ids == sorted(ids)
+
+    def test_manifest_equals_rows_read_back(self, spark, written):
+        dest, manifest, _ = written
+        back = spark.read.parquet(dest)
+        assert manifest == {
+            str(r["shard"]): r["count"]
+            for r in back.groupBy("shard").count().collect()
+        }
+        assert sum(manifest.values()) == back.count() == self.N_DOCS
+
+    def test_shards_are_written_by_more_than_one_task(self, spark, written):
+        """A data file's name carries the index of the task that wrote
+        it; a write coalesced into one task names every file part-00000."""
+        if spark.sparkContext.defaultParallelism < 2:
+            pytest.skip("needs defaultParallelism > 1")
+        _, _, files = written
+        tasks = {
+            re.match(r"part-(\d+)-", os.path.basename(path)).group(1)
+            for (path,) in files.values()
+        }
+        assert len(tasks) > 1

@@ -73,7 +73,7 @@ def main() -> None:
     if which == "d97":
         from etl_example_spark.operators import sampling
 
-        real = sampling._materialize_if_derived
+        real = sampling.materialize_if_derived
 
         def run(q):
             df = qs[q].spark_builder(spark, SF)
@@ -82,15 +82,15 @@ def main() -> None:
         for q in ("d97_web_curation_v2", "d53_curation_pipeline"):
             print(f"== {q}")
             def with_mat():
-                sampling._materialize_if_derived = real
+                sampling.materialize_if_derived = real
                 run(q)
 
             def without_mat():
-                sampling._materialize_if_derived = lambda df: df
+                sampling.materialize_if_derived = lambda df: df
                 run(q)
 
             ab("materialize-once", with_mat, "no-materialize", without_mat)
-            sampling._materialize_if_derived = real
+            sampling.materialize_if_derived = real
 
     elif which == "d83":
         from etl_example_spark.operators import text as T
