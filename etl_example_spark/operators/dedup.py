@@ -166,9 +166,10 @@ def _restore_parallelism(df: DataFrame) -> DataFrame:
     projection — a single task regardless of cluster size. At 100 TB
     the source already has thousands of splits and this is a no-op.
 
-    Pass a checkpoint or a plain scan: their partition count costs no
-    job, while on a derived (AQE) plan ``getNumPartitions`` executes the
-    plan's shuffle stages just to count the partitions."""
+    On a checkpoint or a plain scan the partition count costs no job;
+    on a derived (AQE) plan ``getNumPartitions`` executes the plan's
+    shuffle stages just to count the partitions, so
+    :func:`staged_shingles` passes its checkpoint."""
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
@@ -186,8 +187,13 @@ def staged_shingles(
     latencies; Postgres likewise serves repeat queries from warm buffers).
     A derived input is checkpointed first (kept as ``rows``), so the
     build executes its plan once.
+
+    The key also carries the input's column names: ``rows`` serves the
+    input under its own names, and plan canonicalization erases alias
+    names, so two inputs that differ only in how a column is aliased
+    share a semantic hash.
     """
-    params = artifacts.plan_params(df, n, text_col, id_col)
+    params = artifacts.plan_params(df, n, text_col, id_col, tuple(df.columns))
 
     def build() -> _StagedShingles:
         rows = artifacts.materialize_if_derived(df)
@@ -1840,10 +1846,7 @@ def staged_span_occurrences(
         df.sparkSession,
         artifacts.plan_params(df, span_tokens, text_col, id_col),
         lambda: _span_occurrences(
-            _restore_parallelism(artifacts.materialize_if_derived(df)),
-            text_col,
-            id_col,
-            span_tokens,
+            _restore_parallelism(df), text_col, id_col, span_tokens
         ).localCheckpoint(eager=True),
         sources=(df,),
     )

@@ -87,13 +87,8 @@ class _Checkpointed(Exception):
     pass
 
 
-@pytest.mark.parametrize(
-    "stage",
-    [dedup.staged_shingles, dedup.staged_span_occurrences],
-    ids=["staged_shingles", "staged_span_occurrences"],
-)
 def test_staged_build_over_derived_input_runs_no_job_before_checkpoint(
-    spark, sf_dir, tmp_path, monkeypatch, stage
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """The build's first execution of a derived input is its
     checkpoint: counting the partitions of the lazy (AQE) plan first
@@ -106,7 +101,7 @@ def test_staged_build_over_derived_input_runs_no_job_before_checkpoint(
     monkeypatch.setattr(type(deduped), "localCheckpoint", stop)
     with launched_jobs(spark) as jobs:
         with pytest.raises(_Checkpointed):
-            stage(deduped)
+            dedup.staged_shingles(deduped)
     assert not jobs, f"{len(jobs)} jobs ran before the first checkpoint"
 
 
@@ -137,3 +132,42 @@ def test_unkeyable_input_is_staged_once(spark, sf_dir, tmp_path, monkeypatch):
     unkeyed = sorted(map(tuple, curate_corpus(docs).collect()))
     assert len(builds) == 1
     assert unkeyed == keyed
+
+
+def test_aliased_inputs_get_their_own_rows(spark, sf_dir, tmp_path):
+    """Inputs that differ only in column aliases share a semantic plan
+    hash; a store hit must not hand one its rows under the other's
+    column names. The swapped pair would sample the wrong column."""
+    docs = _fresh_docs(spark, sf_dir, tmp_path)
+    variants = {
+        "l1": docs.select("doc_id", "text", F.col("lang").alias("l1")),
+        "l2": docs.select("doc_id", "text", F.col("lang").alias("l2")),
+        "lang": docs.select(
+            "doc_id",
+            "text",
+            F.col("lang").alias("lang"),
+            F.col("source").alias("src"),
+        ),
+        "src": docs.select(
+            "doc_id",
+            "text",
+            F.col("lang").alias("src"),
+            F.col("source").alias("lang"),
+        ),
+    }
+    assert variants["l1"].semanticHash() == variants["l2"].semanticHash()
+    assert variants["lang"].semanticHash() == variants["src"].semanticHash()
+
+    def curated(stratum):
+        out = curate_corpus(variants[stratum], stratum_col=stratum)
+        return out.columns, sorted(map(tuple, out.collect()))
+
+    # the second of each pair is the one a store hit could serve wrongly
+    expected = {}
+    for stratum in ("l2", "src"):
+        artifacts.clear()
+        expected[stratum] = curated(stratum)
+    artifacts.clear()
+    for first, second in (("l1", "l2"), ("lang", "src")):
+        curated(first)
+        assert curated(second) == expected[second], second
