@@ -53,6 +53,14 @@ _INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
 _SQL_RENDER_MAX = 32 << 20
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, for SQL text built
+    over column names: a reserved word, a dot or a backtick stays part
+    of the name (a backtick inside it is doubled, the SQL escape
+    rule)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _sql_scalar(v, typ: str) -> str:
     if v is None:
         return f"CAST(NULL AS {typ})"
@@ -112,7 +120,14 @@ def _sql_value(v, typ: str) -> str:
         # same nullability the previous outer CAST pinned (narrower
         # element types were observed to corrupt NULL handling in
         # derived expressions). FAILFAST turns any malformed render
-        # into a loud error instead of a silent PERMISSIVE null. The
+        # into a loud error instead of a silent PERMISSIVE null. That
+        # includes an element of the wrong type, such as a bool in an
+        # array<double>: the inline table is evaluated at analysis, so
+        # local_df itself raises (AnalysisException INVALID_INLINE_TABLE
+        # over MALFORMED_RECORD_IN_PARSING) and does not fall back.
+        # createDataFrame rejects the same row (PySparkTypeError) with
+        # its default verifySchema, and nulls the element silently
+        # without it (pinned by tests/test_localrel.py). The
         # optimizer still constant-folds the projection into a true
         # LocalRelation (zero-job collect, task-free broadcast —
         # asserted by tests/test_localrel.py).
@@ -150,10 +165,8 @@ def _local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     # genuinely non-null literals, and no consumer compares it.
     # column names are backtick-quoted (round-14, ADVICE r13): a
     # reserved-word or otherwise non-identifier name must not break the
-    # render (backticks inside a name are doubled, the DDL-escape rule)
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
+    # render
+    q = sql_ident
     if not rows:
         sel = ", ".join(
             f"CAST(NULL AS {typ}) AS {q(name)}" for name, typ in cols

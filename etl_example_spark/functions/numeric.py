@@ -38,26 +38,3 @@ def exact_sum(col: Column | str, scale: int = 2) -> Column:
     return (F.sum(as_scaled_long(col, scale)).cast("double") / (10**scale)).alias(
         "exact_sum"
     )
-
-
-def exact_avg(col: Column | str, scale: int = 2) -> Column:
-    """Order-independent AVG: exact integer sum, one double division chain."""
-    return (
-        F.sum(as_scaled_long(col, scale)).cast("double") / (10**scale) / F.count("*")
-    )
-
-
-def sql_exact_sum(expr: str, scale: int = 2) -> str:
-    """DuckDB-side twin of :func:`exact_sum` (same expression shape so the
-    float ops are bit-identical)."""
-    return (
-        f"CAST(SUM(CAST(ROUND({expr} * {10**scale}) AS BIGINT)) AS DOUBLE)"
-        f" / {10**scale}"
-    )
-
-
-def sql_exact_avg(expr: str, scale: int = 2) -> str:
-    return (
-        f"CAST(SUM(CAST(ROUND({expr} * {10**scale}) AS BIGINT)) AS DOUBLE)"
-        f" / {10**scale} / COUNT(*)"
-    )

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_example_spark.functions.localrel import local_df
+from etl_example_spark.functions.localrel import local_df, sql_ident
 
 
 def _as_double(col: Column | str) -> Column:
@@ -57,7 +57,7 @@ def _cosine_sql(a: str, b: str) -> str:
     term-for-term the Python-builder form (same casts, same fold seeds,
     same operand order), so values are bit-identical; one F.expr parse
     instead of ~10 py4j lambda-builder round trips (round-14)."""
-    da, db = f"CAST(`{a}` AS array<double>)", f"CAST(`{b}` AS array<double>)"
+    da, db = (f"CAST({sql_ident(c)} AS array<double>)" for c in (a, b))
     return (
         f"try_divide(aggregate(zip_with({da}, {db}, (x, y) -> x * y), "
         "0D, (acc, x) -> acc + x), "
@@ -91,12 +91,13 @@ def _cosine_sims(vec_col: str, cvs_col: str = "cvs") -> Column:
     similarity values are bit-identical; SQL-text lambdas, not
     Python-lambda builders, for the variable-collision reason
     :func:`_sq_l2` documents."""
+    vec = f"CAST({sql_ident(vec_col)} AS array<double>)"
     return F.expr(
-        f"transform({cvs_col}, cv -> round(try_divide("
-        f"aggregate(zip_with(CAST({vec_col} AS array<double>), "
+        f"transform({sql_ident(cvs_col)}, cv -> round(try_divide("
+        f"aggregate(zip_with({vec}, "
         "CAST(cv AS array<double>), (x, y) -> x * y), "
         "0D, (acc, x) -> acc + x), "
-        f"sqrt(aggregate(transform(CAST({vec_col} AS array<double>), "
+        f"sqrt(aggregate(transform({vec}, "
         "x -> x * x), 0D, (acc, x) -> acc + x)) * "
         "sqrt(aggregate(transform(CAST(cv AS array<double>), "
         "x -> x * x), 0D, (acc, x) -> acc + x))), 6))"
@@ -824,7 +825,7 @@ def l2_normalize(df: DataFrame, vec_col: str) -> DataFrame:
             vec_col,
             F.when(F.col("_nrm") == 0, _as_double(vec_col)).otherwise(
                 F.expr(
-                    f"transform(cast({vec_col} AS array<double>), "
+                    f"transform(cast({sql_ident(vec_col)} AS array<double>), "
                     "x -> x / _nrm)"
                 )
             ),
@@ -900,8 +901,8 @@ def _residual(vec_col: str, cent_col: str = "centroid_vec") -> Column:
     replaces, as one parsed expression (round-14 py4j-chatter cut);
     identical arithmetic (same casts, same subtraction order)."""
     return F.expr(
-        f"zip_with(CAST(`{vec_col}` AS array<double>), "
-        f"CAST(`{cent_col}` AS array<double>), (x, y) -> x - y)"
+        f"zip_with(CAST({sql_ident(vec_col)} AS array<double>), "
+        f"CAST({sql_ident(cent_col)} AS array<double>), (x, y) -> x - y)"
     )
 
 
@@ -909,7 +910,7 @@ def _subvectors(df: DataFrame, m: int, dim: int, id_col: str, vec_col: str):
     """(id, j, sv): the m equal slices of each (unit-normalized) vector."""
     sub_d = dim // m
     slices = F.expr(
-        _slices_sql(f"CAST(`{vec_col}` AS array<double>)", m, sub_d)
+        _slices_sql(f"CAST({sql_ident(vec_col)} AS array<double>)", m, sub_d)
     )
     return df.select(
         F.col(id_col), F.posexplode(slices).alias("j", "sv")
@@ -1288,7 +1289,7 @@ def pq_encode_vectors(
         F.col(id_col),
         F.posexplode(
             F.expr(
-                _slices_sql(f"CAST(`{vec_col}` AS array<double>)", m, sub_d)
+                _slices_sql(f"CAST({sql_ident(vec_col)} AS array<double>)", m, sub_d)
             )
         ).alias("j", "sv"),
     )

@@ -12,6 +12,12 @@ configuration:
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   (DuckDB timestamps are UTC-naive).
 - Arrow enabled for any pandas interchange (vectorized UDF boundary).
+- The driver JVM starts from a dynamic class-data-sharing (CDS) archive
+  of the classes an earlier driver loaded, which about halves the JVM's
+  start; the first launch for a JDK and a set of Spark jars writes the
+  archive when its JVM exits (:func:`_cds_launch`). Where that cannot
+  be done exactly (a conf dir with real config, a longer class path, a
+  caller's own launch options) the JVM starts as it always did.
 
 :func:`run_concurrently` is the one way engine code issues independent
 Spark actions at once.
@@ -19,12 +25,22 @@ Spark actions at once.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import shlex
+import shutil
+import stat
+import struct
 import tempfile
-from collections.abc import Callable, Hashable
+import uuid
+from collections.abc import Callable, Hashable, Mapping
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from typing import Any
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 from pyspark.util import inheritable_thread_target
 
@@ -86,10 +102,282 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    launch = _plan_launch(extra_conf or {})
+    if launch is None:
+        spark = builder.getOrCreate()
+    else:
+        builder = builder.config("spark.driver.defaultJavaOptions", launch.java_options)
+        spark = _launch(builder, launch)
     spark.sparkContext.setLogLevel("WARN")
     configure_session(spark)
     return spark
+
+
+#: JDK 17's dynamic CDS archive header (``cds.h``): magic 0xf00baba8 and
+#: archive version 11, then 7 region records of 72 bytes from offset 16,
+#: each with its file offset and used bytes at +24 and +40. The JVM
+#: writes the header after all of its regions, so a killed dump has no
+#: magic; a file cut short after that makes the JVM die of SIGBUS while
+#: it maps it, not fall back, so the regions must lie inside the file.
+_CDS_HEADER = struct.Struct("<Iii")
+_CDS_MAGIC, _CDS_VERSION = 0xF00BABA8, 11
+_CDS_REGIONS, _CDS_REGION_AT, _CDS_REGION_SIZE = 7, 16, 72
+_CDS_REGION_SPAN = struct.Struct("<QxxxxxxxxQ")
+#: with these, neither the JVM that writes an archive nor one that maps
+#: (or refuses) it prints a CDS line; -Xshare stays at its default
+#: ``auto``, so an archive the JVM cannot map gives a normal start
+_CDS_QUIET = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+#: environment that puts more than Spark's conf dir and jars on the
+#: driver's class path, or launches it some other way; an archive only
+#: maps under the class path it was written with, so any of these means
+#: a normal start
+_CDS_SKIP_ENV = (
+    "SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR",
+    "SPARK_PREPEND_CLASSES", "SPARK_TESTING", "PYSPARK_SUBMIT_ARGS",
+    "PYSPARK_GATEWAY_PORT",
+)
+#: a caller's conf that sets these keeps the launch it asked for
+_CDS_SKIP_CONF = ("spark.driver.defaultJavaOptions", "spark.driver.extraClassPath")
+#: ``driver-<key>.jsa`` is the published archive of a key;
+#: ``driver-<key>.<token>.part`` is one launch's dump and
+#: ``driver-<key>.<token>.pid`` the pid of the JVM that writes it
+_CDS_FILE = re.compile(
+    r"driver-(?P<key>[0-9a-f]+)(?:\.(?P<token>[0-9a-f]+))?\.(?P<ext>jsa|part|pid)"
+)
+
+
+@dataclass(frozen=True)
+class _JvmLaunch:
+    """How :func:`get_spark` launches the driver JVM: its
+    ``spark.driver.defaultJavaOptions``, the environment it is launched
+    with, and, when it dumps an archive, where its pid is recorded."""
+
+    java_options: str
+    env: dict[str, str]
+    pid_file: str | None = None
+
+
+def _plan_launch(extra_conf: Mapping[str, str]) -> _JvmLaunch | None:
+    """The CDS launch for this process, or None for a normal one: this
+    process already has its JVM, the caller set its own launch options,
+    or :func:`_cds_launch` declines."""
+    if SparkContext._gateway is not None or any(k in extra_conf for k in _CDS_SKIP_CONF):
+        return None
+    try:
+        return _cds_launch(os.environ, _find_spark_home())
+    except OSError:
+        return None
+
+
+def _launch(builder: SparkSession.Builder, launch: _JvmLaunch) -> SparkSession:
+    """``builder.getOrCreate()`` with ``launch.env`` set for the launch
+    only; then record the pid of the JVM that dumps an archive, which
+    ``spark-submit`` ``exec``s, so the gateway's process is the JVM."""
+    saved = {k: os.environ.get(k) for k in launch.env}
+    os.environ.update(launch.env)
+    try:
+        return builder.getOrCreate()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                os.environ.pop(k, None)
+            else:
+                os.environ[k] = v
+        if launch.pid_file is not None:
+            proc = getattr(SparkContext._gateway, "proc", None)
+            if proc is not None:
+                with open(launch.pid_file, "w") as fh:
+                    fh.write(str(proc.pid))
+            else:  # no JVM came up, so no dump will finish
+                _remove(launch.pid_file[: -len(".pid")] + ".part")
+
+
+def _cds_launch(environ: Mapping[str, str], spark_home: str) -> _JvmLaunch | None:
+    """Decide how the driver JVM uses its class-data-sharing archive.
+
+    The archive lives in ``${XDG_CACHE_HOME:-~/.cache}/etl_example_spark``
+    (mode 0700), keyed by the JDK and the listing of Spark's jars. With a
+    published archive for the key, the JVM maps it; without one, it dumps
+    to a per-launch ``.part`` file when it exits, which a later start
+    publishes once that JVM is gone. Returns None (a normal start) when
+    the launch's class path could differ from the archive's.
+
+    A JVM refuses to dump while a non-empty directory is on its class
+    path, and Spark's launcher always puts its conf dir there. So the
+    launch points ``SPARK_CONF_DIR`` at an empty directory of its own,
+    but only when the configured one is missing or holds nothing but
+    ``*.template`` files: Spark then reads nothing from either, and the
+    two launches are the same.
+    """
+    if any(environ.get(v) for v in _CDS_SKIP_ENV):
+        return None
+    conf_dir = environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.exists(conf_dir) and not all(
+        name.endswith(".template") for name in os.listdir(conf_dir)
+    ):
+        return None
+    key = _cds_key(_java_home(environ), spark_home)
+    cache = os.path.join(_cache_root(environ), "etl_example_spark")
+    empty_conf = os.path.join(cache, "conf")
+    if key is None or not (_private_dir(cache) and _private_dir(empty_conf)):
+        return None
+    if os.listdir(empty_conf):
+        return None
+    _publish(cache, key)
+    env = {"SPARK_CONF_DIR": empty_conf}
+    archive = os.path.join(cache, f"driver-{key}.jsa")
+    if _usable(archive):
+        return _JvmLaunch(shlex.quote(f"-XX:SharedArchiveFile={archive}") + " " + _CDS_QUIET, env)
+    dump = os.path.join(cache, f"driver-{key}.{uuid.uuid4().hex}")
+    return _JvmLaunch(
+        shlex.quote(f"-XX:ArchiveClassesAtExit={dump}.part") + " " + _CDS_QUIET, env, f"{dump}.pid"
+    )
+
+
+def _java_home(environ: Mapping[str, str]) -> str | None:
+    """The JDK Spark's launcher runs the driver with: ``JAVA_HOME``, else
+    the ``java`` on ``PATH``."""
+    if environ.get("JAVA_HOME"):
+        return environ["JAVA_HOME"]
+    java = shutil.which("java", path=environ.get("PATH"))
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
+
+
+def _cache_root(environ: Mapping[str, str]) -> str:
+    root = environ.get("XDG_CACHE_HOME", "")
+    if os.path.isabs(root):
+        return root
+    return os.path.join(environ.get("HOME") or os.path.expanduser("~"), ".cache")
+
+
+def _cds_key(java_home: str | None, spark_home: str) -> str | None:
+    """A name for this JDK and these Spark jars: the path, size and mtime
+    of the JDK's ``lib/modules`` and of every jar. None when either is
+    missing, or the JDK is not 17, the archive layout :func:`_usable`
+    reads."""
+    if java_home is None:
+        return None
+    digest = hashlib.sha256()
+    modules = os.path.realpath(os.path.join(java_home, "lib", "modules"))
+    jars = os.path.realpath(os.path.join(spark_home, "jars"))
+    try:
+        with open(os.path.join(java_home, "release")) as fh:
+            if not re.search(r'^JAVA_VERSION="17[."]', fh.read(), re.M):
+                return None
+        st = os.stat(modules)
+        digest.update(f"{modules} {st.st_size} {st.st_mtime_ns}\n{jars}\n".encode())
+        for entry in sorted(os.scandir(jars), key=lambda e: e.name):
+            st = entry.stat()
+            digest.update(f"{entry.name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    except OSError:
+        return None
+    return digest.hexdigest()[:16]
+
+
+def _private_dir(path: str) -> bool:
+    """Make ``path`` (mode 0700) if missing; True when it is a directory
+    of this user that no one else can write to."""
+    os.makedirs(path, mode=0o700, exist_ok=True)
+    st = os.lstat(path)
+    return stat.S_ISDIR(st.st_mode) and _ours(st)
+
+
+def _ours(st: os.stat_result) -> bool:
+    return st.st_uid == os.getuid() and not st.st_mode & 0o022
+
+
+def _usable(path: str) -> bool:
+    """A regular file this user owns and no one else can write, whose
+    header and regions the JVM finished writing. The JVM loads class
+    data from it."""
+    try:
+        st = os.lstat(path)
+        if not (stat.S_ISREG(st.st_mode) and _ours(st)):
+            return False
+        with open(path, "rb") as fh:
+            head = fh.read(_CDS_REGION_AT + _CDS_REGIONS * _CDS_REGION_SIZE)
+    except OSError:
+        return False
+    if len(head) < _CDS_REGION_AT + _CDS_REGIONS * _CDS_REGION_SIZE:
+        return False
+    magic, _crc, version = _CDS_HEADER.unpack_from(head)
+    if (magic, version) != (_CDS_MAGIC, _CDS_VERSION):
+        return False
+    for i in range(_CDS_REGIONS):
+        at = _CDS_REGION_AT + i * _CDS_REGION_SIZE + 24
+        offset, used = _CDS_REGION_SPAN.unpack_from(head, at)
+        if used and offset + used > st.st_size:
+            return False
+    return True
+
+
+def _publish(cache: str, key: str) -> None:
+    """Promote a finished dump of ``key`` to its archive, and on a new
+    archive drop the files of other keys.
+
+    A dump is finished once the JVM that writes it is gone: the JVM
+    writes it while it exits, which can end after its Python process
+    did. A dump whose JVM still runs is left alone; one with no recorded
+    JVM, one not needed and one not whole are deleted."""
+    archive = os.path.join(cache, f"driver-{key}.jsa")
+    tokens = set()
+    for name in os.listdir(cache):
+        m = _CDS_FILE.fullmatch(name)
+        if m is not None and m["key"] == key and m["token"]:
+            tokens.add(m["token"])
+    for token in sorted(tokens):
+        dump = os.path.join(cache, f"driver-{key}.{token}")
+        if _writing(dump + ".pid"):
+            continue
+        recorded = _read_pid(dump + ".pid") is not None
+        if recorded and not _usable(archive) and _usable(dump + ".part"):
+            os.replace(dump + ".part", archive)
+            _drop_other_keys(cache, key)
+        else:
+            _remove(dump + ".part")
+        _remove(dump + ".pid")
+
+
+def _drop_other_keys(cache: str, key: str) -> None:
+    """Delete the archives and the finished dumps of every other key;
+    each archive is 135-205 MB."""
+    for name in os.listdir(cache):
+        m = _CDS_FILE.fullmatch(name)
+        if m is None or m["key"] == key:
+            continue
+        pid_file = os.path.join(cache, f"driver-{m['key']}.{m['token']}.pid")
+        if m["ext"] != "jsa" and _writing(pid_file):
+            continue
+        _remove(os.path.join(cache, name))
+
+
+def _read_pid(pid_file: str) -> int | None:
+    try:
+        with open(pid_file) as fh:
+            return int(fh.read())
+    except (OSError, ValueError):
+        return None
+
+
+def _writing(pid_file: str) -> bool:
+    """True while the JVM named by ``pid_file`` still runs."""
+    pid = _read_pid(pid_file)
+    if pid is None:
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, under another user
+        return True
+    return True
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 
 
 def configure_session(spark: SparkSession) -> SparkSession:

@@ -21,6 +21,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -66,11 +67,23 @@ def _symlink_once(target: str, link: str) -> None:
     """Race-safe idempotent symlink: the staging dir is keyed by the
     SOURCE path, so concurrent creators (round-14: the thread-pooled
     test sweeps run streaming queries in parallel) always want the same
-    link — losing the exists/create race is success, not an error."""
+    link — losing the exists/create race is success, not an error.
+
+    A link already there that points elsewhere (a dangling one left by
+    an older layout, say) is replaced atomically: a fresh link under a
+    temp name, renamed over it, so a concurrent reader sees the old link
+    or the new one, never none."""
     try:
         os.symlink(target, link)
     except FileExistsError:
-        pass
+        try:
+            if os.readlink(link) == target:
+                return
+        except OSError:  # not a symlink
+            pass
+        tmp = f"{link}.{uuid.uuid4().hex}.tmp"
+        os.symlink(target, tmp)
+        os.replace(tmp, link)
 
 
 def read_events_stream(

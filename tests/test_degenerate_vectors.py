@@ -116,3 +116,28 @@ def test_all_null_vectors_raise_a_named_error(spark, call):
     )
     with pytest.raises(ValueError, match="no non-null vectors to infer dim"):
         call(emb, similarity).collect()
+
+
+@pytest.mark.parametrize(
+    "a, b", [("a`b", "c``d"), ("a.b", "c.d")], ids=["backtick", "dot"]
+)
+def test_cosine_over_odd_column_names_equals_the_column_form(spark, a, b):
+    """``cosine`` over two column NAMES renders SQL text; a backtick or
+    a dot in a name must stay part of the name there, as it does for
+    the Column-builder form over the quoted columns."""
+    from pyspark.sql import functions as F
+
+    from etl_example_spark.functions.localrel import sql_ident
+    from etl_example_spark.operators.similarity import cosine
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0], [2.0, 1.0]), ([0.0, 0.0], [1.0, 1.0]), ([3.0, 4.0], None)],
+        f"{sql_ident(a)} array<double>, {sql_ident(b)} array<double>",
+    )
+    assert df.columns == [a, b]
+    by_name = df.select(cosine(a, b).alias("s")).collect()
+    by_column = df.select(
+        cosine(F.col(sql_ident(a)), F.col(sql_ident(b))).alias("s")
+    ).collect()
+    assert by_name == by_column
+    assert by_name[0]["s"] is not None and by_name[1]["s"] is None

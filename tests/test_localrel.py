@@ -165,3 +165,21 @@ def test_generator_rows_are_read_once_before_the_fallback(spark):
         (1, None),
         (2, values[-1]),
     ]
+
+
+def test_mismatched_array_element_raises_instead_of_coercing(spark):
+    """An array cell renders as ``from_json(..., FAILFAST)``: a bool in
+    an ``array<double>`` makes the build raise (the inline table is
+    evaluated at analysis), not fall back to ``createDataFrame``, which
+    rejects the row as well with its default ``verifySchema`` and would
+    null the element silently without it."""
+    from pyspark.errors import AnalysisException, PySparkTypeError
+
+    rows = [(1, [True, 2.0])]
+    schema = "i int, v array<double>"
+    with pytest.raises(AnalysisException, match="INVALID_INLINE_TABLE"):
+        local_df(spark, rows, schema)
+    with pytest.raises(PySparkTypeError):
+        spark.createDataFrame(rows, schema)
+    unchecked = spark.createDataFrame(rows, schema, verifySchema=False)
+    assert unchecked.collect()[0]["v"] == [None, 2.0]

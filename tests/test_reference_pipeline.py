@@ -176,3 +176,31 @@ def test_show_results_presentation(result):
     assert set(shown) == set(REFERENCE_SQL)
     for text in shown.values():
         assert "unidades" in text  # header present, 10-row table renders
+
+
+def test_iso_date_fallback_casts_only_iso_dates(spark):
+    """SURVEY D2/P3/P4/F5: the reference's 4-statement CASE/regex repair
+    casts a value only when it matches ``^\\d{4}-\\d{2}-\\d{2}$``, else NULL."""
+    import datetime
+
+    from etl_example_spark.operators.curation import iso_date_fallback
+
+    values = ["2024-03-01", "2024/03/01", "2024-3-1", None, "x2024-03-01", "2024-03-01 "]
+    df = spark.createDataFrame([(v,) for v in values], "daily string")
+    out = iso_date_fallback(df, "daily")
+    assert dict(out.dtypes)["daily"] == "date"
+    assert [r["daily"] for r in out.collect()] == [datetime.date(2024, 3, 1)] + [None] * 5
+
+
+def test_get_existing_table_returns_the_first_existing_candidate(spark):
+    """The reference's ``to_regclass`` probe: the first candidate the
+    catalog knows; an invalid identifier probes as absent."""
+    from etl_example_spark.operators.curation import get_existing_table
+
+    spark.range(1).createOrReplaceTempView("probe_sellout_b")
+    try:
+        names = ["probe_sellout_a", "not a name!", "probe_sellout_b"]
+        assert get_existing_table(spark, names) == "probe_sellout_b"
+        assert get_existing_table(spark, names[:2]) is None
+    finally:
+        spark.catalog.dropTempView("probe_sellout_b")

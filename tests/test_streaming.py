@@ -725,3 +725,27 @@ def test_stream_index_compaction_collapses_files(spark, sf_dir):
             .select("vec_id", "j", "code").collect())
     )
     assert after_rows == before_rows
+
+
+def test_staging_relinks_a_stale_events_link(tmp_path, monkeypatch):
+    """A staging link left pointing at a missing file (an older layout,
+    a moved testdata dir) is replaced, not kept because it exists."""
+    import tempfile
+
+    from etl_example_spark.streaming import sources
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = sf / "events.parquet"
+    events.write_bytes(b"PAR1")
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    staging = sources._staging_dir(str(sf))
+    link = os.path.join(staging, "events.parquet")
+    os.remove(link)
+    os.symlink(str(tmp_path / "gone" / "events.parquet"), link)
+    assert not os.path.exists(link)
+
+    assert sources._staging_dir(str(sf)) == staging
+    assert os.path.realpath(link) == str(events.resolve())
+    assert os.listdir(staging) == ["events.parquet"]
