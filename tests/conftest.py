@@ -10,6 +10,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from etl_example_spark import session  # noqa: E402
 from etl_example_spark.session import get_spark  # noqa: E402
 
 #: tests that replay the reference's own dataset; they skip as a module
@@ -26,8 +27,45 @@ SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_SF_CORRECTNESS", "/root/testdata/sf
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark(app_name="etl_example_spark-tests")
+    spark = get_spark(app_name="etl_example_spark-tests", extra_conf=_launch_conf())
     yield spark
+
+
+def _launch_conf() -> dict[str, str]:
+    """The suite's JVM maps a published class-data-sharing archive but
+    never writes one: a JVM that dumps at exit runs this ~40-minute
+    suite 5-10% slower, and would leave a 200 MB archive of every class
+    the suite loaded. Setting the launch options the caller's way gives
+    the JVM a normal start (``session._CDS_SKIP_CONF``)."""
+    launch = session._plan_launch({})
+    if launch is not None and launch.pid_file is not None:
+        return {"spark.driver.defaultJavaOptions": ""}
+    return {}
+
+
+@pytest.fixture(scope="session")
+def batch_plans(spark, sf_dir) -> dict[str, str | Exception]:
+    """name -> executed-plan text of every registered batch query over
+    ``sf_dir``, or the exception its build raised. Built once per
+    session, thread-pooled (tests/sweep.py): the plan lints and the
+    cartesian sweep in test_sources read the same ~250 plans."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from etl_example_spark.plans.registry import load_all
+    from tests.sweep import WORKERS
+
+    registry = load_all()
+
+    def build(name):
+        try:
+            df = registry[name].spark_builder(spark, sf_dir)
+            return name, df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        except Exception as exc:  # noqa: BLE001 — each reader reports it
+            return name, exc
+
+    batch = [n for n, q in registry.items() if q.category != "streaming"]
+    with ThreadPoolExecutor(max_workers=WORKERS) as pool:
+        return dict(pool.map(build, batch))
 
 
 @pytest.fixture(scope="session")

@@ -83,19 +83,13 @@ _BATCH = [n for n in REGISTRY if n not in _STREAMING]
 
 
 @pytest.fixture(scope="module")
-def plans(spark, sf_dir):
-    """Thread-pooled (tests/sweep.py): ~250 independent plan builds,
-    previously ~2.7 sequential minutes of this suite's wall."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from tests.sweep import WORKERS
-
-    def build(name):
-        df = REGISTRY[name].spark_builder(spark, sf_dir)
-        return name, df._jdf.queryExecution().executedPlan().toString()
-
-    with ThreadPoolExecutor(max_workers=WORKERS) as pool:
-        return dict(pool.map(build, _BATCH))
+def plans(batch_plans):
+    """The session's batch plans (conftest ``batch_plans``); a query
+    whose build raised fails every lint."""
+    for plan in batch_plans.values():
+        if isinstance(plan, Exception):
+            raise plan
+    return batch_plans
 
 
 @pytest.mark.parametrize("name", _BATCH)

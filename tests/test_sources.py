@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_example_spark.plans.registry import load_all
 from etl_example_spark.sources.loaders import load_csv, load_json, load_table
 
 SUBSET_SCHEMA = T.StructType(
@@ -63,26 +62,18 @@ def test_json_schema_projection_prunes_unknown_fields(spark, tmp_path):
     assert rows == [(1, "a")] or [tuple(r) for r in rows] == [(1, "a")]
 
 
-def test_no_registered_query_plans_a_cartesian_product(spark, sf_dir):
+def test_no_registered_query_plans_a_cartesian_product(batch_plans):
     """Every batch query must avoid CartesianProduct — non-equi pair
     generation is allowed only via broadcast nested-loop (small side
-    bounded), bucket joins, or candidate pre-filters. Thread-pooled
-    (tests/sweep.py): ~250 independent plan builds, previously ~4
-    sequential minutes of this suite's wall."""
-    from tests.sweep import parallel_sweep
-
-    registry = load_all()
-
-    def check(name):
-        q = registry[name]
-        df = q.spark_builder(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-        if "CartesianProduct" in plan:
-            return f"{name} plans a cartesian:\n{plan}"
-        return None
-
-    batch = [n for n, q in registry.items() if q.category != "streaming"]
-    failures = parallel_sweep(check, batch)
+    bounded), bucket joins, or candidate pre-filters. Reads the plans
+    the session built once (conftest ``batch_plans``), which the plan
+    lints read too."""
+    failures = []
+    for name, plan in batch_plans.items():
+        if isinstance(plan, Exception):
+            failures.append(f"{name}: {type(plan).__name__}: {plan}")
+        elif "CartesianProduct" in plan:
+            failures.append(f"{name} plans a cartesian:\n{plan}")
     assert not failures, "\n".join(failures)
 
 
