@@ -15,6 +15,9 @@ WORKDIR /app
 COPY pyproject.toml README.md /app/
 COPY etl_example_spark/ /app/etl_example_spark/
 RUN pip install --no-cache-dir /app
+# the driver JVM's class-data-sharing archive, written once here so every
+# container's session starts from it (README "Cold start")
+RUN python -c "from etl_example_spark.session import write_class_archive; print(write_class_archive())"
 
 # local[*] inside the container; on a cluster, spark-submit this image's
 # package with --master yarn/k8s instead and the same code runs unchanged

@@ -13,11 +13,11 @@ configuration:
   (DuckDB timestamps are UTC-naive).
 - Arrow enabled for any pandas interchange (vectorized UDF boundary).
 - The driver JVM starts from a dynamic class-data-sharing (CDS) archive
-  of the classes an earlier driver loaded, which about halves the JVM's
-  start; the first launch for a JDK and a set of Spark jars writes the
-  archive when its JVM exits (:func:`_cds_launch`). Where that cannot
-  be done exactly (a conf dir with real config, a longer class path, a
-  caller's own launch options) the JVM starts as it always did.
+  of the classes an earlier driver loaded, when one exists, which about
+  halves the JVM's start. :func:`write_class_archive` writes it once per
+  install; ordinary launches never do. Without an archive, or where one
+  cannot be mapped exactly (a conf dir with real config, a longer class
+  path, a caller's own launch options), the JVM starts as it always did.
 
 :func:`run_concurrently` is the one way engine code issues independent
 Spark actions at once.
@@ -34,8 +34,9 @@ import stat
 import struct
 import tempfile
 import uuid
-from collections.abc import Callable, Hashable, Mapping
+from collections.abc import Callable, Hashable, Iterator, Mapping
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any
 
@@ -102,15 +103,69 @@ def get_spark(
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    launch = _plan_launch(extra_conf or {})
-    if launch is None:
+    archive = _mapped_archive(extra_conf or {})
+    if archive is None:
         spark = builder.getOrCreate()
     else:
-        builder = builder.config("spark.driver.defaultJavaOptions", launch.java_options)
-        spark = _launch(builder, launch)
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions", _java_options("SharedArchiveFile", archive.path)
+        )
+        with _launch_env(archive.env):
+            spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     configure_session(spark)
     return spark
+
+
+def write_class_archive() -> str | None:
+    """Write the driver JVM's class-data-sharing archive for this JDK and
+    these Spark jars; :func:`get_spark` maps it from then on.
+
+    Run it once per install (the Docker image does, README "Cold
+    start"), in a process that has not started its JVM: it starts one,
+    runs a few small jobs, and waits while the JVM writes the archive as
+    it exits (about 50 s in all on 4 vCPUs). Ordinary launches never
+    write one, as a JVM that does starts slower and runs its jobs
+    slower. Returns the archive's path, or None when launches here start
+    without one.
+    """
+    if SparkContext._gateway is not None:
+        raise RuntimeError("write_class_archive() must start this process's first JVM")
+    archive = _class_archive(os.environ, _find_spark_home(), create=True)
+    if archive is None:
+        return None
+    if _usable(archive.path):
+        return archive.path
+    part = f"{archive.path[: -len('.jsa')]}.{uuid.uuid4().hex}.part"
+    with _launch_env(archive.env):
+        spark = get_spark(
+            app_name="etl_example_spark-class-archive",
+            extra_conf={
+                "spark.driver.defaultJavaOptions": _java_options("ArchiveClassesAtExit", part)
+            },
+        )
+    proc = SparkContext._gateway.proc
+    try:
+        _load_common_classes(spark)
+    finally:
+        spark.stop()
+        SparkContext._gateway.shutdown()
+        proc.stdin.close()  # the JVM exits on EOF, and dumps while it exits
+        proc.wait(timeout=600)
+        SparkContext._gateway = SparkContext._jvm = None
+    return _publish(archive, part)
+
+
+def _load_common_classes(spark: SparkSession) -> None:
+    """Small jobs through the paths every run takes: SQL planning,
+    codegen, a shuffle, a join, and a parquet write and read."""
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, "t")
+        spark.range(1000).selectExpr("id % 7 AS k", "CAST(id AS STRING) AS s").write.parquet(path)
+        df = spark.read.parquet(path)
+        df.groupBy("k").count().join(df, "k").orderBy("s").limit(5).collect()
+        df.createOrReplaceTempView("class_archive_t")
+        spark.sql("SELECT k, max(s) FROM class_archive_t GROUP BY k").collect()
 
 
 #: JDK 17's dynamic CDS archive header (``cds.h``): magic 0xf00baba8 and
@@ -138,69 +193,59 @@ _CDS_SKIP_ENV = (
 )
 #: a caller's conf that sets these keeps the launch it asked for
 _CDS_SKIP_CONF = ("spark.driver.defaultJavaOptions", "spark.driver.extraClassPath")
-#: ``driver-<key>.jsa`` is the published archive of a key;
-#: ``driver-<key>.<token>.part`` is one launch's dump and
-#: ``driver-<key>.<token>.pid`` the pid of the JVM that writes it
-_CDS_FILE = re.compile(
-    r"driver-(?P<key>[0-9a-f]+)(?:\.(?P<token>[0-9a-f]+))?\.(?P<ext>jsa|part|pid)"
-)
 
 
 @dataclass(frozen=True)
-class _JvmLaunch:
-    """How :func:`get_spark` launches the driver JVM: its
-    ``spark.driver.defaultJavaOptions``, the environment it is launched
-    with, and, when it dumps an archive, where its pid is recorded."""
+class _ClassArchive:
+    """Where the driver JVM's class-data-sharing archive for this JDK and
+    these Spark jars lives (``driver-<key>.jsa``), and the environment a
+    launch that writes or maps it runs with."""
 
-    java_options: str
+    path: str
     env: dict[str, str]
-    pid_file: str | None = None
 
 
-def _plan_launch(extra_conf: Mapping[str, str]) -> _JvmLaunch | None:
-    """The CDS launch for this process, or None for a normal one: this
-    process already has its JVM, the caller set its own launch options,
-    or :func:`_cds_launch` declines."""
+def _mapped_archive(extra_conf: Mapping[str, str]) -> _ClassArchive | None:
+    """The archive :func:`get_spark`'s launch maps, or None for a normal
+    start: this process already has its JVM, the caller set its own
+    launch options, or there is no whole archive to map."""
     if SparkContext._gateway is not None or any(k in extra_conf for k in _CDS_SKIP_CONF):
         return None
     try:
-        return _cds_launch(os.environ, _find_spark_home())
+        archive = _class_archive(os.environ, _find_spark_home())
     except OSError:
         return None
+    return archive if archive is not None and _usable(archive.path) else None
 
 
-def _launch(builder: SparkSession.Builder, launch: _JvmLaunch) -> SparkSession:
-    """``builder.getOrCreate()`` with ``launch.env`` set for the launch
-    only; then record the pid of the JVM that dumps an archive, which
-    ``spark-submit`` ``exec``s, so the gateway's process is the JVM."""
-    saved = {k: os.environ.get(k) for k in launch.env}
-    os.environ.update(launch.env)
+def _java_options(flag: str, path: str) -> str:
+    return shlex.quote(f"-XX:{flag}={path}") + " " + _CDS_QUIET
+
+
+@contextmanager
+def _launch_env(env: Mapping[str, str]) -> Iterator[None]:
+    """Set ``env`` for a JVM launch only."""
+    saved = {k: os.environ.get(k) for k in env}
+    os.environ.update(env)
     try:
-        return builder.getOrCreate()
+        yield
     finally:
         for k, v in saved.items():
             if v is None:
                 os.environ.pop(k, None)
             else:
                 os.environ[k] = v
-        if launch.pid_file is not None:
-            proc = getattr(SparkContext._gateway, "proc", None)
-            if proc is not None:
-                with open(launch.pid_file, "w") as fh:
-                    fh.write(str(proc.pid))
-            else:  # no JVM came up, so no dump will finish
-                _remove(launch.pid_file[: -len(".pid")] + ".part")
 
 
-def _cds_launch(environ: Mapping[str, str], spark_home: str) -> _JvmLaunch | None:
-    """Decide how the driver JVM uses its class-data-sharing archive.
+def _class_archive(
+    environ: Mapping[str, str], spark_home: str, create: bool = False
+) -> _ClassArchive | None:
+    """This launch's class-data-sharing archive, or None when the
+    launch's class path could differ from the archive's.
 
     The archive lives in ``${XDG_CACHE_HOME:-~/.cache}/etl_example_spark``
-    (mode 0700), keyed by the JDK and the listing of Spark's jars. With a
-    published archive for the key, the JVM maps it; without one, it dumps
-    to a per-launch ``.part`` file when it exits, which a later start
-    publishes once that JVM is gone. Returns None (a normal start) when
-    the launch's class path could differ from the archive's.
+    (mode 0700; ``create`` makes it), keyed by the JDK and the listing of
+    Spark's jars.
 
     A JVM refuses to dump while a non-empty directory is on its class
     path, and Spark's launcher always puts its conf dir there. So the
@@ -219,19 +264,11 @@ def _cds_launch(environ: Mapping[str, str], spark_home: str) -> _JvmLaunch | Non
     key = _cds_key(_java_home(environ), spark_home)
     cache = os.path.join(_cache_root(environ), "etl_example_spark")
     empty_conf = os.path.join(cache, "conf")
-    if key is None or not (_private_dir(cache) and _private_dir(empty_conf)):
+    if key is None or not (_private_dir(cache, create) and _private_dir(empty_conf, create)):
         return None
     if os.listdir(empty_conf):
         return None
-    _publish(cache, key)
-    env = {"SPARK_CONF_DIR": empty_conf}
-    archive = os.path.join(cache, f"driver-{key}.jsa")
-    if _usable(archive):
-        return _JvmLaunch(shlex.quote(f"-XX:SharedArchiveFile={archive}") + " " + _CDS_QUIET, env)
-    dump = os.path.join(cache, f"driver-{key}.{uuid.uuid4().hex}")
-    return _JvmLaunch(
-        shlex.quote(f"-XX:ArchiveClassesAtExit={dump}.part") + " " + _CDS_QUIET, env, f"{dump}.pid"
-    )
+    return _ClassArchive(os.path.join(cache, f"driver-{key}.jsa"), {"SPARK_CONF_DIR": empty_conf})
 
 
 def _java_home(environ: Mapping[str, str]) -> str | None:
@@ -274,11 +311,15 @@ def _cds_key(java_home: str | None, spark_home: str) -> str | None:
     return digest.hexdigest()[:16]
 
 
-def _private_dir(path: str) -> bool:
-    """Make ``path`` (mode 0700) if missing; True when it is a directory
-    of this user that no one else can write to."""
-    os.makedirs(path, mode=0o700, exist_ok=True)
-    st = os.lstat(path)
+def _private_dir(path: str, create: bool) -> bool:
+    """True when ``path`` is a directory of this user that no one else
+    can write to; ``create`` makes it (mode 0700) if missing."""
+    if create:
+        os.makedirs(path, mode=0o700, exist_ok=True)
+    try:
+        st = os.lstat(path)
+    except FileNotFoundError:
+        return False
     return stat.S_ISDIR(st.st_mode) and _ours(st)
 
 
@@ -311,66 +352,20 @@ def _usable(path: str) -> bool:
     return True
 
 
-def _publish(cache: str, key: str) -> None:
-    """Promote a finished dump of ``key`` to its archive, and on a new
-    archive drop the files of other keys.
-
-    A dump is finished once the JVM that writes it is gone: the JVM
-    writes it while it exits, which can end after its Python process
-    did. A dump whose JVM still runs is left alone; one with no recorded
-    JVM, one not needed and one not whole are deleted."""
-    archive = os.path.join(cache, f"driver-{key}.jsa")
-    tokens = set()
-    for name in os.listdir(cache):
-        m = _CDS_FILE.fullmatch(name)
-        if m is not None and m["key"] == key and m["token"]:
-            tokens.add(m["token"])
-    for token in sorted(tokens):
-        dump = os.path.join(cache, f"driver-{key}.{token}")
-        if _writing(dump + ".pid"):
-            continue
-        recorded = _read_pid(dump + ".pid") is not None
-        if recorded and not _usable(archive) and _usable(dump + ".part"):
-            os.replace(dump + ".part", archive)
-            _drop_other_keys(cache, key)
-        else:
-            _remove(dump + ".part")
-        _remove(dump + ".pid")
-
-
-def _drop_other_keys(cache: str, key: str) -> None:
-    """Delete the archives and the finished dumps of every other key;
-    each archive is 135-205 MB."""
-    for name in os.listdir(cache):
-        m = _CDS_FILE.fullmatch(name)
-        if m is None or m["key"] == key:
-            continue
-        pid_file = os.path.join(cache, f"driver-{m['key']}.{m['token']}.pid")
-        if m["ext"] != "jsa" and _writing(pid_file):
-            continue
-        _remove(os.path.join(cache, name))
-
-
-def _read_pid(pid_file: str) -> int | None:
-    try:
-        with open(pid_file) as fh:
-            return int(fh.read())
-    except (OSError, ValueError):
+def _publish(archive: _ClassArchive, part: str) -> str | None:
+    """Rename a whole dump to its archive and delete every other
+    archive or dump in the cache (other keys', a killed writer's); each
+    is 135-205 MB. A dump that is not whole is deleted instead."""
+    if not _usable(part):
+        _remove(part)
         return None
-
-
-def _writing(pid_file: str) -> bool:
-    """True while the JVM named by ``pid_file`` still runs."""
-    pid = _read_pid(pid_file)
-    if pid is None:
-        return False
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:  # alive, under another user
-        return True
-    return True
+    os.replace(part, archive.path)
+    cache = os.path.dirname(archive.path)
+    for name in os.listdir(cache):
+        path = os.path.join(cache, name)
+        if name.startswith("driver-") and path != archive.path:
+            _remove(path)
+    return archive.path
 
 
 def _remove(path: str) -> None:

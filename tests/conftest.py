@@ -10,7 +10,6 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from etl_example_spark import session  # noqa: E402
 from etl_example_spark.session import get_spark  # noqa: E402
 
 #: tests that replay the reference's own dataset; they skip as a module
@@ -27,20 +26,8 @@ SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_SF_CORRECTNESS", "/root/testdata/sf
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark(app_name="etl_example_spark-tests", extra_conf=_launch_conf())
+    spark = get_spark(app_name="etl_example_spark-tests")
     yield spark
-
-
-def _launch_conf() -> dict[str, str]:
-    """The suite's JVM maps a published class-data-sharing archive but
-    never writes one: a JVM that dumps at exit runs this ~40-minute
-    suite 5-10% slower, and would leave a 200 MB archive of every class
-    the suite loaded. Setting the launch options the caller's way gives
-    the JVM a normal start (``session._CDS_SKIP_CONF``)."""
-    launch = session._plan_launch({})
-    if launch is not None and launch.pid_file is not None:
-        return {"spark.driver.defaultJavaOptions": ""}
-    return {}
 
 
 @pytest.fixture(scope="session")

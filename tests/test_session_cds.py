@@ -1,10 +1,10 @@
-"""The driver JVM's class-data-sharing archive (``session._cds_launch``).
+"""The driver JVM's class-data-sharing archive (``session._class_archive``).
 
-The unit tests drive the launch decision over a fake JDK, a fake Spark
-home and a cache dir under ``tmp_path``; no JVM starts. The subprocess
-test launches three real drivers against one fresh cache: the first
-writes the archive, the second maps it, and the third, over an archive
-cut short, still gets a working session."""
+The unit tests drive the launch decision and the publishing step over a
+fake JDK, a fake Spark home and a cache dir under ``tmp_path``; no JVM
+starts. The subprocess test launches three real drivers against one
+fresh cache: ``write_class_archive`` writes the archive, an ordinary
+start maps it, and a start over the archive cut short is a normal one."""
 
 from __future__ import annotations
 
@@ -13,11 +13,12 @@ import struct
 import subprocess
 import sys
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
 from etl_example_spark import session
-from etl_example_spark.session import _cds_launch
+from etl_example_spark.session import _class_archive, _publish
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -37,15 +38,10 @@ def _write(path: Path, data: bytes, mode: int = 0o444) -> Path:
     return path
 
 
-def _dead_pid() -> int:
-    proc = subprocess.Popen([sys.executable, "-c", ""])
-    proc.wait()
-    return proc.pid
-
-
 @pytest.fixture
-def box(tmp_path):
-    """(environ, spark_home, cache dir) over a fake JDK 17 and Spark."""
+def box(tmp_path, monkeypatch):
+    """(environ, spark_home, cache dir) over a fake JDK 17 and Spark;
+    ``get_spark``'s decision (:func:`_mapped`) sees the same."""
     jdk = tmp_path / "jdk"
     (jdk / "lib").mkdir(parents=True)
     (jdk / "lib" / "modules").write_bytes(b"modules")
@@ -56,56 +52,61 @@ def box(tmp_path):
     (spark_home / "conf").mkdir()
     (spark_home / "conf" / "spark-defaults.conf.template").write_text("# template\n")
     environ = {"JAVA_HOME": str(jdk), "XDG_CACHE_HOME": str(tmp_path / "xdg")}
+    for name in ("SPARK_CONF_DIR", *session._CDS_SKIP_ENV):
+        monkeypatch.delenv(name, raising=False)
+    for name, value in environ.items():
+        monkeypatch.setenv(name, value)
+    monkeypatch.setattr(session, "_find_spark_home", lambda: str(spark_home))
+    # as in a process that has not started its JVM
+    monkeypatch.setattr(session, "SparkContext", SimpleNamespace(_gateway=None))
     return environ, str(spark_home), tmp_path / "xdg" / "etl_example_spark"
 
 
-def _dump(launch) -> Path:
-    """The ``.part`` path a dump launch writes its archive to."""
-    assert launch.pid_file is not None
-    return Path(launch.pid_file[: -len(".pid")] + ".part")
+def _mapped() -> Path | None:
+    """The archive ``get_spark``'s launch maps."""
+    archive = session._mapped_archive({})
+    return None if archive is None else Path(archive.path)
 
 
 def test_conf_dir_with_real_config_launches_as_today(box):
     environ, spark_home, cache = box
     Path(spark_home, "conf", "spark-defaults.conf").write_text("spark.foo bar\n")
     before = dict(os.environ)
-    assert _cds_launch(environ, spark_home) is None
+    assert _class_archive(environ, spark_home, create=True) is None
     assert dict(os.environ) == before
     assert not cache.exists()
 
 
-def test_without_an_archive_the_jvm_dumps_to_a_temp_path(box):
+def test_an_ordinary_launch_without_an_archive_writes_nothing(box):
     environ, spark_home, cache = box
-    launch = _cds_launch(environ, spark_home)
-    part = _dump(launch)
-    assert launch.java_options == (
-        f"-XX:ArchiveClassesAtExit={part} -Xlog:cds=off -Xlog:cds+dynamic=off"
-    )
-    assert part.parent == cache and part.name.startswith("driver-")
-    assert not part.exists()
+    assert _class_archive(environ, spark_home) is None
+    assert not cache.exists()
+
+    archive = _class_archive(environ, spark_home, create=True)
+    path = Path(archive.path)
+    assert path.parent == cache and path.name.startswith("driver-")
+    assert path.suffix == ".jsa" and not path.exists()
     # the launch swaps in an empty conf dir of the cache's own
-    assert launch.env == {"SPARK_CONF_DIR": str(cache / "conf")}
-    assert os.listdir(cache / "conf") == []
+    assert archive.env == {"SPARK_CONF_DIR": str(cache / "conf")}
+    assert os.listdir(cache) == ["conf"] and os.listdir(cache / "conf") == []
     assert (cache.stat().st_mode & 0o777) == 0o700
+    assert _mapped() is None
 
 
-def test_a_dump_is_published_only_once_its_jvm_is_gone(box):
+def test_a_whole_dump_is_published_and_everything_else_deleted(box):
+    """Publishing needs no word from the JVM that wrote the dump: the
+    JVM writes the header last, so a whole header and regions mean a
+    finished dump. Other keys' archives and a killed writer's dump go."""
     environ, spark_home, cache = box
-    part = _dump(_cds_launch(environ, spark_home))
-    _write(part, _archive_bytes())
-    pid_file = part.with_suffix(".pid")
-    pid_file.write_text(str(os.getpid()))  # alive: still writing
-    launch = _cds_launch(environ, spark_home)
-    assert "ArchiveClassesAtExit" in launch.java_options
-    assert part.exists()
-
-    pid_file.write_text(str(_dead_pid()))
-    launch = _cds_launch(environ, spark_home)
-    archive = part.with_name(part.name.split(".")[0] + ".jsa")
-    assert launch.java_options.startswith(f"-XX:SharedArchiveFile={archive} ")
-    assert launch.pid_file is None
-    assert archive.read_bytes() == _archive_bytes()
-    assert not part.exists() and not pid_file.exists()
+    archive = _class_archive(environ, spark_home, create=True)
+    part = _write(cache / "driver-0123.abcd.part", _archive_bytes())
+    stray = _write(cache / "driver-0123.ef01.part", bytes(100))
+    old = _write(cache / "driver-4567.jsa", _archive_bytes())
+    assert _publish(archive, str(part)) == archive.path
+    assert _mapped() == Path(archive.path)
+    assert Path(archive.path).read_bytes() == _archive_bytes()
+    assert sorted(os.listdir(cache)) == ["conf", Path(archive.path).name]
+    assert not part.exists() and not stray.exists() and not old.exists()
 
 
 def test_an_unfinished_dump_is_deleted_not_published(box):
@@ -113,130 +114,117 @@ def test_an_unfinished_dump_is_deleted_not_published(box):
     cut short after the header has regions past its end (mapping that
     one kills the JVM with SIGBUS)."""
     environ, spark_home, cache = box
+    archive = _class_archive(environ, spark_home, create=True)
     for data in (bytes(len(_archive_bytes())), _archive_bytes()[:6000]):
-        part = _dump(_cds_launch(environ, spark_home))
-        _write(part, data)
-        part.with_suffix(".pid").write_text(str(_dead_pid()))
-        launch = _cds_launch(environ, spark_home)
-        assert "ArchiveClassesAtExit" in launch.java_options
-        assert not part.exists() and not part.with_suffix(".pid").exists()
-        assert not list(cache.glob("*.jsa"))
+        part = _write(cache / "driver-0123.abcd.part", data)
+        assert _publish(archive, str(part)) is None
+        assert not part.exists()
+        assert os.listdir(cache) == ["conf"]
 
 
-def test_an_archive_cut_short_is_not_mapped_and_is_replaced(box):
+def test_an_archive_cut_short_is_not_mapped(box):
     environ, spark_home, cache = box
-    part = _dump(_cds_launch(environ, spark_home))
-    archive = part.with_name(part.name.split(".")[0] + ".jsa")
-    _write(archive, _archive_bytes()[:6000])
-    assert "ArchiveClassesAtExit" in _cds_launch(environ, spark_home).java_options
-
-    part = _dump(_cds_launch(environ, spark_home))
-    _write(part, _archive_bytes())
-    part.with_suffix(".pid").write_text(str(_dead_pid()))
-    assert "SharedArchiveFile" in _cds_launch(environ, spark_home).java_options
-    assert archive.read_bytes() == _archive_bytes()
+    archive = _class_archive(environ, spark_home, create=True)
+    _write(Path(archive.path), _archive_bytes()[:6000])
+    assert _mapped() is None
 
 
 def test_a_group_writable_archive_is_ignored(box):
     environ, spark_home, cache = box
-    part = _dump(_cds_launch(environ, spark_home))
-    archive = part.with_name(part.name.split(".")[0] + ".jsa")
-    _write(archive, _archive_bytes(), mode=0o664)
-    launch = _cds_launch(environ, spark_home)
-    assert "SharedArchiveFile" not in launch.java_options
-    assert "ArchiveClassesAtExit" in launch.java_options
+    archive = _class_archive(environ, spark_home, create=True)
+    _write(Path(archive.path), _archive_bytes(), mode=0o664)
+    assert _mapped() is None
+    Path(archive.path).chmod(0o444)
+    assert _mapped() == Path(archive.path)
 
 
-def test_a_new_jdk_ignores_the_old_archive_and_deletes_it_on_publish(box):
+def test_a_new_jdk_ignores_the_old_archive_and_its_publish_deletes_it(box):
     environ, spark_home, cache = box
-    part = _dump(_cds_launch(environ, spark_home))
-    old = _write(part.with_name(part.name.split(".")[0] + ".jsa"), _archive_bytes())
-    assert "SharedArchiveFile" in _cds_launch(environ, spark_home).java_options
+    old = Path(_class_archive(environ, spark_home, create=True).path)
+    _write(old, _archive_bytes())
+    assert _mapped() == old
 
     modules = Path(environ["JAVA_HOME"], "lib", "modules")
     os.utime(modules, ns=(0, modules.stat().st_mtime_ns + 10**9))
-    part = _dump(_cds_launch(environ, spark_home))
-    assert old.name.split(".")[0] not in part.name
-    assert old.exists()
+    assert _mapped() is None
+    archive = _class_archive(environ, spark_home)
+    assert Path(archive.path) != old and old.exists()
 
-    _write(part, _archive_bytes(4096))
-    part.with_suffix(".pid").write_text(str(_dead_pid()))
-    launch = _cds_launch(environ, spark_home)
-    assert "SharedArchiveFile" in launch.java_options
+    part = _write(cache / (Path(archive.path).stem + ".abcd.part"), _archive_bytes(4096))
+    _publish(archive, str(part))
     assert not old.exists()
-    assert [p.name for p in cache.glob("*.jsa")] == [part.name.split(".")[0] + ".jsa"]
+    assert [p.name for p in cache.glob("*.jsa")] == [Path(archive.path).name]
 
 
 def test_other_jdks_and_longer_class_paths_launch_as_today(box):
     environ, spark_home, cache = box
-    assert _cds_launch({**environ, "HADOOP_CONF_DIR": "/etc/hadoop"}, spark_home) is None
+    _write(Path(_class_archive(environ, spark_home, create=True).path), _archive_bytes())
+    assert _mapped() is not None
+    assert session._mapped_archive({"spark.driver.extraClassPath": "/x.jar"}) is None
+    assert _class_archive({**environ, "HADOOP_CONF_DIR": "/etc/hadoop"}, spark_home) is None
     release = Path(environ["JAVA_HOME"], "release")
     release.write_text('JAVA_VERSION="21.0.4"\n')
-    assert _cds_launch(environ, spark_home) is None
+    assert _class_archive(environ, spark_home, create=True) is None
 
 
 _DRIVER = """
-import os, sys
-from pyspark import SparkContext
-from etl_example_spark.session import get_spark
+import sys
+from etl_example_spark.session import get_spark, write_class_archive
 
+if sys.argv[1] == "write":
+    print("archive", write_class_archive(), flush=True)
+    sys.exit()
 extra = {}
 if len(sys.argv) > 2:
     extra["spark.driver.extraJavaOptions"] = f"-Xlog:class+load=info:file={sys.argv[2]}"
 spark = get_spark(app_name="cds-test", extra_conf=extra)
 print("rows", spark.range(100).count(), flush=True)
 print("options", spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions"), flush=True)
-proc = SparkContext._gateway.proc
 spark.stop()
-SparkContext._gateway.shutdown()
-if sys.argv[1] == "wait":
-    proc.stdin.close()  # the JVM exits on EOF, writing its archive first
-    proc.wait(timeout=240)
-else:
-    proc.kill()
-    proc.wait()
 """
 
 
-def _run_driver(env, exit: str, *args) -> subprocess.CompletedProcess:
+def _run_driver(env, *args) -> str:
     proc = subprocess.run(
-        [sys.executable, "-c", _DRIVER, exit, *args],
+        [sys.executable, "-c", _DRIVER, *args],
         capture_output=True, text=True, timeout=400, env=env, cwd=str(ROOT),
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
-    assert "rows 100" in proc.stdout
     # neither the writing nor the mapping nor a refusing JVM says a word
     # about CDS (nor crashes: an archive cut short used to SIGBUS it)
     for line in (proc.stdout + proc.stderr).splitlines():
-        if line.startswith("options "):
+        if line.startswith(("options ", "archive ")):
             continue
         assert "cds" not in line.lower() and "sharedarchive" not in line.lower(), line
-    return proc
+    return proc.stdout
 
 
-def test_second_launch_maps_the_archive_and_a_cut_short_one_still_starts(tmp_path):
+def test_written_archive_is_mapped_and_a_cut_short_one_gives_a_normal_start(tmp_path):
     env = {
         **os.environ,
         "XDG_CACHE_HOME": str(tmp_path / "xdg"),
         "SPARK_GRAFT_CPUS": "2",
         "PYTHONPATH": os.pathsep.join(p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p),
     }
-    if _cds_launch(env, session._find_spark_home()) is None:
+    if _class_archive(env, session._find_spark_home(), create=True) is None:
         pytest.skip("this box launches the driver without an archive (JDK, conf dir or class path)")
     cache = tmp_path / "xdg" / "etl_example_spark"
 
-    _run_driver(env, "wait")
-    assert len(list(cache.glob("*.part"))) == 1 and not list(cache.glob("*.jsa"))
+    out = _run_driver(env, "write")
+    [archive] = cache.glob("driver-*")
+    assert f"archive {archive}" in out and archive.suffix == ".jsa"
 
     classes = tmp_path / "classes.log"
-    _run_driver(env, "kill", str(classes))
-    [archive] = cache.glob("*.jsa")
+    out = _run_driver(env, "map", str(classes))
+    assert "rows 100" in out and f"-XX:SharedArchiveFile={archive}" in out
     assert "source: shared objects file (top)" in classes.read_text()
 
     archive.chmod(0o644)
     with open(archive, "r+b") as fh:
         fh.truncate(archive.stat().st_size // 2)
     archive.chmod(0o444)
-    # the archive cut short is skipped, and this launch dumps a new one
-    # (killed here, to spare the test the dump's seconds)
-    assert "-XX:ArchiveClassesAtExit=" in _run_driver(env, "kill").stdout
+    # the archive cut short is skipped; the start is the normal one and
+    # writes nothing
+    out = _run_driver(env, "map")
+    assert "rows 100" in out and "options None" in out
+    assert sorted(p.name for p in cache.iterdir()) == sorted(["conf", archive.name])
