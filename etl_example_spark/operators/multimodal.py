@@ -37,18 +37,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: metadata struct carried beside every binary payload
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("modality", T.StringType()),  # image | audio | video
-        T.StructField("format", T.StringType()),  # png | wav | mp4 | ...
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

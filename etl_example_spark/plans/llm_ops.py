@@ -8190,11 +8190,12 @@ def _dct_oracle() -> str:
 
 
 def m46_hash_frame(docs: DataFrame) -> DataFrame:
-    """The m46 kernel as a reusable frame transform (shared by the
-    registration and tools/scale_round10b_ops.py so the benchmark can
-    never drift from the op it measures): (doc_id, text) -> (doc_id,
-    dct_hash) through md5-raster synthesis, the real JPEG round trip,
-    8x8 canonicalization, and the fixed-point DCT hash."""
+    """The m46 kernel as a reusable frame transform, so a benchmark
+    never drifts from the op it measures (the round-10 scale script,
+    ``git show 4218c3c:tools/scale_round10b_ops.py``, timed this frame):
+    (doc_id, text) -> (doc_id, dct_hash) through md5-raster synthesis,
+    the real JPEG round trip, 8x8 canonicalization, and the fixed-point
+    DCT hash."""
     import hashlib
 
     import pandas as pd

@@ -11,7 +11,8 @@ extensions) is registered here as a named `Query`:
 
 ``__spark_entry__.queries()`` / ``oracle_sql()``, the pytest differential
 harness, and ``bench.py`` all read from this registry, so a query is never
-"done" in one surface and missing from another.
+"done" in one surface and missing from another. The registry keeps
+registration order; ``__spark_entry__`` alone orders the driver window.
 
 Determinism rules for oracle-checked queries (the driver hash-compares
 values): float sums go through DECIMAL casts (exact, order-independent)
@@ -47,222 +48,6 @@ class Query:
 
 QUERIES: dict[str, Query] = {}
 
-#: Current round number — bump each round; seeds the deterministic
-#: rotation of the already-verified backlog through the driver window so
-#: regressions in verified queries are eventually re-caught (a different
-#: ~39-query sample each round instead of only the 6 sentinels).
-ROUND = 13
-
-#: Queries the external driver has already verified in earlier rounds
-#: (union of non-errored rows across CORRECTNESS_r01–r04). The driver's
-#: per-round CORRECTNESS gate covers only the FIRST 50 registry entries,
-#: so ``load_all`` orders sentinels first, then never-verified queries,
-#: then this backlog — rotating external coverage across rounds. Update
-#: this set from each round's CORRECTNESS file.
-PRIOR_VERIFIED: frozenset[str] = frozenset(
-    {
-        "d23_dedup_exact_stats", "d24_dedup_exact_keep", "d25_jaccard_pairs",
-        "d26_minhash_lsh_pairs", "d27_simhash_buckets", "d28_text_quality",
-        "d29_langid", "d30_fingerprint", "d31_dedup_clusters",
-        "d32_edit_distance_pairs", "d33_udtf_ngrams", "d34_mad_outliers",
-        "d39_bpe_token_stats", "d40_repetition_metrics", "d41_pii_scrub",
-        "d42_stratified_sample", "d43_winnowing", "d44_weighted_stats",
-        "d45_data_quality", "d46_pack_sequences", "d47_contamination",
-        "d48_temperature_mixture", "d49_arrow_udf", "d50_map_in_arrow",
-        "d51_polymorphic_udtf", "d52_tfidf_top_terms", "d53_curation_pipeline",
-        "d54_crypto_fingerprints", "d55_incremental_neardup",
-        "d56_text_chunking", "m34_multimodal_stats", "m35_mixed_media_stats",
-        "m36_frame_sample", "m37_audio_chunks", "m38_encode_then_search",
-        "q0_pricing_summary", "q10_anti_join", "q11_outer_join_agg",
-        "q12_distinct_agg", "q13_rollup", "q14_having", "q15_cte_subquery",
-        "q16_set_ops", "q17_topk_orders", "q18_json_extract", "q19_pivot",
-        "q1_weekly_units", "q20_sessionize", "q21_tumbling_window",
-        "q22_approx_distinct", "q2_top_products", "q3_top_stores",
-        "q41_shipping_priority", "q42_local_supplier_volume",
-        "q44_exact_percentiles", "q45_grouping_sets", "q46_asof_join",
-        "q47_range_bin_join", "q48_cube", "q4_seasonality",
-        "q5_curation_filter", "q6_date_repair", "q7_window_topk_per_group",
-        "q8_window_running_total", "q9_semi_join", "s31_cosine_topk",
-        "s32_embedding_near_dup", "s33_ann_topk", "s40_ivf_topk",
-        "s41_batch_topk", "s42_pq_topk",
-        # round 4 (CORRECTNESS_r04: 49 green + q61 rows-only)
-        "st35_stream_tumbling", "st36_stream_sliding_watermark",
-        "st37_stream_session_windows", "st38_stream_first_seen_dedup",
-        "st39_stream_stream_join", "st40_stream_update_counts",
-        "st41_stream_builtin_dedup", "st42_stream_static_enrichment",
-        "st43_stream_cdc_apply", "st44_stream_python_source",
-        "st45_stream_neardup_probe", "q49_window_breadth",
-        "q50_exists_correlated", "q51_scalar_correlated",
-        "q52_conditional_agg", "q53_lateral_explode", "q54_date_breadth",
-        "q55_range_frame_window", "q56_null_safe_join", "q57_zorder_key",
-        "q58_merge_upsert", "q59_rank_functions",
-        "q60_intersect_except_all", "q61_approx_quantiles",
-        "q62_incremental_agg", "q63_disjunctive_predicates",
-        "q64_promo_revenue_ratio", "q65_market_share",
-        "q66_small_quantity_revenue", "q67_large_orders",
-        "q68_sole_late_supplier", "q69_quiet_big_accounts",
-        "q70_python_datasource", "q71_hof_array_pipeline",
-        "q72_gap_fill_resample", "q73_variant_semi_structured",
-        "q74_recursive_hierarchy", "q75_salted_agg", "q76_try_functions",
-        "q77_bucket_join", "q78_moment_statistics", "q79_funnel_analysis",
-        "q80_unpivot",
-        # round 5 (CORRECTNESS_r05: 49 green + q22 rows-only by design)
-        "d57_url_dedup", "d58_keep_best_per_cluster", "d59_mixture_weights",
-        "d60_leakage_safe_split", "d61_column_profile", "q81_pandas_api",
-        "q82_map_type", "q83_scalar_function_breadth", "q84_na_handling",
-        "q85_interval_overlap_join", "q86_listagg", "q87_bit_aggs",
-        "q88_histogram_bins", "q89_regexp_breadth", "q90_ntile_buckets",
-        "q91_forecast_revenue", "q92_volume_shipping", "q93_returned_items",
-        "q94_customer_distribution",
-        # round 6 (CORRECTNESS_r06: 50/50 green)
-        "d62_line_dedup", "d63_bloom_contamination", "d64_host_frequency_cap",
-        "d65_unigram_rarity", "d66_shard_manifest", "d67_export_pipeline",
-        "d68_vocab_coverage", "d69_domain_shift",
-        "d70_incremental_line_dedup", "d71_line_dedup_apply",
-        "d72_ngram_novelty", "d73_quality_classifier", "d74_normalize_text",
-        "d75_containment_pairs", "d76_bpe_merges", "d77_containment_sampled",
-        "d78_countmin_heavy_hitters", "d79_bpe_encode_stats",
-        "g01_pagerank_transitions", "g02_triangle_count", "g03_bfs_levels",
-        "m39_ppm_resize", "m40_channel_stats", "m41_wav_stats",
-        "q95_regression_stats", "q96_arg_extrema", "q97_distinct_window",
-        "q98_window_ignore_nulls", "q99_xml_extract", "q100_cohort_retention",
-        "q101_scd2_point_in_time", "q102_retractable_agg",
-        "q22a_approx_distinct_bound", "q61a_approx_quantile_bound",
-        "s33a_ann_recall_bound", "s40a_ivf_recall_bound",
-        "s42a_pq_recall_bound", "s43_knn_graph",
-        "s44_semantic_dedup_clusters", "s45_hybrid_search_rrf",
-        "s46_mmr_diversified_topk", "st46_stream_bloom_probe",
-        "st47_stream_quality_gate", "st48_stream_countmin_maintenance",
-        # round 7 (CORRECTNESS_r07: 48 green + the 2 no_oracle-by-design
-        # approximates q22/s42, whose bound twins were verified in r6)
-        "d80_duplicated_spans", "d81_remove_duplicated_spans",
-        # round 8 (CORRECTNESS_r08: 50/50 green, zero err rows)
-        "s47_ivf_append", "s48_pq_append", "d83_bigram_logprob_quality",
-        "d84_soft_dedup_weights", "m42_png_channel_stats",
-        "d82_duplicated_spans_df_floor", "d85_remove_spans_df_floor",
-        "d86_incremental_span_dedup", "st49_stream_ivf_maintenance",
-        "st50_stream_pq_maintenance", "st51_stream_span_maintenance",
-        # round 9 (CORRECTNESS_r09: 50/50 green, zero err rows)
-        "d87_newline_line_dedup", "d88_top_duplicated_spans",
-        "d89_top_boilerplate_lines", "d90_benchmark_span_overlap",
-        "d91_remove_benchmark_spans", "d92_html_extract",
-        "d93_fix_mojibake", "d94_intradoc_line_dedup",
-        "d95_token_budget_plan", "d96_paragraph_dedup",
-        "d97_web_curation_v2", "d98_token_entropy",
-        "d99_gopher_repetition", "d100_quality_ensemble",
-        "m43_jpeg_block_stats", "m44_image_phash_dedup",
-        "s49_sq8_topk", "s49a_sq8_recall_bound", "s50_sq8_append",
-        "s51_bm25_topk", "s52_bm25_append",
-        "st52_stream_line_maintenance", "st53_stream_decontaminate",
-        "st54_stream_sq8_maintenance", "st55_stream_bm25_route",
-        # round 10 (CORRECTNESS_r10: 51/51 green, zero err rows)
-        "d101_clean_text", "d102_warc_extract", "d103_crawl_to_corpus",
-        "d104_corpus_snapshot_diff", "d105_registrable_domain_rollup",
-        "d106_perceptron_train", "d107_perceptron_gate",
-        "d108_domain_scorecard", "d109_quality_bucket_budget",
-        "d110_contamination_matrix", "s53_bm25_index_serve",
-        "s54_phrase_search", "s55_sq8_kmeans", "s56_rag_retrieval",
-        "m45_scale_invariant_phash", "m46_dct_phash",
-        "m47_audio_spectral_energy", "g04_label_propagation",
-        "st56_stream_warc_ingest", "st57_stream_quota_admission",
-        "st58_stream_phrase_route",
-        # round 11 (CORRECTNESS_r11: 49/50 green; s58_ivfpq_topk is the
-        # designed no_oracle approximate whose s58a certificate is green)
-        "d111_wet_to_corpus", "d112_langid_train", "d113_langid_gate",
-        "d114_reproducible_shuffle", "m48_video_frame_stats",
-        "s57_bm25_bucketed_serve", "s58a_ivfpq_recall_bound",
-        "st59_stream_wet_ingest",
-        # round 12 (CORRECTNESS_r12: 48/50 green; s58/s60 are the
-        # designed no_oracle approximates, exposed rows-only with
-        # their s58a/s60a certificates hash-green — backlog them like
-        # q22/s33/s40/s42 before them)
-        "d115_wet_files_to_corpus", "d116_interleaved_bin_audit",
-        "m49_interleaved_packing", "s58_ivfpq_topk",
-        "s59_hybrid_index_serve", "s60_ivfpq_residual_topk",
-        "s60a_ivfpq_residual_recall_bound", "s61_ivfpq_artifact_law",
-        "st60_stream_wet_files",
-    }
-)
-
-#: Always inside the driver window regardless of rotation — the reference
-#: parity queries (SURVEY §2's core surface) act as regression sentinels.
-SENTINELS: tuple[str, ...] = (
-    "q1_weekly_units", "q2_top_products", "q3_top_stores",
-    "q4_seasonality", "q5_curation_filter", "q6_date_repair",
-)
-
-#: Head of this round's rotation. Round 13 (VERDICT r12 ask 4): the
-#: round-1 driver-rotation tail first — eight queries externally
-#: exposed only in CORRECTNESS_r01, eleven rounds past the rotation's
-#: hygiene bar; then the queries whose EXECUTED PLAN changed this
-#: round (s59's semantic arm now serves from the staged IVF artifact;
-#: ivf_topk/ivfpq_residual_topk grew stored-quantizer parameters and
-#: ivf_train/pq_train grew max_train_rows — defaults must hash
-#: unchanged, certified via their append-law and certificate kin);
-#: then the r3–r5 band the verdict names. This round's brand-new
-#: registrations follow via never-verified rank-2.
-ROTATION_PRIORITY: tuple[str, ...] = (
-    # round-1 tail — last external exposure CORRECTNESS_r01:
-    "q9_semi_join",
-    "q12_distinct_agg",
-    "q13_rollup",
-    "q14_having",
-    "q15_cte_subquery",
-    "q16_set_ops",
-    "q21_tumbling_window",
-    "q42_local_supplier_volume",
-    # executed plan or shared kernel CHANGED in round 13:
-    "s59_hybrid_index_serve",  # semantic arm: staged-artifact serve
-    "s40a_ivf_recall_bound",  # ivf_topk signature/serving rework
-    "s47_ivf_append",  # ivf assign kernel consumers
-    "s48_pq_append",  # pq_train signature (max_train_rows)
-    "s60a_ivfpq_residual_recall_bound",  # residual stored-artifact path
-    "s61_ivfpq_artifact_law",  # ivfpq artifact contract kin
-    # r3–r5 band (VERDICT r12 ask 4, second slice):
-    "d27_simhash_buckets",
-    "d31_dedup_clusters",
-    "d32_edit_distance_pairs",
-    "s32_embedding_near_dup",
-    "s41_batch_topk",
-    "m34_multimodal_stats",
-    "m36_frame_sample",
-    "m37_audio_chunks",
-    "q17_topk_orders",
-    "q20_sessionize",
-    "st35_stream_tumbling",
-    "st38_stream_first_seen_dedup",
-    "st40_stream_update_counts",
-    "st42_stream_static_enrichment",
-    "st43_stream_cdc_apply",
-)
-
-#: Queries registered AFTER this round's driver window filled: the
-#: round-13 window is exactly full (6 sentinels + 29 rotation-priority
-#: + 15 never-verified new registrations = 50), and never-verified
-#: rank-2 ordering follows module import order (llm_ops before
-#: streaming_ops), so a late llm_ops registration would otherwise
-#: EVICT st61–st63 from their first external exposure. Names listed
-#: here rank behind the in-window never-verified set and take their
-#: first driver exposure next round (where they are plain rank-2 once
-#: this tuple is rotated out).
-LATE_REGISTRATIONS: tuple[str, ...] = (
-    "s70_semdedup",
-    "d118_hll_distinct",
-    "st64_stream_ivf_serve",
-    "m52_video_near_dup",
-    "d119_minhash_calibration",
-    "d120_hist_quantile_sketch",
-    "g05_connected_components",
-    "st65_stream_hll_maintenance",
-    "s71_bm25_bucketed_delete",
-    "s72_ivf_delete",
-    "st66_stream_hybrid_serve",
-    "st67_stream_semdedup_gate",
-    "s73_bm25_cdc_maintenance",
-    "st68_stream_cdc_index_maintenance",
-    "st69_stream_hist_maintenance",
-)
-
 
 def register(
     name: str,
@@ -292,16 +77,8 @@ def register(
 
 
 def load_all() -> dict[str, Query]:
-    """Import every module that registers queries; return the registry,
-    ordered so the driver's 50-entry CORRECTNESS window is spent well:
-    sentinels, then this round's rotation priority, then never-verified
-    queries in registration order, then the already-verified backlog in a
-    ROUND-seeded deterministic shuffle — each round re-exposes a
-    different ~39-query sample of the verified backlog to the external
-    gate, so a regression anywhere is caught within a few rounds instead
-    of hiding behind the 6 sentinels forever."""
-    import hashlib
-
+    """Import every module that registers queries; return the registry in
+    registration order."""
     # Imports are side-effecting (decorators populate QUERIES).
     from etl_example_spark.plans import (  # noqa: F401
         llm_ops,
@@ -310,20 +87,4 @@ def load_all() -> dict[str, Query]:
         streaming_ops,
     )
 
-    names = list(QUERIES)
-
-    def backlog_key(name: str) -> str:
-        return hashlib.md5(f"{ROUND}:{name}".encode()).hexdigest()
-
-    def rank(name: str) -> tuple[int, object]:
-        if name in SENTINELS:
-            return (0, SENTINELS.index(name))
-        if name in ROTATION_PRIORITY:
-            return (1, ROTATION_PRIORITY.index(name))
-        if name not in PRIOR_VERIFIED:
-            if name in LATE_REGISTRATIONS:
-                return (2, (1, LATE_REGISTRATIONS.index(name)))
-            return (2, (0, names.index(name)))
-        return (3, backlog_key(name))
-
-    return {n: QUERIES[n] for n in sorted(names, key=rank)}
+    return dict(QUERIES)

@@ -58,10 +58,9 @@ REFERENCE_SCHEMAS: dict[str, T.StructType] = {
     "sellout": SELLOUT_RAW_SCHEMA,
 }
 
-# Candidate names the reference probes for the fact table and the measure
-# column (``src/job.py:100-112`` / ``src/job.py:23``); kept for the dynamic
-# introspection operators in operators/curation.py.
-FACT_TABLE_CANDIDATES = ["combined_sellout", "sales", "sellout"]
+# Candidate names the reference probes for the measure column
+# (``src/job.py:23``); kept for the dynamic introspection operators in
+# operators/curation.py.
 QUANTITY_COLUMN_CANDIDATES = ["quantity", "qty", "cantidad", "amount"]
 
 # --- driver testdata tables (TESTDATA.md) --------------------------------
@@ -78,7 +77,3 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
-
-# Small dimension tables that should always be broadcast in joins against
-# the big fact tables (lineitem/orders/events at 100 TB scale).
-BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}

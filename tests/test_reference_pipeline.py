@@ -204,3 +204,25 @@ def test_get_existing_table_returns_the_first_existing_candidate(spark):
         assert get_existing_table(spark, names[:2]) is None
     finally:
         spark.catalog.dropTempView("probe_sellout_b")
+
+
+@pytest.mark.parametrize(
+    "schema, expected",
+    [
+        # a numeric candidate wins, in candidate order, not schema order
+        ("amount double, qty int", "qty"),
+        # a non-numeric candidate is skipped
+        ("quantity string, amount bigint", "amount"),
+        # no candidate: the first numeric column, in schema order
+        ("store string, units int, price double", "units"),
+        # no numeric column at all
+        ("store string, day date", None),
+    ],
+    ids=["candidate_order", "non_numeric_candidate", "first_numeric", "none"],
+)
+def test_detect_quantity_column(spark, schema, expected):
+    """SURVEY P5: the reference's ``information_schema.columns`` probe
+    prefers the candidate names, else the first numeric column."""
+    from etl_example_spark.operators.curation import detect_quantity_column
+
+    assert detect_quantity_column(spark.createDataFrame([], schema)) == expected
