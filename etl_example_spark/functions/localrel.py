@@ -154,6 +154,22 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
         return spark.createDataFrame(rows, schema)
 
 
+def collected(df: DataFrame) -> DataFrame:
+    """``df`` run once, its rows held on the driver as a true
+    ``LocalRelation``: ``show``, ``collect`` and ``toPandas`` over the
+    result launch no job. The rows go from the JVM's ``collectAsList``
+    straight into its ``createDataFrame`` with ``df``'s own schema, so
+    they never become Python objects and every value and nullability is
+    kept. For bounded results only (query answers, totals rows): the
+    whole result sits in driver memory."""
+    jdf = df._jdf  # noqa: SLF001 — the JVM rows, not Python ones
+    spark = df.sparkSession
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(jdf.collectAsList(), jdf.schema()),  # noqa: SLF001
+        spark,
+    )
+
+
 def _local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     cols = [_field_name_type(field) for field in _split_top(schema)]
     # Column TYPES are pinned by the per-cell CASTs, and ARRAY values

@@ -31,6 +31,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 import uuid
 from dataclasses import dataclass
 
@@ -188,10 +189,25 @@ class ManifestJsonlDataSource(DataSource):
         return _ManifestJsonlWriter(self.options)
 
 
+#: serializes every registration: Spark's check-then-put is not atomic,
+#: so two threads registering one name at once can fail with
+#: DATA_SOURCE_ALREADY_EXISTS
+_REGISTER_LOCK = threading.Lock()
+
+
+def register_once(spark, *sources: type[DataSource]) -> None:
+    """Register each Python data source on ``spark`` unless the session
+    already has one by that name. Safe to call from many threads."""
+    with _REGISTER_LOCK:
+        manager = spark._jsparkSession.sessionState().dataSourceManager()  # noqa: SLF001
+        for source in sources:
+            if not manager.dataSourceExists(source.name()):
+                spark.dataSource.register(source)
+
+
 def register_python_datasources(spark) -> None:
     """Idempotently register both custom formats on a session."""
-    spark.dataSource.register(SyntheticDocsDataSource)
-    spark.dataSource.register(ManifestJsonlDataSource)
+    register_once(spark, SyntheticDocsDataSource, ManifestJsonlDataSource)
 
 
 def read_manifest(path: str):

@@ -48,6 +48,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from etl_example_spark.sources.python_datasource import register_once
+
 CRLF = b"\r\n"
 _HEAD = b"WARC/1.0\r\n"
 
@@ -653,8 +655,8 @@ class WarcDataSource(DataSource):
 
 
 def register_warc_datasource(spark) -> None:
-    spark.dataSource.register(WarcDataSource)
+    register_once(spark, WarcDataSource)
 
 
 def register_wet_datasource(spark) -> None:
-    spark.dataSource.register(WetDataSource)
+    register_once(spark, WetDataSource)

@@ -347,7 +347,9 @@ def backup_catalog(
 
     Each table is one task — write, read-back count, schema — and the
     tasks run concurrently (``session.run_concurrently``). The read-back
-    count, not the source frame's, is what the manifest records.
+    count, not the source frame's, is what the manifest records. The
+    read-back uses the schema the table was written with, so no job
+    infers it from the parquet footers.
     ``_MANIFEST.json`` is written last, only after every task succeeded:
     if any table fails, the error is re-raised once the other tasks end
     and no manifest exists, so :func:`restore_catalog` refuses the
@@ -371,7 +373,7 @@ def backup_catalog(
         path = os.path.join(backup_dir, name)
         df.write.mode("overwrite").option("compression", "zstd").parquet(path)
         return {
-            "rows": spark.read.parquet(path).count(),
+            "rows": spark.read.schema(df.schema).parquet(path).count(),
             "schema": df.schema.jsonValue(),
         }
 

@@ -7,13 +7,16 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from etl_example_spark.operators.curation import quality_filter, repair_date_column
 from etl_example_spark.plans.pipeline import run_pipeline, show_results
 from etl_example_spark.plans.reference_queries import (
+    REFERENCE_DATAFRAME_QUERIES,
     REFERENCE_SQL,
     run_reference_sql,
 )
 from etl_example_spark.schemas import REFERENCE_SCHEMAS
 from etl_example_spark.fixtures import make_reference_tables
+from etl_example_spark.sources.writers import backup_catalog
 from tests.jobs import launched_jobs
 from tests.oracle import compare_frames
 
@@ -63,13 +66,100 @@ def test_post_counts_derived_from_pre_counts(result, ref_tables):
 
 
 def test_run_pipeline_job_budget(spark, ref_tables):
-    """One count per table plus the problematic count, in one concurrent
-    batch; post-counts launch no job. 18 jobs when every table was
-    counted again after curation."""
+    """One count per table, the problematic count and one collect of
+    each query, in one concurrent batch; post-counts launch no job. The
+    counts take 10 jobs (18 when every table was counted again after
+    curation) and the collects 17, a range-sampling job each for the
+    ORDER BY of q1 and q4 among them."""
     _, sdfs = ref_tables
     with launched_jobs(spark) as jobs:
         run_pipeline(spark, sdfs)
-    assert len(jobs) <= 10, f"run_pipeline launched {len(jobs)} jobs"
+    assert len(jobs) <= 27, f"run_pipeline launched {len(jobs)} jobs"
+
+
+def _lazy_queries(tables: dict) -> dict:
+    """The 4 queries as lazy frames over the curated fact, built the
+    way ``run_pipeline`` builds them."""
+    fact = repair_date_column(tables["sellout"], "daily", fmt="yyyy/MM/dd")
+    curated = quality_filter(fact, "quantity")
+    dims = {k: v for k, v in tables.items() if k != "sellout"}
+    return {
+        name: builder(curated, dims)
+        for name, builder in REFERENCE_DATAFRAME_QUERIES.items()
+    }
+
+
+def _assert_results_equal_lazy(query_results: dict, tables: dict) -> None:
+    lazy = _lazy_queries(tables)
+    assert list(query_results) == list(lazy)
+    for name, want in lazy.items():
+        got = query_results[name]
+        # names, types and nullability
+        assert got.schema == want.schema, name
+        got_rows, want_rows = got.collect(), want.collect()
+        if name in ("q1_weekly", "q4_seasonality"):
+            # fully ordered: row for row, so the semana timestamp and
+            # the dia_semana string round-trip exactly
+            assert got_rows == want_rows, name
+        else:
+            # top-5 under ties: the unidades multiset is fixed
+            assert sorted(r["unidades"] for r in got_rows) == sorted(
+                r["unidades"] for r in want_rows
+            ), name
+
+
+def test_query_results_equal_the_lazy_queries(result, ref_tables):
+    """The executed, driver-held results are the lazy queries' answers
+    over the curated fact, and what the parent's lazy frames gave."""
+    _, sdfs = ref_tables
+    assert result.problematic > 0
+    _assert_results_equal_lazy(result.query_results, sdfs)
+    fact = repair_date_column(sdfs["sellout"], "daily", fmt="yyyy/MM/dd")
+    assert result.backup.sameSemantics(fact)
+    assert result.curated.sameSemantics(quality_filter(fact, "quantity"))
+
+
+def test_clean_tables_keep_curated_and_backup(spark, ref_tables):
+    """With no problematic row the queries still read the filtered fact,
+    which keeps every row; ``curated`` is the repaired fact itself and
+    there is no backup."""
+    pdfs, _ = ref_tables
+    q = pdfs["sellout"]["quantity"]
+    clean = pdfs["sellout"][q.notna() & (q > 0) & (q <= 1_000_000)]
+    tables = {
+        name: spark.createDataFrame(
+            clean if name == "sellout" else pdf, schema=REFERENCE_SCHEMAS[name]
+        )
+        for name, pdf in pdfs.items()
+    }
+    res = run_pipeline(spark, tables)
+    assert res.problematic == 0
+    assert res.post_counts == res.pre_counts
+    _assert_results_equal_lazy(res.query_results, tables)
+    assert res.backup is None
+    assert res.curated.sameSemantics(
+        repair_date_column(tables["sellout"], "daily", fmt="yyyy/MM/dd")
+    )
+
+
+def test_show_results_launches_no_job(spark, result):
+    """``run_pipeline`` already ran the queries; rendering them is
+    driver-local."""
+    with launched_jobs(spark) as jobs:
+        shown = show_results(result.query_results)
+    assert set(shown) == set(REFERENCE_SQL)
+    assert not jobs, f"show_results launched {len(jobs)} jobs"
+
+
+def test_backup_catalog_job_budget(spark, result, ref_tables, tmp_path):
+    """Per table: the write (1) and the read-back count (2). The
+    read-back uses the written schema, so no job infers it: 16 jobs
+    when it did."""
+    _, sdfs = ref_tables
+    snapshot = {**sdfs, "sellout": result.curated}
+    with launched_jobs(spark) as jobs:
+        backup_catalog(spark, str(tmp_path), tables=snapshot, label="jobs")
+    assert len(jobs) <= 12, f"backup_catalog launched {len(jobs)} jobs"
 
 
 def test_duplicates_kept(result):

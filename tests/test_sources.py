@@ -535,3 +535,36 @@ class TestFileBackedCrawl:
         replay = list(r.readBetweenOffsets(lo, hi))
         assert replay == drained[len(list(r.readBetweenOffsets(offsets[0], lo))):
                                  len(drained) - len(list(r.readBetweenOffsets(hi, offsets[-1])))]
+
+
+def test_register_warc_datasource_from_many_threads_at_once(spark):
+    """Eight threads register the WARC source on one fresh session at
+    once, each with that session active, as a sweep's worker threads
+    are: none gets DATA_SOURCE_ALREADY_EXISTS, and the source is
+    registered. Spark checks for the name, then looks it up and stores
+    it, with no lock around the three steps."""
+    import threading
+
+    from etl_example_spark.sources.warc import WarcDataSource, register_warc_datasource
+
+    errors = []
+    for _ in range(5):
+        session = spark.newSession()
+        barrier = threading.Barrier(8, timeout=60)
+
+        def register(session=session, barrier=barrier):
+            session._jvm.SparkSession.setActiveSession(session._jsparkSession)  # noqa: SLF001
+            barrier.wait()
+            try:
+                register_warc_datasource(session)
+            except Exception as exc:  # noqa: BLE001 — reported below
+                errors.append(exc)
+
+        threads = [threading.Thread(target=register) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        manager = session._jsparkSession.sessionState().dataSourceManager()  # noqa: SLF001
+        assert manager.dataSourceExists(WarcDataSource.name())
+    assert not errors, errors[0]
