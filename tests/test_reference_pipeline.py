@@ -110,7 +110,8 @@ def _assert_results_equal_lazy(query_results: dict, tables: dict) -> None:
 
 def test_query_results_equal_the_lazy_queries(result, ref_tables):
     """The executed, driver-held results are the lazy queries' answers
-    over the curated fact, and what the parent's lazy frames gave."""
+    over the curated fact; ``backup`` is the repaired fact and
+    ``curated`` its filtered form."""
     _, sdfs = ref_tables
     assert result.problematic > 0
     _assert_results_equal_lazy(result.query_results, sdfs)
