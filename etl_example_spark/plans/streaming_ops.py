@@ -1531,10 +1531,7 @@ def st62_stream_index_compaction(
     )
 
     codes_dir = _run_sq8_maintenance(spark, sf_dir)
-    compact_small_files(
-        spark, codes_dir, target_file_bytes=128 * 1024 * 1024,
-        publish="pointer",
-    )
+    compact_small_files(spark, codes_dir, target_file_bytes=128 * 1024 * 1024)
     return (
         spark.read.parquet(resolve_dataset_path(codes_dir))
         .select("vec_id", "j", "code")

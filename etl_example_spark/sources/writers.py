@@ -21,10 +21,12 @@ similar scan cost, an IO-bandwidth win at scale.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import shutil
-from collections.abc import Sequence
+import uuid
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,8 +36,8 @@ from etl_example_spark.session import run_concurrently
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` via the JVM Hadoop API — the
-    filesystem abstraction that makes small control files (manifests,
-    pointers) work uniformly on file://, hdfs://, and s3a:// — the same
+    filesystem abstraction that makes small control files (manifests)
+    work uniformly on file://, hdfs://, and s3a:// — the same
     resolution the parquet writer itself uses."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -151,14 +153,16 @@ def compact_bucketed_table(
     open/footer costs. The rewrite repartitions on the bucket columns
     (so the write lands ~one file per bucket instead of tasks ×
     buckets), writes a fresh table under the SAME bucket spec, then
-    swaps names — write-temp-then-swap, the engine's transactional
-    discipline for catalog tables (an object-store dataset would use
-    :func:`compact_small_files`'s atomic ``_CURRENT``-pointer publish
-    instead; a catalog table gets the rename, and readers planned
-    against the old generation's files finish undisturbed because the
-    rewrite never touches them until the final drop). Bucket pruning
-    survives: the new files carry the same bucket ids, only fewer of
-    them — asserted in tests/test_llm_ops.py."""
+    swaps names: drop ``name``, then rename the temp table to it.
+
+    The swap is two catalog calls, not a transaction. Between the drop
+    and the rename no table called ``name`` exists: a reader that
+    resolves the name in that window fails, and a crash there leaves the
+    compacted rows only under ``<name>__compact_tmp``. Readers planned
+    against the old generation's files before the drop finish
+    undisturbed, because the rewrite never touches those files until
+    the drop. Bucket pruning survives: the new files carry the same
+    bucket ids, only fewer of them — asserted in tests/test_llm_ops.py."""
     tmp = f"{name}__compact_tmp"
     # materialize BEFORE dropping anything: the rewrite's source plan
     # must not lazily re-read a table the swap is about to drop
@@ -179,20 +183,71 @@ def compact_bucketed_table(
 
 
 def resolve_dataset_path(path: str) -> str:
-    """The CURRENT data directory of a possibly-compacted dataset.
-
-    Resolution order: a ``<path>._CURRENT`` generation pointer (pointer
-    publish mode — the object-store-portable discipline, where the file
-    names the live versioned directory) wins; otherwise the symlink
-    target (symlink publish mode); otherwise ``path`` itself (never
-    compacted). Readers that may sit behind a compacted dataset should
-    open ``resolve_dataset_path(p)`` instead of ``p``.
+    """The live data directory of the dataset at ``path``: the
+    generation its ``<path>._CURRENT`` pointer names, or ``path`` itself
+    when no generation was ever published (see
+    :func:`publish_generation`). Readers of a dataset that may have been
+    republished open ``resolve_dataset_path(p)`` instead of ``p``.
     """
     pointer = f"{path.rstrip('/')}._CURRENT"
     if os.path.isfile(pointer):
         with open(pointer, encoding="utf-8") as fh:
             return fh.read().strip()
-    return os.path.realpath(path)
+    return path
+
+
+def publish_generation(path: str, write: Callable[[str], None]) -> str:
+    """Write a new generation of the dataset at ``path`` and make it the
+    one readers see — the engine's one write-temp-then-swap publish.
+
+    - **Naming.** ``write`` is called with a fresh sibling directory,
+      ``<path>.gen.<id>``; it is published only after ``write`` returns.
+      A directory whose write raised is swept by the next publish.
+    - **Publish.** The generation's absolute path is written to a temp
+      pointer file, which one ``os.replace`` renames onto
+      ``<path>._CURRENT``. If either step fails, the temp pointer is
+      removed and the error propagates: readers stay on the old
+      generation, and the unpublished directory is swept by the next
+      publish.
+    - **Retention.** After the swap, the new generation, the one it
+      replaced (readers still draining its file listing finish
+      undisturbed) and ``path`` itself are kept; every older
+      ``<path>.gen.*`` directory is deleted.
+
+    The swap is an atomic rename on a local POSIX filesystem: the
+    pointer is written with ``open`` and ``os.replace``, not through
+    the Hadoop FileSystem API. An object store has no atomic rename, so
+    there the same shape needs a table-format commit (Delta, Iceberg).
+
+    Returns the new generation's absolute path.
+    """
+    base = path.rstrip("/")
+    new_data = os.path.abspath(f"{base}.gen.{uuid.uuid4().hex[:8]}")
+    write(new_data)
+    prior_data = resolve_dataset_path(path)
+    pointer = f"{base}._CURRENT"
+    tmp_pointer = f"{pointer}.{uuid.uuid4().hex[:8]}"
+    try:
+        with open(tmp_pointer, "w", encoding="utf-8") as fh:
+            fh.write(new_data)
+        os.replace(tmp_pointer, pointer)
+    finally:
+        # gone after a successful replace; left over only on failure
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp_pointer)
+    # `path` itself never carries the `.gen.` prefix, so it is kept too
+    keep = {new_data, os.path.abspath(prior_data)}
+    parent = os.path.dirname(new_data)
+    prefix = os.path.basename(base) + ".gen."
+    for entry in os.listdir(parent):
+        full = os.path.join(parent, entry)
+        if (
+            entry.startswith(prefix)
+            and full not in keep
+            and os.path.isdir(full)
+        ):
+            shutil.rmtree(full)
+    return new_data
 
 
 def compact_small_files(
@@ -200,7 +255,6 @@ def compact_small_files(
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     partition_col: str | None = None,
-    publish: str = "symlink",
 ) -> dict:
     """Small-files compaction: rewrite a parquet dataset so each output
     file approaches ``target_file_bytes`` — the table-maintenance job
@@ -208,42 +262,23 @@ def compact_small_files(
     leave one file per task per trigger; scans then pay per-file open/
     footer costs and lose row-group-level pruning).
 
-    Sizing is measured, not guessed: the current on-disk bytes set the
-    output file count (``ceil(bytes / target)``). Partitioned layouts
-    compact per partition via ``repartition(n, partition_col)`` +
-    dynamic partition overwrite, so untouched partitions' readers are
-    never disturbed and the shuffle routes rows by their final home.
+    Sizing is measured, not guessed: the current on-disk bytes, summed
+    with ``os.walk``, set the output file count
+    (``ceil(bytes / target)``). Partitioned layouts compact per
+    partition via ``repartition(n, partition_col)`` + ``partitionBy``,
+    so the shuffle routes rows by their final home and the hive-style
+    partition directories survive.
 
-    Swap discipline is **write-new-then-repoint**: the compacted copy
-    lands in a fresh versioned sibling directory and ``path`` becomes a
-    symlink repointed onto it with one atomic ``os.replace`` — there is
-    no window where ``path`` is absent, and the replaced generation is
-    RETAINED on disk so in-flight readers of the old file listing finish
-    undisturbed (a retention sweep deletes generations older than the
-    one just replaced). The only non-atomic moment in the dataset's
-    lifetime is the very first compaction of a plain directory, which
-    must convert it to a symlink (two renames); every subsequent
-    compaction is a pure atomic repoint. On object stores / HDFS the
-    same shape is a manifest or Delta/Iceberg commit repointing readers
-    at the new file set.
-
-    ``publish="pointer"`` is that portable form, implemented: instead
-    of a symlink, a ``<path>._CURRENT`` generation-pointer FILE names
-    the live versioned directory and is republished with one atomic
-    ``os.replace`` per compaction (the reference publishes immutable
-    timestamped artifacts the same way, ``sql/backup.sh:18-21``).
-    Readers resolve through :func:`resolve_dataset_path`. Works where
-    symlinks don't exist (object stores; filesystems mounted
-    nosymlink), and the original directory is never renamed — the
-    first compaction is exactly as atomic as every later one.
+    The compacted copy is a new generation published through
+    :func:`publish_generation`: ``<path>._CURRENT`` is repointed onto
+    it with one atomic rename, the replaced generation is retained for
+    draining readers, and older ones are swept. ``path`` itself is never
+    renamed or rewritten. Readers resolve through
+    :func:`resolve_dataset_path`.
 
     Returns {files_before, files_after, bytes, data_dir}.
     """
     import math
-    import uuid
-
-    if publish not in ("symlink", "pointer"):
-        raise ValueError(f"publish must be symlink|pointer, got {publish!r}")
 
     def _parquet_files(root: str) -> list[str]:
         out = []
@@ -255,7 +290,7 @@ def compact_small_files(
             ]
         return out
 
-    # read through the CURRENT generation explicitly: the plan must keep
+    # read through the live generation explicitly: the plan must keep
     # reading the old files while (and after) `path` is repointed
     current_data = resolve_dataset_path(path)
     files = _parquet_files(current_data)
@@ -263,65 +298,20 @@ def compact_small_files(
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
 
     df = spark.read.parquet(current_data)
-    base = path.rstrip("/")
-    new_data = f"{base}.compact.{uuid.uuid4().hex[:8]}"
     if partition_col:
-        (
-            df.repartition(n_out, partition_col)
-            .write.partitionBy(partition_col)
-            .option("compression", "zstd")
-            .parquet(new_data)
+        writer = df.repartition(n_out, partition_col).write.partitionBy(
+            partition_col
         )
     else:
-        df.repartition(n_out).write.option("compression", "zstd").parquet(
-            new_data
-        )
-
-    if publish == "pointer":
-        # object-store-portable publish: republish the _CURRENT pointer
-        # file with one atomic replace; the original directory is never
-        # renamed and keeps serving as the retained prior generation
-        prior_data = current_data
-        pointer = f"{base}._CURRENT"
-        tmp_pointer = f"{base}._CURRENT.{uuid.uuid4().hex[:8]}"
-        with open(tmp_pointer, "w", encoding="utf-8") as fh:
-            fh.write(os.path.abspath(new_data))
-        os.replace(tmp_pointer, pointer)
-    elif os.path.islink(path):
-        # steady state: one atomic rename repoints readers; no window
-        tmp_link = f"{base}.compact.link.{uuid.uuid4().hex[:8]}"
-        os.symlink(os.path.abspath(new_data), tmp_link)
-        prior_data = current_data
-        os.replace(tmp_link, path)
-    else:
-        # first compaction: convert plain dir -> symlink (the one
-        # unavoidable non-atomic moment; sub-ms, never repeated)
-        tmp_link = f"{base}.compact.link.{uuid.uuid4().hex[:8]}"
-        os.symlink(os.path.abspath(new_data), tmp_link)
-        prior_data = f"{base}.compact.retired.{uuid.uuid4().hex[:8]}"
-        os.rename(path, prior_data)
-        os.rename(tmp_link, path)
-    # retention sweep: drop generations OLDER than the one just
-    # replaced; keep `prior_data` itself for draining readers
-    keep = {
-        os.path.abspath(p) for p in (new_data, prior_data, path)
-    }
-    prefix = os.path.basename(base) + ".compact."
-    parent = os.path.dirname(os.path.abspath(base)) or "."
-    for entry in os.listdir(parent):
-        full = os.path.join(parent, entry)
-        if (
-            entry.startswith(prefix)
-            and os.path.abspath(full) not in keep
-            and os.path.isdir(full)
-            and not os.path.islink(full)
-        ):
-            shutil.rmtree(full)
+        writer = df.repartition(n_out).write
+    new_data = publish_generation(
+        path, writer.option("compression", "zstd").parquet
+    )
     return {
         "files_before": len(files),
-        "files_after": len(_parquet_files(resolve_dataset_path(path))),
+        "files_after": len(_parquet_files(new_data)),
         "bytes": total_bytes,
-        "data_dir": os.path.abspath(new_data),
+        "data_dir": new_data,
     }
 
 

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import itertools
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame
 
@@ -110,8 +109,10 @@ def read_cdc_state(
 
     from pyspark.sql import functions as F
 
+    from etl_example_spark.sources.writers import resolve_dataset_path
+
     df = spark.read.parquet(
-        os.path.realpath(os.path.join(target_path, "current"))
+        resolve_dataset_path(os.path.join(target_path, "current"))
     )
     if "_deleted" in df.columns:
         df = df.filter(~F.coalesce(F.col("_deleted"), F.lit(False)))
@@ -133,13 +134,15 @@ def stream_cdc_to_parquet(
     to a parquet target table via ``foreachBatch`` + ``apply_cdc``.
 
     Per batch: read the current target (empty on first batch), merge the
-    batch's compacted changes, write the new state to a fresh directory,
-    then atomically repoint a ``current`` symlink — readers never observe
-    a partially-written state, and a failed batch leaves the previous
-    state intact (the write-temp-then-swap discipline of the batch
-    curation ops, applied incrementally). foreachBatch passes the epoch
-    id, so a replayed batch rewrites the same state (idempotent merge —
-    the exactly-once recipe for non-transactional sinks).
+    batch's compacted changes, and publish the merged state as a new
+    generation of ``<target_path>/current`` through
+    :func:`~etl_example_spark.sources.writers.publish_generation` — the
+    same publish and retention rule as compaction. Readers never observe
+    a partially-written state, a failed batch leaves the previous state
+    live, and at most the live state and the one it replaced stay on
+    disk. A replayed batch merges again into the current state
+    (idempotent merge — the exactly-once recipe for non-transactional
+    sinks).
 
     When ``sequence_col`` is given, the state *persists* the applied
     sequence per key plus a ``_deleted`` tombstone flag, so merges are
@@ -158,6 +161,10 @@ def stream_cdc_to_parquet(
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.merge import apply_cdc
+    from etl_example_spark.sources.writers import (
+        publish_generation,
+        resolve_dataset_path,
+    )
 
     os.makedirs(target_path, exist_ok=True)
     current = os.path.join(target_path, "current")
@@ -165,8 +172,9 @@ def stream_cdc_to_parquet(
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        if os.path.lexists(current):
-            target = spark.read.parquet(os.path.realpath(current))
+        state = resolve_dataset_path(current)
+        if os.path.isdir(state):
+            target = spark.read.parquet(state)
         else:
             target = batch.select(*target_cols).limit(0)
             if sequence_col is not None:
@@ -181,20 +189,10 @@ def stream_cdc_to_parquet(
             sequence_col=sequence_col,
             tombstone_col=tombstone,
         )
-        # unique dir per write: the merge plan READS the current state
-        # lazily, so writing into the directory being read (e.g. a
-        # replayed epoch id) would destroy the input mid-job. Old state
-        # dirs stay until a retention sweep — in-flight readers of the
-        # previous state are never invalidated.
-        out = os.path.join(
-            target_path, f"state_{epoch_id}_{uuid.uuid4().hex[:8]}"
-        )
-        merged.write.mode("overwrite").parquet(out)
-        tmp_link = os.path.join(target_path, f".current_{epoch_id}")
-        if os.path.lexists(tmp_link):
-            os.remove(tmp_link)
-        os.symlink(out, tmp_link)
-        os.replace(tmp_link, current)
+        # a fresh generation per write: the merge plan READS the current
+        # state lazily, so writing into the directory being read would
+        # destroy the input mid-job
+        publish_generation(current, merged.write.parquet)
 
     query = (
         changes.writeStream.foreachBatch(merge_batch)
@@ -207,7 +205,7 @@ def stream_cdc_to_parquet(
     )
     query.awaitTermination()
 
-    if not os.path.lexists(current):
+    if not os.path.isdir(resolve_dataset_path(current)):
         # empty source -> zero micro-batches ran; the target must still
         # exist (readers contract on `current`), as the empty table
         bootstrap = changes.select(*target_cols)
@@ -217,13 +215,7 @@ def stream_cdc_to_parquet(
         empty = changes.sparkSession.createDataFrame(
             [], bootstrap.schema
         )
-        out = os.path.join(target_path, "state_bootstrap")
-        empty.write.mode("overwrite").parquet(out)
-        tmp_link = os.path.join(target_path, ".current_bootstrap")
-        if os.path.lexists(tmp_link):
-            os.remove(tmp_link)
-        os.symlink(out, tmp_link)
-        os.replace(tmp_link, current)
+        publish_generation(current, empty.write.parquet)
 
 
 def make_neardup_probe(

@@ -215,6 +215,84 @@ def test_streaming_registry_queries_run(spark, sf_dir, name):
     assert df.count() >= 0
 
 
+# four landing files of (k, v, op, seq) change rows, one micro-batch each:
+# an upsert chain, a delete, a stale (lower-seq) upsert that must not win,
+# an upsert after a delete, and a delete of a key that stays deleted
+_CDC_FILES = [
+    [(1, 10, "U", 1), (2, 20, "U", 2), (3, 30, "U", 3)],
+    [(1, 11, "U", 4), (2, 0, "D", 5), (4, 40, "U", 6)],
+    [(3, 31, "U", 7), (2, 22, "U", 8), (1, 99, "U", 0)],
+    [(4, 0, "D", 9), (5, 50, "U", 10), (3, 32, "U", 11)],
+]
+
+
+def _cdc_landing(tmp_path) -> str:
+    """Write _CDC_FILES as 4 parquet files with increasing mtimes, so a
+    maxFilesPerTrigger=1 stream reads them in list order."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    land = tmp_path / "cdc_landing"
+    land.mkdir()
+    now = time.time()
+    for i, rows in enumerate(_CDC_FILES):
+        k, v, op, seq = zip(*rows)
+        name = str(land / f"c{i}.parquet")
+        pq.write_table(
+            pa.table(
+                {
+                    "k": pa.array(k, pa.int64()),
+                    "v": pa.array(v, pa.int64()),
+                    "op": list(op),
+                    "seq": pa.array(seq, pa.int64()),
+                }
+            ),
+            name,
+        )
+        os.utime(name, (now - 100 + i, now - 100 + i))
+    return str(land)
+
+
+def _drain_cdc(spark, landing: str, target: str) -> None:
+    from etl_example_spark.streaming.sinks import stream_cdc_to_parquet
+
+    stream_cdc_to_parquet(
+        spark.readStream.schema("k long, v long, op string, seq long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing),
+        target,
+        key_cols=["k"],
+        target_cols=["k", "v"],
+        sequence_col="seq",
+    )
+
+
+def _cdc_state(spark, target: str) -> dict:
+    from etl_example_spark.streaming.sinks import read_cdc_state
+
+    clean = read_cdc_state(spark, target, sequence_col="seq")
+    return {r.k: r.v for r in clean.collect()}
+
+
+def _last_writer_wins(rows) -> dict:
+    """Batch rebuild of the CDC state: per key, the highest-seq change
+    row; a delete removes the key."""
+    latest = {}
+    for k, v, op, seq in rows:
+        if k not in latest or seq > latest[k][2]:
+            latest[k] = (v, op, seq)
+    return {k: v for k, (v, op, _) in latest.items() if op != "D"}
+
+
+def _generation_dirs(target: str) -> list[str]:
+    return [
+        d for d in os.listdir(target)
+        if os.path.isdir(os.path.join(target, d))
+    ]
+
+
 class TestStreamCdcSink:
     def test_merge_state_swap_and_replay(self, spark, tmp_path, sf_dir):
         """Final target equals last-writer-wins over the change stream;
@@ -266,6 +344,68 @@ class TestStreamCdcSink:
         truth = {r.user_id: r.value for r in latest.collect()}
         assert first == truth
         assert run(target) == first  # replay is a no-op state
+
+    def test_drained_target_keeps_two_generations(self, spark, tmp_path):
+        """Four micro-batches publish four states; the shared retention
+        rule keeps only the live one and the one it replaced, and the
+        drained state is last-writer-wins over every change row."""
+        landing = _cdc_landing(tmp_path)
+        target = str(tmp_path / "cdc")
+        _drain_cdc(spark, landing, target)
+
+        assert len(_generation_dirs(target)) <= 2
+        batch = [tuple(r) for r in spark.read.parquet(landing).collect()]
+        assert _cdc_state(spark, target) == _last_writer_wins(batch)
+
+    def test_failed_publish_keeps_prior_state_and_rerun_recovers(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Fault injection: the 3rd micro-batch's pointer rename raises.
+        The query fails and readers see exactly the state after the first
+        two files. Re-running the sink into the same target drains to the
+        batch rebuild and sweeps the unpublished generation."""
+        from pyspark.errors import StreamingQueryException
+
+        landing = _cdc_landing(tmp_path)
+        target = str(tmp_path / "cdc")
+        real_replace = os.replace
+        publishes = []
+
+        def fail_third_publish(src, dst, *a, **k):
+            if str(dst).endswith("._CURRENT"):
+                publishes.append(dst)
+                if len(publishes) == 3:
+                    raise OSError("injected: publish of micro-batch 3")
+            return real_replace(src, dst, *a, **k)
+
+        monkeypatch.setattr(os, "replace", fail_third_publish)
+        with pytest.raises(StreamingQueryException, match="injected"):
+            _drain_cdc(spark, landing, target)
+        monkeypatch.undo()
+        assert len(publishes) == 3
+        assert _cdc_state(spark, target) == _last_writer_wins(
+            _CDC_FILES[0] + _CDC_FILES[1]
+        )
+
+        _drain_cdc(spark, landing, target)
+        batch = [tuple(r) for r in spark.read.parquet(landing).collect()]
+        assert _cdc_state(spark, target) == _last_writer_wins(batch)
+        assert len(_generation_dirs(target)) <= 2
+
+    def test_empty_source_publishes_the_empty_state(self, spark, tmp_path):
+        """Zero micro-batches run over an empty landing dir; the sink
+        still publishes one generation, the empty table with the state's
+        columns."""
+        from etl_example_spark.streaming.sinks import read_cdc_state
+
+        landing = tmp_path / "empty_landing"
+        landing.mkdir()
+        target = str(tmp_path / "cdc")
+        _drain_cdc(spark, str(landing), target)
+        assert len(_generation_dirs(target)) == 1
+        state = read_cdc_state(spark, target)
+        assert state.columns == ["k", "v", "seq"]
+        assert state.count() == 0
 
 
 class TestStreamNearDupCrossBatch:
@@ -713,8 +853,7 @@ def test_stream_index_compaction_collapses_files(spark, sf_dir):
             .select("vec_id", "j", "code").collect())
     )
     stats = compact_small_files(
-        spark, codes_dir, target_file_bytes=128 * 1024 * 1024,
-        publish="pointer",
+        spark, codes_dir, target_file_bytes=128 * 1024 * 1024
     )
     assert stats["files_before"] == before_files
     assert stats["files_after"] == 1

@@ -170,7 +170,10 @@ def test_observation_metrics(spark, sf_dir):
 
 class TestCompaction:
     def test_compacts_small_files_preserving_rows(self, spark, tmp_path):
-        from etl_example_spark.sources.writers import compact_small_files
+        from etl_example_spark.sources.writers import (
+            compact_small_files,
+            resolve_dataset_path,
+        )
 
         path = str(tmp_path / "landing")
         df = spark.range(10_000).selectExpr(
@@ -188,59 +191,59 @@ class TestCompaction:
         assert stats["files_before"] == 64
         assert stats["files_after"] == 1  # well under one target file
 
-        after = spark.read.parquet(path)
+        assert resolve_dataset_path(path) == stats["data_dir"]
+        after = spark.read.parquet(resolve_dataset_path(path))
         assert after.count() == before_rows
         assert after.agg({"id": "sum"}).collect()[0][0] == before_sum
 
     def test_swap_is_repoint_with_retention(self, spark, tmp_path):
-        """Write-new-then-repoint: after compaction `path` is a symlink
-        to a fresh versioned dir, the replaced generation stays on disk
-        for draining readers, and a SECOND compaction is a pure atomic
-        repoint that sweeps only generations older than the one it just
-        replaced."""
-        import os
-
-        from etl_example_spark.sources.writers import compact_small_files
+        """Write-new-then-repoint: compaction writes a fresh generation
+        dir and repoints `landing._CURRENT` at it, the replaced generation
+        stays on disk for draining readers, and each later compaction
+        repoints again and sweeps only generations older than the one it
+        just replaced."""
+        from etl_example_spark.sources.writers import (
+            compact_small_files,
+            resolve_dataset_path,
+        )
 
         path = str(tmp_path / "landing")
+        pointer = str(tmp_path / "landing._CURRENT")
         spark.range(2_000).repartition(16).write.parquet(path)
 
         s1 = compact_small_files(spark, path, target_file_bytes=1 << 30)
-        assert os.path.islink(path)
-        assert os.path.realpath(path) == s1["data_dir"]
-        # old generation retained: a reader holding the old file listing
-        # still sees every row
-        retired = [
-            d
-            for d in os.listdir(tmp_path)
-            if d.startswith("landing.compact.retired.")
-        ]
-        assert len(retired) == 1
-        assert (
-            spark.read.parquet(str(tmp_path / retired[0])).count() == 2_000
-        )
+        with open(pointer, encoding="utf-8") as fh:
+            assert fh.read() == s1["data_dir"]
+        assert resolve_dataset_path(path) == s1["data_dir"]
+        # the replaced generation (the original dir) is retained: a
+        # reader holding the old file listing still sees every row
+        assert spark.read.parquet(path).count() == 2_000
 
         gen1 = s1["data_dir"]
         s2 = compact_small_files(spark, path, target_file_bytes=1 << 30)
-        assert os.path.realpath(path) == s2["data_dir"] != gen1
+        assert resolve_dataset_path(path) == s2["data_dir"] != gen1
         assert os.path.isdir(gen1)  # just-replaced generation retained
-        # the original plain-dir generation (two back) is swept
-        assert not any(
-            d.startswith("landing.compact.retired.")
-            for d in os.listdir(tmp_path)
+        s3 = compact_small_files(spark, path, target_file_bytes=1 << 30)
+        assert resolve_dataset_path(path) == s3["data_dir"]
+        assert os.path.isdir(s2["data_dir"])  # just-replaced, retained
+        assert not os.path.isdir(gen1)  # two back: swept
+        assert sorted(
+            d for d in os.listdir(tmp_path) if d.startswith("landing")
+        ) == sorted(
+            ["landing", "landing._CURRENT"]
+            + [os.path.basename(s["data_dir"]) for s in (s2, s3)]
         )
-        assert spark.read.parquet(path).count() == 2_000
+        assert (
+            spark.read.parquet(resolve_dataset_path(path)).count() == 2_000
+        )
 
     def test_pointer_publish_mode_without_symlinks(
         self, spark, tmp_path, monkeypatch
     ):
-        """publish='pointer' — the object-store-portable swap: a
-        _CURRENT pointer file names the live generation and is
-        republished by atomic rename. Must work end-to-end with
-        symlink creation DISABLED (the filesystems this mode exists
-        for), retain the prior generation, and sweep older ones."""
-        import os
-
+        """The publish needs no symlink: the `_CURRENT` pointer file is
+        written and renamed into place, so compaction works end-to-end
+        with symlink creation DISABLED, never renames the original dir,
+        retains the prior generation, and sweeps older ones."""
         from etl_example_spark.sources.writers import (
             compact_small_files,
             resolve_dataset_path,
@@ -254,9 +257,7 @@ class TestCompaction:
         path = str(tmp_path / "landing")
         spark.range(2_000).repartition(16).write.parquet(path)
 
-        s1 = compact_small_files(
-            spark, path, target_file_bytes=1 << 30, publish="pointer"
-        )
+        s1 = compact_small_files(spark, path, target_file_bytes=1 << 30)
         pointer = str(tmp_path / "landing._CURRENT")
         assert os.path.isfile(pointer)
         assert not os.path.islink(path)  # original dir never renamed
@@ -270,14 +271,10 @@ class TestCompaction:
         assert spark.read.parquet(path).count() == 2_000
 
         gen1 = s1["data_dir"]
-        s2 = compact_small_files(
-            spark, path, target_file_bytes=1 << 30, publish="pointer"
-        )
+        s2 = compact_small_files(spark, path, target_file_bytes=1 << 30)
         assert resolve_dataset_path(path) == s2["data_dir"] != gen1
         assert os.path.isdir(gen1)  # just-replaced generation retained
-        s3 = compact_small_files(
-            spark, path, target_file_bytes=1 << 30, publish="pointer"
-        )
+        s3 = compact_small_files(spark, path, target_file_bytes=1 << 30)
         assert resolve_dataset_path(path) == s3["data_dir"]
         assert os.path.isdir(s2["data_dir"])  # prior kept
         assert not os.path.isdir(gen1)  # two-back generation swept
@@ -285,10 +282,64 @@ class TestCompaction:
             spark.read.parquet(resolve_dataset_path(path)).count() == 2_000
         )
 
-    def test_partitioned_compaction_keeps_layout(self, spark, tmp_path):
-        import os
+    def test_failed_publish_leaves_the_live_generation(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Fault injection at the swap: when the pointer's rename raises,
+        compaction raises, readers stay on the live generation with its
+        rows, no temp pointer is left behind, and the next compaction
+        succeeds and sweeps the generation that was never published."""
+        from etl_example_spark.sources.writers import (
+            compact_small_files,
+            resolve_dataset_path,
+        )
 
-        from etl_example_spark.sources.writers import compact_small_files
+        path = str(tmp_path / "landing")
+        spark.range(2_000).repartition(16).write.parquet(path)
+        live = compact_small_files(spark, path, target_file_bytes=1 << 30)[
+            "data_dir"
+        ]
+
+        def live_rows():
+            df = spark.read.parquet(resolve_dataset_path(path))
+            return sorted(r.id for r in df.collect())
+
+        rows = live_rows()
+        real_replace = os.replace
+
+        def fail_once(src, dst, *a, **k):
+            if str(dst).endswith("._CURRENT"):
+                monkeypatch.setattr(os, "replace", real_replace)
+                raise OSError("injected: pointer rename failed")
+            return real_replace(src, dst, *a, **k)
+
+        monkeypatch.setattr(os, "replace", fail_once)
+        with pytest.raises(OSError, match="injected"):
+            compact_small_files(spark, path, target_file_bytes=1 << 30)
+        assert resolve_dataset_path(path) == live
+        assert live_rows() == rows
+        assert not [
+            d for d in os.listdir(tmp_path)
+            if d.startswith("landing._CURRENT.")
+        ]
+        (orphan,) = [
+            os.path.join(tmp_path, d)
+            for d in os.listdir(tmp_path)
+            if d.startswith("landing.gen.")
+            and os.path.join(tmp_path, d) != live
+        ]
+
+        s3 = compact_small_files(spark, path, target_file_bytes=1 << 30)
+        assert resolve_dataset_path(path) == s3["data_dir"]
+        assert not os.path.exists(orphan)
+        assert os.path.isdir(live)  # the generation it replaced
+        assert live_rows() == rows
+
+    def test_partitioned_compaction_keeps_layout(self, spark, tmp_path):
+        from etl_example_spark.sources.writers import (
+            compact_small_files,
+            resolve_dataset_path,
+        )
 
         path = str(tmp_path / "part")
         df = spark.range(5_000).selectExpr("id", "id % 3 AS k")
@@ -297,11 +348,37 @@ class TestCompaction:
             spark, path, target_file_bytes=10 * 1024 * 1024, partition_col="k"
         )
         assert stats["files_after"] < stats["files_before"]
+        current = resolve_dataset_path(path)
+        assert current == stats["data_dir"]
         # hive-style partition dirs survive the rewrite
         assert sorted(
-            d for d in os.listdir(path) if d.startswith("k=")
+            d for d in os.listdir(current) if d.startswith("k=")
         ) == ["k=0", "k=1", "k=2"]
-        assert spark.read.parquet(path).count() == 5_000
+        assert spark.read.parquet(current).count() == 5_000
+
+
+def test_only_stream_staging_creates_symlinks():
+    """One publish primitive: a dataset generation goes live through its
+    `_CURRENT` pointer (`writers.publish_generation`), never through a
+    symlink swap. The one symlink left is `streaming/sources._symlink_once`,
+    which links a file stream's staging dir and publishes no generation."""
+    import ast
+    import pathlib
+
+    import etl_example_spark
+
+    def names_symlink(node) -> bool:
+        if isinstance(node, ast.Attribute):
+            return node.attr == "symlink"
+        return isinstance(node, ast.alias) and node.name == "symlink"
+
+    root = pathlib.Path(etl_example_spark.__file__).parent
+    modules = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if any(map(names_symlink, ast.walk(ast.parse(p.read_text()))))
+    )
+    assert modules == ["streaming/sources.py"]
 
 
 class TestCatalogBackup:
