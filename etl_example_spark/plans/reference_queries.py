@@ -58,6 +58,8 @@ def _q1(sellout: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
     return (
         sellout.groupBy(F.date_trunc("week", "daily").alias("semana"))
         .agg(F.sum("quantity").alias("unidades"))
+        # a few dozen rows: sorted in one partition, with no range exchange
+        .coalesce(1)
         .orderBy("semana")
     )
 
@@ -94,6 +96,7 @@ def _q4(sellout: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
             "chain_name", F.date_format("daily", "EEEE").alias("dia_semana")
         )
         .agg(F.sum("quantity").alias("unidades"))
+        .coalesce(1)
         .orderBy("chain_name", F.desc("unidades"))
     )
 

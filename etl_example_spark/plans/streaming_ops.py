@@ -10,6 +10,10 @@ watermark past the last event), the emitted set is exactly the windows
 with ``window_end <= max(ts) - delay`` — so late-data/watermark behavior
 itself is hash-checked against an independent engine, not just eyeballed.
 
+The maintenance builders (st45, st48–st54, st58, st61, st62,
+st64–st69) instead keep epoch-keyed parquet slices: each is one
+``streaming/sinks.maintain`` call with its per-micro-batch ``step``.
+
 Implementations: etl_example_spark/streaming/{sources,windows,stateful,
 sinks}.py. Batch twins: q20 (sessionize), q21 (tumbling) in
 plans/relational.py.
@@ -24,7 +28,11 @@ from etl_example_spark.plans.registry import register
 from etl_example_spark.operators.sketches import (
     CMS_HEAVY_HITTERS_ORACLE,
 )
-from etl_example_spark.streaming.sinks import run_to_memory
+from etl_example_spark.streaming.sinks import (
+    maintain,
+    run_to_memory,
+    scratch_dir,
+)
 from etl_example_spark.streaming.sources import read_events_stream
 from etl_example_spark.streaming.stateful import first_seen_dedup
 from etl_example_spark.streaming.windows import (
@@ -335,6 +343,85 @@ def st42_stream_static_enrichment(
     return result.orderBy("c_mktsegment")
 
 
+_SPAN_SCHEMA = "doc_id long, span_start long, span_end long, span_len long"
+
+
+def _stream_in_four_files(df: DataFrame, schema) -> DataFrame:
+    """``df`` landed as FOUR parquet files in a scratch dir and read back
+    as a file stream of one file per micro-batch, so a maintenance loop
+    runs over real multi-epoch state, not a single trivial slice."""
+    landing = scratch_dir("landing_")
+    df.repartition(4).write.mode("overwrite").parquet(landing)
+    return (
+        df.sparkSession.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", 1)
+        .load(landing)
+    )
+
+
+def _stage_centroids(corpus: DataFrame) -> str:
+    """Stage the frozen IVF quantizer to scratch parquet: the corpus's
+    16 lowest-id vectors as (centroid_id, centroid_vec)."""
+    from pyspark.sql import functions as F
+
+    cents_dir = scratch_dir("ivf_quantizer_")
+    (
+        corpus.orderBy("vec_id")
+        .limit(16)
+        .select(
+            F.col("vec_id").alias("centroid_id"),
+            F.col("embedding").alias("centroid_vec"),
+        )
+        .write.mode("overwrite")
+        .parquet(cents_dir)
+    )
+    return cents_dir
+
+
+def _stage_ivf_index(corpus: DataFrame) -> tuple[str, str]:
+    """Stage the frozen IVF serving artifacts of ``corpus``: the
+    quantizer (:func:`_stage_centroids`) and the assignment table
+    written ``partitionBy(centroid_id)``, so a per-batch cell join
+    prunes to the probed cells' files. Zero-norm vectors carry a NULL
+    cell and can never be probed candidates, so the artifact excludes
+    them (the oracles' assignment CTEs drop them the same way)."""
+    from pyspark.sql import functions as F
+
+    from etl_example_spark.operators.similarity import (
+        ivf_assign_with_centroids,
+    )
+
+    cents_dir = _stage_centroids(corpus)
+    index_dir = scratch_dir("ivf_cells_")
+    (
+        ivf_assign_with_centroids(
+            corpus, corpus.sparkSession.read.parquet(cents_dir)
+        )
+        .filter(F.col("centroid_id").isNotNull())
+        .write.mode("overwrite")
+        .partitionBy("centroid_id")
+        .parquet(index_dir)
+    )
+    return cents_dir, index_dir
+
+
+def _read_cell_index(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The cell-partitioned assignment artifact of :func:`_stage_ivf_index`.
+    A partitioned write of no rows leaves no schema-bearing file, so an
+    empty artifact reads back as an explicit empty frame."""
+    import glob
+    import os
+
+    if not glob.glob(os.path.join(index_dir, "centroid_id=*")):
+        return spark.createDataFrame(
+            [],
+            "vec_id long, embedding array<float>, c_sim double, "
+            "centroid_id long",
+        )
+    return spark.read.parquet(index_dir)
+
+
 @register(
     "st43_stream_cdc_apply",
     "Streaming CDC-merge sink: the event stream interpreted as change "
@@ -362,8 +449,6 @@ def st42_stream_static_enrichment(
     category="streaming",
 )
 def st43_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.streaming.sinks import (
@@ -384,7 +469,7 @@ def st43_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("op"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("seq"),
     )
-    target_path = _tempfile.mkdtemp(prefix="cdc_target_")
+    target_path = scratch_dir("cdc_target_")
     stream_cdc_to_parquet(
         changes,
         target_path,
@@ -491,16 +576,11 @@ def st44_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="streaming",
 )
 def st45_stream_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
+    from etl_example_spark.operators.dedup import minhash_index
     from etl_example_spark.sources.loaders import load_table
-    from etl_example_spark.streaming.sinks import (
-        make_neardup_probe,
-        seed_neardup_index,
-    )
+    from etl_example_spark.streaming.sinks import neardup_step
     from etl_example_spark.streaming.sources import read_documents_stream
 
     static_docs = load_table(spark, sf_dir, "documents").filter(
@@ -509,45 +589,20 @@ def st45_stream_neardup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 5 == 0
     )
-    out_dir = _tempfile.mkdtemp(prefix="neardup_pairs_")
-
-    # The LSH index lives as two epoch-partitioned parquet tables,
-    # seeded from the static corpus at epoch=-1; every micro-batch
-    # writes its own epoch=<id> slice of digests/sets, so a later
-    # batch's documents are compared against all earlier batches too
-    # (new×new across micro-batches), never just the static corpus —
-    # and a replayed epoch OVERWRITES its slice instead of re-appending
-    # (idempotent under micro-batch retry). Per batch the corpus text
-    # is untouched — probe cost is O(batch) + the band-equality join
+    # The LSH index lives as two epoch-sliced parquet tables, seeded
+    # from the static corpus at epoch=-1; every micro-batch adds its own
+    # slice of digests/sets, so a later batch's documents are compared
+    # against all earlier batches too (new×new across micro-batches),
+    # never just the static corpus. Per batch the corpus text is
+    # untouched — probe cost is O(batch) + the band-equality join
     # against the stored index.
-    idx_dir = _tempfile.mkdtemp(prefix="neardup_idx_")
-    bands_dir = os.path.join(idx_dir, "bands")
-    sets_dir = os.path.join(idx_dir, "sets")
-    seed_neardup_index(static_docs, bands_dir, sets_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(
-            make_neardup_probe(bands_dir, sets_dir, out_dir, threshold=0.6)
-        )
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_ndp_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    found = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(out_dir)
-        for f in files
-    )
-    if not found:
-        return spark.createDataFrame([], "doc_a long, doc_b long")
-    return (
-        spark.read.parquet(out_dir)
-        .drop("epoch")
-        .orderBy("doc_a", "doc_b")
-    )
+    pairs = maintain(
+        stream,
+        neardup_step(threshold=0.6),
+        {"pairs": "doc_a long, doc_b long"},
+        seed=dict(zip(("bands", "sets"), minhash_index(static_docs))),
+    )["pairs"]
+    return pairs.orderBy("doc_a", "doc_b")
 
 
 @register(
@@ -704,44 +759,25 @@ def st47_stream_quality_gate(
 def st48_stream_countmin_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators import sketches, text
     from etl_example_spark.sources.loaders import load_table
     from etl_example_spark.streaming.sources import read_documents_stream
 
-    grid_dir = _tempfile.mkdtemp(prefix="cms_grid_")
     stream = read_documents_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.length(F.trim("text")) > 0)
 
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
+    def update(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         toks = batch_df.select(
             F.explode(text.tokens("text")).alias("item")
         )
-        sketches.countmin_build(toks).write.mode("overwrite").parquet(
-            os.path.join(grid_dir, f"epoch={epoch_id}")
-        )
+        return {"grid": sketches.countmin_build(toks)}
 
-    q = (
-        stream.writeStream.foreachBatch(update)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_cms_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    try:
-        epoch_grids = spark.read.parquet(grid_dir)
-    except Exception:  # noqa: BLE001 — no batch ever fired (empty landing dir)
-        epoch_grids = spark.createDataFrame(
-            [], "row int, col long, cnt long"
-        )
+    epoch_grids = maintain(
+        stream, update, {"grid": "row int, col long, cnt long"}
+    )["grid"]
     merged = epoch_grids.groupBy("row", "col").agg(
         F.sum("cnt").alias("cnt")
     )
@@ -773,9 +809,6 @@ def st48_stream_countmin_maintenance(
 def st49_stream_ivf_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.similarity import (
@@ -787,49 +820,27 @@ def st49_stream_ivf_maintenance(
     static = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 4 != 0
     )
-    cents_dir = _tempfile.mkdtemp(prefix="ivf_quantizer_")
-    assign_dir = _tempfile.mkdtemp(prefix="ivf_assign_")
     # the stored quantizer artifact: centroids written once, read back
     # per micro-batch — assignment never depends on driver state
-    (
-        static.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-        .write.mode("overwrite")
-        .parquet(cents_dir)
-    )
+    cents_dir = _stage_centroids(static)
     cents = spark.read.parquet(cents_dir)
-    ivf_assign_with_centroids(static, cents).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(assign_dir, "epoch=-1"))
 
     stream = read_embeddings_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.col("vec_id") % 4 == 0)
 
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
+    def update(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         stored_cents = batch_df.sparkSession.read.parquet(cents_dir)
-        ivf_assign_with_centroids(batch_df, stored_cents).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(assign_dir, f"epoch={epoch_id}"))
+        return {"assign": ivf_assign_with_centroids(batch_df, stored_cents)}
 
-    q = (
-        stream.writeStream.foreachBatch(update)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_ivf_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    return (
-        spark.read.parquet(assign_dir)
-        .select("vec_id", "centroid_id", "c_sim")
-        .orderBy("vec_id")
+    assigned = maintain(
+        stream,
+        update,
+        {},
+        seed={"assign": ivf_assign_with_centroids(static, cents)},
+    )["assign"]
+    return assigned.select("vec_id", "centroid_id", "c_sim").orderBy(
+        "vec_id"
     )
 
 
@@ -853,9 +864,6 @@ def st49_stream_ivf_maintenance(
 def st50_stream_pq_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.similarity import (
@@ -868,15 +876,13 @@ def st50_stream_pq_maintenance(
     static = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 4 != 0
     )
-    cb_dir = _tempfile.mkdtemp(prefix="pq_codebooks_")
-    codes_dir = _tempfile.mkdtemp(prefix="pq_codes_")
+    cb_dir = scratch_dir("pq_codebooks_")
     # stored quantizer artifact: codebooks written once (iters=0 keeps
     # the seeding deterministic and oracle-replayable), read back per
     # micro-batch
     pq_train(static, m=8, n_codes=16, iters=0).write.mode(
         "overwrite"
     ).parquet(cb_dir)
-    cb = spark.read.parquet(cb_dir)
 
     def encode_exploded(batch_df: DataFrame) -> DataFrame:
         stored_cb = batch_df.sparkSession.read.parquet(cb_dir)
@@ -884,34 +890,16 @@ def st50_stream_pq_maintenance(
             batch_df, stored_cb, m=8, round_digits=6
         ).select("vec_id", F.posexplode("codes").alias("j", "code"))
 
-    encode_exploded(static).write.mode("overwrite").parquet(
-        os.path.join(codes_dir, "epoch=-1")
-    )
-
     stream = read_embeddings_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.col("vec_id") % 4 == 0)
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        encode_exploded(batch_df).write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"epoch={epoch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(update)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_pq_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    return (
-        spark.read.parquet(codes_dir)
-        .select("vec_id", "j", "code")
-        .orderBy("vec_id", "j")
-    )
+    codes = maintain(
+        stream,
+        lambda batch_df, older: {"codes": encode_exploded(batch_df)},
+        {},
+        seed={"codes": encode_exploded(static)},
+    )["codes"]
+    return codes.select("vec_id", "j", "code").orderBy("vec_id", "j")
 
 
 @register(
@@ -939,9 +927,6 @@ def st50_stream_pq_maintenance(
 def st61_stream_residual_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.similarity import (
@@ -954,9 +939,8 @@ def st61_stream_residual_maintenance(
     static = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 4 != 0
     )
-    cents_dir = _tempfile.mkdtemp(prefix="respq_centroids_")
-    cb_dir = _tempfile.mkdtemp(prefix="respq_codebooks_")
-    codes_dir = _tempfile.mkdtemp(prefix="respq_codes_")
+    cents_dir = scratch_dir("respq_centroids_")
+    cb_dir = scratch_dir("respq_codebooks_")
     # stored quantizer pair: written once (iters=0 keeps the codebook
     # seeding deterministic and oracle-replayable), read back per batch
     cents, cb = ivfpq_residual_train(
@@ -979,33 +963,17 @@ def st61_stream_residual_maintenance(
             F.posexplode("codes").alias("j", "code"),
         )
 
-    encode_exploded(static).write.mode("overwrite").parquet(
-        os.path.join(codes_dir, "epoch=-1")
-    )
-
     stream = read_embeddings_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.col("vec_id") % 4 == 0)
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        encode_exploded(batch_df).write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"epoch={epoch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(update)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_respq_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    return (
-        spark.read.parquet(codes_dir)
-        .select("vec_id", "centroid_id", "j", "code")
-        .orderBy("vec_id", "j")
+    codes = maintain(
+        stream,
+        lambda batch_df, older: {"codes": encode_exploded(batch_df)},
+        {},
+        seed={"codes": encode_exploded(static)},
+    )["codes"]
+    return codes.select("vec_id", "centroid_id", "j", "code").orderBy(
+        "vec_id", "j"
     )
 
 
@@ -1080,9 +1048,6 @@ def st61_stream_residual_maintenance(
 def st51_stream_span_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.dedup import (
@@ -1095,54 +1060,30 @@ def st51_stream_span_maintenance(
     static = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 != 0
     )
-    idx_dir = _tempfile.mkdtemp(prefix="span_idx_")
-    spans_dir = _tempfile.mkdtemp(prefix="span_out_")
-    span_index(static, span_tokens=8).write.mode("overwrite").parquet(
-        os.path.join(idx_dir, "epoch=-1")
-    )
-
     stream = read_documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 5 == 0
     )
 
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
+    def update(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         # membership is all the probe needs, so the union of epoch
         # slices (same hash possibly in several epochs) IS the index;
         # merge_span_index consolidates offline when slices pile up
-        stored = sess.read.parquet(idx_dir)
-        probe_span_index(stored, batch_df, span_tokens=8).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(spans_dir, f"epoch={epoch_id}"))
-        span_index(batch_df, span_tokens=8).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(idx_dir, f"epoch={epoch_id}"))
+        return {
+            "spans": probe_span_index(
+                older("idx"), batch_df, span_tokens=8
+            ),
+            "idx": span_index(batch_df, span_tokens=8),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(update)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_span_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    found = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(spans_dir)
-        for f in files
-    )
-    if not found:
-        return spark.createDataFrame(
-            [],
-            "doc_id long, span_start long, span_end long, span_len long",
-        )
-    return (
-        spark.read.parquet(spans_dir)
-        .select("doc_id", "span_start", "span_end", "span_len")
-        .orderBy("doc_id", "span_start")
-    )
+    spans = maintain(
+        stream,
+        update,
+        {"spans": _SPAN_SCHEMA},
+        seed={"idx": span_index(static, span_tokens=8)},
+    )["spans"]
+    return spans.select(
+        "doc_id", "span_start", "span_end", "span_len"
+    ).orderBy("doc_id", "span_start")
 
 
 @register(
@@ -1208,9 +1149,6 @@ def st51_stream_span_maintenance(
 def st52_stream_line_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.dedup import (
@@ -1223,56 +1161,30 @@ def st52_stream_line_maintenance(
     static = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 5 != 0
     )
-    idx_dir = _tempfile.mkdtemp(prefix="line_idx_")
-    out_dir = _tempfile.mkdtemp(prefix="line_out_")
-    line_index(static).write.mode("overwrite").parquet(
-        os.path.join(idx_dir, "epoch=-1")
-    )
-
     stream = read_documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 5 == 0
     )
 
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
+    def update(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         # membership is all the probe needs — the union of epoch
         # slices IS the index; compaction happens offline
-        stored = sess.read.parquet(idx_dir)
-        probe_line_index(stored, batch_df).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
-        line_index(batch_df).write.mode("overwrite").parquet(
-            os.path.join(idx_dir, f"epoch={epoch_id}")
-        )
+        return {
+            "lines": probe_line_index(older("idx"), batch_df),
+            "idx": line_index(batch_df),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(update)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_line_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    found = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(out_dir)
-        for f in files
-    )
-    if not found:
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_lines long, kept_lines long, "
-            "dropped_lines long, cleaned_fp string",
-        )
-    return (
-        spark.read.parquet(out_dir)
-        .select(
-            "doc_id", "n_lines", "kept_lines", "dropped_lines", "cleaned_fp"
-        )
-        .orderBy("doc_id")
-    )
+    lines = maintain(
+        stream,
+        update,
+        {
+            "lines": "doc_id long, n_lines long, kept_lines long, "
+            "dropped_lines long, cleaned_fp string"
+        },
+        seed={"idx": line_index(static)},
+    )["lines"]
+    return lines.select(
+        "doc_id", "n_lines", "kept_lines", "dropped_lines", "cleaned_fp"
+    ).orderBy("doc_id")
 
 
 @register(
@@ -1339,9 +1251,6 @@ def st52_stream_line_maintenance(
 def st53_stream_decontaminate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.dedup import (
@@ -1354,50 +1263,23 @@ def st53_stream_decontaminate(
     bench = load_table(spark, sf_dir, "documents").filter(
         F.col("source") == "src0"
     )
-    idx_dir = _tempfile.mkdtemp(prefix="bench_idx_")
-    out_dir = _tempfile.mkdtemp(prefix="decon_out_")
-    benchmark_hash_index(bench, span_tokens=13).write.mode(
-        "overwrite"
-    ).parquet(idx_dir)
-
     stream = read_documents_stream(spark, sf_dir).filter(
         F.col("source") != "src0"
     )
-
-    def probe(batch_df: DataFrame, epoch_id: int) -> None:
-        sess = batch_df.sparkSession
-        stored = sess.read.parquet(idx_dir)
-        probe_benchmark_hashes(
-            stored, batch_df, span_tokens=13
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_dec_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    found = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(out_dir)
-        for f in files
-    )
-    if not found:
-        return spark.createDataFrame(
-            [],
-            "doc_id long, span_start long, span_end long, span_len long",
-        )
-    return (
-        spark.read.parquet(out_dir)
-        .select("doc_id", "span_start", "span_end", "span_len")
-        .orderBy("doc_id", "span_start")
-    )
+    # the benchmark index is only ever the seed slice: no batch adds to it
+    spans = maintain(
+        stream,
+        lambda batch_df, older: {
+            "spans": probe_benchmark_hashes(
+                older("idx"), batch_df, span_tokens=13
+            )
+        },
+        {"spans": _SPAN_SCHEMA},
+        seed={"idx": benchmark_hash_index(bench, span_tokens=13)},
+    )["spans"]
+    return spans.select(
+        "doc_id", "span_start", "span_end", "span_len"
+    ).orderBy("doc_id", "span_start")
 
 
 def _run_sq8_maintenance(spark: SparkSession, sf_dir: str) -> str:
@@ -1405,9 +1287,6 @@ def _run_sq8_maintenance(spark: SparkSession, sf_dir: str) -> str:
     the identical ingest and then compact: seed the frozen (lo, hi)
     bounds + the existing corpus's codes to parquet, stream the new
     batches into per-epoch slices, return the artifact directory."""
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators.similarity import (
@@ -1420,8 +1299,7 @@ def _run_sq8_maintenance(spark: SparkSession, sf_dir: str) -> str:
     static = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") % 4 != 0
     )
-    bounds_dir = _tempfile.mkdtemp(prefix="sq8_bounds_")
-    codes_dir = _tempfile.mkdtemp(prefix="sq8_codes_")
+    bounds_dir = scratch_dir("sq8_bounds_")
     # stored quantizer artifact: the 1-row (lo, hi) bounds written
     # once, read back per micro-batch — the frozen quantizer
     sq8_train(static).write.mode("overwrite").parquet(bounds_dir)
@@ -1432,30 +1310,15 @@ def _run_sq8_maintenance(spark: SparkSession, sf_dir: str) -> str:
             "vec_id", F.posexplode("codes").alias("j", "code")
         )
 
-    encode_exploded(static).write.mode("overwrite").parquet(
-        os.path.join(codes_dir, "epoch=-1")
-    )
-
     stream = read_embeddings_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.col("vec_id") % 4 == 0)
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        encode_exploded(batch_df).write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"epoch={epoch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(update)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_sq8_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return codes_dir
-
+    return maintain(
+        stream,
+        lambda batch_df, older: {"codes": encode_exploded(batch_df)},
+        {},
+        seed={"codes": encode_exploded(static)},
+    ).paths["codes"]
 
 
 @register(
@@ -1900,45 +1763,17 @@ def st57_stream_quota_admission(
 def st58_stream_phrase_route(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from etl_example_spark.operators import text
     from etl_example_spark.streaming.sources import read_documents_stream
 
-    out_dir = _tempfile.mkdtemp(prefix="phrase_route_")
-    stream = read_documents_stream(spark, sf_dir)
-
-    def route(batch_df: DataFrame, epoch_id: int) -> None:
-        text.phrase_search(
-            batch_df, ["slow", "hash", "batch"]
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(route)
-        .option(
-            "checkpointLocation",
-            _tempfile.mkdtemp(prefix="ckpt_phrase_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    found = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(out_dir)
-        for f in files
-    )
-    if not found:
-        return spark.createDataFrame([], "doc_id long, n_hits long")
-    return (
-        spark.read.parquet(out_dir)
-        .select("doc_id", "n_hits")
-        .orderBy("doc_id")
-    )
+    hits = maintain(
+        read_documents_stream(spark, sf_dir),
+        lambda batch_df, older: {
+            "hits": text.phrase_search(batch_df, ["slow", "hash", "batch"])
+        },
+        {"hits": "doc_id long, n_hits long"},
+    )["hits"]
+    return hits.select("doc_id", "n_hits").orderBy("doc_id")
 
 
 @register(
@@ -2113,84 +1948,39 @@ IVF_BATCH_SERVE_ORACLE = """
     category="streaming",
 )
 def st64_stream_ivf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators import similarity
     from etl_example_spark.sources.loaders import load_table
     from etl_example_spark.streaming.sources import read_embeddings_stream
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents_dir = _tempfile.mkdtemp(prefix="ivf_serve_quantizer_")
-    assign_dir = _tempfile.mkdtemp(prefix="ivf_serve_index_")
-    out_dir = _tempfile.mkdtemp(prefix="ivf_serve_out_")
-    (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-        .write.mode("overwrite")
-        .parquet(cents_dir)
+    cents_dir, index_dir = _stage_ivf_index(
+        load_table(spark, sf_dir, "embeddings")
     )
-    stored_cents = spark.read.parquet(cents_dir)
-    # zero-norm corpus vectors carry a NULL cell — they can never be
-    # probed candidates, so the serving artifact excludes them (the
-    # oracle's asg CTE drops them the same way)
-    (
-        similarity.ivf_assign_with_centroids(emb, stored_cents)
-        .filter(F.col("centroid_id").isNotNull())
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(assign_dir)
-    )
-
     stream = read_embeddings_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.col("vec_id") % 16 == 0)
 
-    def read_index(s: SparkSession) -> DataFrame:
-        # a PARTITIONED write of an empty corpus emits no schema-bearing
-        # files (unlike the unpartitioned st49 seed), so an empty index
-        # artifact reads back as an explicit empty frame
-        try:
-            return s.read.parquet(assign_dir)
-        except Exception:  # noqa: BLE001 — empty artifact
-            return s.createDataFrame(
-                [],
-                "vec_id long, embedding array<float>, c_sim double, "
-                "centroid_id long",
-            )
-
-    def serve(batch_df: DataFrame, epoch_id: int) -> None:
+    def serve(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         s = batch_df.sparkSession
-        cents = s.read.parquet(cents_dir)
-        similarity.ivf_topk_batch(
-            batch_df, cents, read_index(s), k=5, nprobe=2
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
+        return {
+            "served": similarity.ivf_topk_batch(
+                batch_df,
+                s.read.parquet(cents_dir),
+                _read_cell_index(s, index_dir),
+                k=5,
+                nprobe=2,
+            )
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(serve)
-        .option(
-            "checkpointLocation",
-            _tempfile.mkdtemp(prefix="ckpt_ivf_serve_"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    try:
-        served = spark.read.parquet(out_dir)
-    except Exception:  # noqa: BLE001 — no batch ever fired
-        served = spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double, rk int"
-        )
+    served = maintain(
+        stream,
+        serve,
+        {
+            "served": "query_id long, neighbor_id long, cosine_sim double, "
+            "rk int"
+        },
+    )["served"]
     return served.select(
         "query_id", "neighbor_id", "cosine_sim", "rk"
     ).orderBy("query_id", "rk")
@@ -2217,54 +2007,29 @@ def st64_stream_ivf_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st65_stream_hll_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators import sketches
     from etl_example_spark.sources.loaders import load_table
     from etl_example_spark.streaming.sources import DOCUMENTS_SCHEMA
 
-    slice_dir = _tempfile.mkdtemp(prefix="hll_slices_")
-    # stage the corpus as FOUR files so the file stream fires four
-    # micro-batches — the merge law is then over real multi-epoch
-    # state, not a single trivial slice
-    landing = _tempfile.mkdtemp(prefix="hll_landing_")
-    load_table(spark, sf_dir, "documents").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(landing)
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(landing)
+    stream = _stream_in_four_files(
+        load_table(spark, sf_dir, "documents"), DOCUMENTS_SCHEMA
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
+    def fold(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         items = batch_df.select(
             F.coalesce("text", F.lit("")).alias("item")
         )
-        sketches.hll_registers(
-            sketches.hll_ranks(items), batch_df.sparkSession
-        ).write.mode("overwrite").parquet(
-            os.path.join(slice_dir, f"epoch={epoch_id}")
-        )
+        return {
+            "registers": sketches.hll_registers(
+                sketches.hll_ranks(items), batch_df.sparkSession
+            )
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_hll_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    try:
-        slices = spark.read.parquet(slice_dir)
-    except Exception:  # noqa: BLE001 — no batch ever fired
-        slices = spark.createDataFrame([], "bucket int, register int")
+    slices = maintain(
+        stream, fold, {"registers": "bucket int, register int"}
+    )["registers"]
     merged = slices.groupBy("bucket").agg(
         F.max("register").alias("register")
     )
@@ -2470,9 +2235,6 @@ HYBRID_STREAM_SERVE_ORACLE = f"""
 def st66_stream_hybrid_serve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators import similarity, text
@@ -2481,45 +2243,14 @@ def st66_stream_hybrid_serve(
     from etl_example_spark.streaming.sources import read_documents_stream
 
     table, n_docs, t_total = _stage_bm25_bucketed(spark, sf_dir)
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents_dir = _tempfile.mkdtemp(prefix="hyb_quantizer_")
-    assign_dir = _tempfile.mkdtemp(prefix="hyb_index_")
-    out_dir = _tempfile.mkdtemp(prefix="hyb_out_")
-    (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-        .write.mode("overwrite")
-        .parquet(cents_dir)
+    cents_dir, index_dir = _stage_ivf_index(
+        load_table(spark, sf_dir, "embeddings")
     )
-    stored_cents = spark.read.parquet(cents_dir)
-    (
-        similarity.ivf_assign_with_centroids(emb, stored_cents)
-        .filter(F.col("centroid_id").isNotNull())
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(assign_dir)
-    )
-
-    def read_index(s: SparkSession) -> DataFrame:
-        try:
-            return s.read.parquet(assign_dir)
-        except Exception:  # noqa: BLE001 — empty artifact
-            return s.createDataFrame(
-                [],
-                "vec_id long, embedding array<float>, c_sim double, "
-                "centroid_id long",
-            )
-
     stream = read_documents_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.col("doc_id") % 64 == 0)
 
-    def serve(batch_df: DataFrame, epoch_id: int) -> None:
+    def serve(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         s = batch_df.sparkSession
         queries = (
             batch_df.select(
@@ -2542,36 +2273,26 @@ def st66_stream_hybrid_serve(
             "vec_id",
         )
         sem = similarity.ivf_topk_batch(
-            qvecs, s.read.parquet(cents_dir), read_index(s), k=20, nprobe=2
+            qvecs,
+            s.read.parquet(cents_dir),
+            _read_cell_index(s, index_dir),
+            k=20,
+            nprobe=2,
         ).select(
             "query_id",
             F.col("neighbor_id").alias("doc_id"),
             F.col("rk").cast("int").alias("sem_rank"),
         )
-        similarity.rrf_fuse_shortlists_by_query(
-            kw, sem, k=10
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
+        return {"served": similarity.rrf_fuse_shortlists_by_query(kw, sem, k=10)}
 
-    q = (
-        stream.writeStream.foreachBatch(serve)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_hyb_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    try:
-        served = spark.read.parquet(out_dir)
-    except Exception:  # noqa: BLE001 — no batch ever fired
-        served = spark.createDataFrame(
-            [],
-            "query_id long, doc_id long, kw_rank int, sem_rank int, "
-            "rrf_score long, rk int",
-        )
+    served = maintain(
+        stream,
+        serve,
+        {
+            "served": "query_id long, doc_id long, kw_rank int, "
+            "sem_rank int, rrf_score long, rk int"
+        },
+    )["served"]
     return served.select(
         "query_id", "doc_id", "kw_rank", "sem_rank", "rrf_score", "rk"
     ).orderBy("query_id", "rk")
@@ -2679,58 +2400,25 @@ STREAM_SEMDEDUP_ORACLE = """
 def st67_stream_semdedup_gate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators import similarity
     from etl_example_spark.sources.loaders import load_table
     from etl_example_spark.streaming.sources import read_embeddings_stream
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    old = emb.filter(F.col("vec_id") % 4 != 0)
-    cents_dir = _tempfile.mkdtemp(prefix="semdd_quantizer_")
-    index_dir = _tempfile.mkdtemp(prefix="semdd_index_")
-    out_dir = _tempfile.mkdtemp(prefix="semdd_out_")
-    (
-        old.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-        .write.mode("overwrite")
-        .parquet(cents_dir)
+    old = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") % 4 != 0
     )
-    stored_cents = spark.read.parquet(cents_dir)
-    (
-        similarity.ivf_assign_with_centroids(old, stored_cents)
-        .filter(F.col("centroid_id").isNotNull())
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(index_dir)
-    )
-
-    def read_index(s: SparkSession) -> DataFrame:
-        try:
-            return s.read.parquet(index_dir)
-        except Exception:  # noqa: BLE001 — empty artifact
-            return s.createDataFrame(
-                [],
-                "vec_id long, embedding array<float>, c_sim double, "
-                "centroid_id long",
-            )
-
+    cents_dir, index_dir = _stage_ivf_index(old)
     stream = read_embeddings_stream(
         spark, sf_dir, max_files_per_trigger=1
     ).filter(F.col("vec_id") % 4 == 0)
 
-    def gate(batch_df: DataFrame, epoch_id: int) -> None:
+    def gate(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         s = batch_df.sparkSession
         cents = s.read.parquet(cents_dir)
         arriving = similarity.ivf_assign_with_centroids(batch_df, cents)
-        stored = read_index(s).select(
+        stored = _read_cell_index(s, index_dir).select(
             F.col("centroid_id").alias("_cell"),
             F.col("vec_id").alias("_oid"),
             F.col("embedding").alias("_ovec"),
@@ -2757,38 +2445,22 @@ def st67_stream_semdedup_gate(
             .select(F.col("_nid").alias("vec_id"))
             .distinct()
         )
-        (
-            arriving.join(
-                dominated.withColumn("_hit", F.lit(True)),
-                "vec_id",
-                "left",
-            )
-            .select(
-                "vec_id",
-                "centroid_id",
-                "c_sim",
-                F.coalesce(~F.col("_hit"), F.lit(True)).alias("admit"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
+        admitted = arriving.join(
+            dominated.withColumn("_hit", F.lit(True)), "vec_id", "left"
+        ).select(
+            "vec_id",
+            "centroid_id",
+            "c_sim",
+            F.coalesce(~F.col("_hit"), F.lit(True)).alias("admit"),
         )
+        return {"admitted": admitted}
 
-    q = (
-        stream.writeStream.foreachBatch(gate)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_semdd_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    try:
-        out = spark.read.parquet(out_dir)
-    except Exception:  # noqa: BLE001 — no batch ever fired
-        out = spark.createDataFrame(
-            [], "vec_id long, centroid_id long, c_sim double, admit boolean"
-        )
+    out = maintain(
+        stream,
+        gate,
+        {"admitted": "vec_id long, centroid_id long, c_sim double, "
+         "admit boolean"},
+    )["admitted"]
     return out.select(
         "vec_id", "centroid_id", "c_sim", "admit"
     ).orderBy("vec_id")
@@ -2819,8 +2491,6 @@ def st68_stream_cdc_index_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import hashlib
-    import os
-    import tempfile as _tempfile
 
     from pyspark.sql import functions as F
 
@@ -2863,28 +2533,13 @@ def st68_stream_cdc_index_maintenance(
 
     # the change-event stream: the fingerprint diff lands as FOUR
     # files so the maintenance loop runs over real micro-batches
-    landing = _tempfile.mkdtemp(prefix="cdc_events_")
-    snapshot_diff(v1, v2).filter(
-        F.col("status") != "unchanged"
-    ).repartition(4).write.mode("overwrite").parquet(landing)
-    tomb_dir = _tempfile.mkdtemp(prefix="cdc_tombs_")
-    arr_dir = _tempfile.mkdtemp(prefix="cdc_arrivals_")
-    delta_dir = _tempfile.mkdtemp(prefix="cdc_delta_")
-
-    stream = (
-        spark.readStream.schema("doc_id long, status string")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(landing)
+    stream = _stream_in_four_files(
+        snapshot_diff(v1, v2).filter(F.col("status") != "unchanged"),
+        "doc_id long, status string",
     )
 
-    def maintain(batch_df: DataFrame, epoch_id: int) -> None:
+    def update(batch_df: DataFrame, older) -> dict[str, DataFrame]:
         s = batch_df.sparkSession
-        batch_df.filter(
-            F.col("status").isin("removed", "changed")
-        ).select("doc_id").write.mode("overwrite").parquet(
-            os.path.join(tomb_dir, f"epoch={epoch_id}")
-        )
         v2_static = load_table(s, sf_dir, "documents").filter(
             F.col("doc_id") % 17 != 0
         ).withColumn(
@@ -2899,39 +2554,31 @@ def st68_stream_cdc_index_maintenance(
         arr_ids = batch_df.filter(
             F.col("status").isin("added", "changed")
         ).select("doc_id")
-        # id slice, not derived from postings later: a token-less
-        # added document produces NO postings rows but still counts
-        # toward n_docs — the totals must see it
-        arr_ids.write.mode("overwrite").parquet(
-            os.path.join(arr_dir, f"epoch={epoch_id}")
-        )
         arriving = v2_static.join(F.broadcast(arr_ids), "doc_id")
-        text.bm25_postings(arriving, None).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(delta_dir, f"epoch={epoch_id}"))
+        return {
+            "tombs": batch_df.filter(
+                F.col("status").isin("removed", "changed")
+            ).select("doc_id"),
+            # id slice, not derived from postings later: a token-less
+            # added document produces NO postings rows but still counts
+            # toward n_docs — the totals must see it
+            "arrivals": arr_ids,
+            "delta": text.bm25_postings(arriving, None),
+        }
 
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_cdc_")
-        )
-        .trigger(availableNow=True)
-        .start()
+    out = maintain(
+        stream,
+        update,
+        {
+            "tombs": "doc_id long",
+            "arrivals": "doc_id long",
+            "delta": "doc_id long, term string, tf long, dl long",
+        },
     )
-    q.awaitTermination()
-
-    def read_slices(path: str, schema: str) -> DataFrame:
-        try:
-            return spark.read.parquet(path)
-        except Exception:  # noqa: BLE001 — no batch ever fired
-            return spark.createDataFrame([], schema)
-
-    tombstones = read_slices(tomb_dir, "doc_id long").select("doc_id")
-    delta = read_slices(
-        delta_dir, "doc_id long, term string, tf long, dl long"
-    )
+    tombstones = out["tombs"].select("doc_id")
+    delta = out["delta"]
     n_gone, t_gone = totals(v1.join(F.broadcast(tombstones), "doc_id"))
-    arrivals = read_slices(arr_dir, "doc_id long").select("doc_id")
+    arrivals = out["arrivals"].select("doc_id")
     n_arr, t_arr = totals(v2.join(F.broadcast(arrivals), "doc_id"))
 
     queries = local_df(
@@ -2982,29 +2629,18 @@ def st68_stream_cdc_index_maintenance(
 def st69_stream_hist_maintenance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import tempfile as _tempfile
-
     from pyspark.sql import functions as F
 
     from etl_example_spark.operators import text as _text
     from etl_example_spark.sources.loaders import load_table
     from etl_example_spark.streaming.sources import DOCUMENTS_SCHEMA
 
-    slice_dir = _tempfile.mkdtemp(prefix="hist_slices_")
-    landing = _tempfile.mkdtemp(prefix="hist_landing_")
-    load_table(spark, sf_dir, "documents").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(landing)
-    stream = (
-        spark.readStream.schema(DOCUMENTS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(landing)
+    stream = _stream_in_four_files(
+        load_table(spark, sf_dir, "documents"), DOCUMENTS_SCHEMA
     )
 
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        (
+    def fold(batch_df: DataFrame, older) -> dict[str, DataFrame]:
+        bins = (
             batch_df.select(
                 _text.token_count(
                     F.coalesce("text", F.lit(""))
@@ -3013,24 +2649,10 @@ def st69_stream_hist_maintenance(
             .select(F.least(F.expr("v div 8"), F.lit(127)).alias("bin"))
             .groupBy("bin")
             .agg(F.count("*").cast("long").alias("cnt"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(slice_dir, f"epoch={epoch_id}"))
         )
+        return {"bins": bins}
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option(
-            "checkpointLocation", _tempfile.mkdtemp(prefix="ckpt_hist_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    try:
-        slices = spark.read.parquet(slice_dir)
-    except Exception:  # noqa: BLE001 — no batch ever fired
-        slices = spark.createDataFrame([], "bin int, cnt long")
+    slices = maintain(stream, fold, {"bins": "bin int, cnt long"})["bins"]
     merged = slices.groupBy("bin").agg(
         F.sum("cnt").cast("long").alias("cnt")
     )

@@ -286,6 +286,21 @@ def _last_writer_wins(rows) -> dict:
     return {k: v for k, (v, op, _) in latest.items() if op != "D"}
 
 
+def _record_publishes(monkeypatch) -> list[str]:
+    """Record every generation the CDC sink publishes from now on (each
+    publish is an ``os.replace`` onto a ``._CURRENT`` pointer)."""
+    real_replace = os.replace
+    publishes = []
+
+    def recording_replace(src, dst, *a, **k):
+        if str(dst).endswith("._CURRENT"):
+            publishes.append(dst)
+        return real_replace(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "replace", recording_replace)
+    return publishes
+
+
 def _generation_dirs(target: str) -> list[str]:
     return [
         d for d in os.listdir(target)
@@ -296,8 +311,8 @@ def _generation_dirs(target: str) -> list[str]:
 class TestStreamCdcSink:
     def test_merge_state_swap_and_replay(self, spark, tmp_path, sf_dir):
         """Final target equals last-writer-wins over the change stream;
-        re-running the same stream against the same target (replayed
-        epoch) leaves the state unchanged (idempotent merge)."""
+        re-running the same stream against the same target resumes from
+        the target's checkpoint and leaves the state unchanged."""
         import os
 
         from pyspark.sql import functions as F
@@ -388,6 +403,48 @@ class TestStreamCdcSink:
         )
 
         _drain_cdc(spark, landing, target)
+        batch = [tuple(r) for r in spark.read.parquet(landing).collect()]
+        assert _cdc_state(spark, target) == _last_writer_wins(batch)
+        assert len(_generation_dirs(target)) <= 2
+
+    def test_rerun_into_a_drained_target_publishes_nothing(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The checkpoint is keyed by the target: a second drain of the
+        same source into the same target resumes after the last
+        committed micro-batch, so it replays none and publishes no
+        generation."""
+        landing = _cdc_landing(tmp_path)
+        target = str(tmp_path / "cdc")
+        _drain_cdc(spark, landing, target)
+        drained = _cdc_state(spark, target)
+
+        publishes = _record_publishes(monkeypatch)
+        _drain_cdc(spark, landing, target)
+        assert publishes == []
+        assert _cdc_state(spark, target) == drained
+
+    def test_uncommitted_batch_replays_on_rerun(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Deleting the newest commit under ``<target>._checkpoint/commits``
+        un-commits the last micro-batch: a re-run replays exactly that
+        batch, the replayed merge leaves last-writer-wins, and retention
+        still keeps at most two generations."""
+        landing = _cdc_landing(tmp_path)
+        target = str(tmp_path / "cdc")
+        _drain_cdc(spark, landing, target)
+        commits = os.path.join(f"{target}._checkpoint", "commits")
+        newest = max(
+            (f for f in os.listdir(commits) if f.isdigit()), key=int
+        )
+        for name in (newest, f".{newest}.crc"):
+            if os.path.exists(os.path.join(commits, name)):
+                os.remove(os.path.join(commits, name))
+
+        publishes = _record_publishes(monkeypatch)
+        _drain_cdc(spark, landing, target)
+        assert len(publishes) == 1
         batch = [tuple(r) for r in spark.read.parquet(landing).collect()]
         assert _cdc_state(spark, target) == _last_writer_wins(batch)
         assert len(_generation_dirs(target)) <= 2
@@ -888,3 +945,218 @@ def test_staging_relinks_a_stale_events_link(tmp_path, monkeypatch):
     assert sources._staging_dir(str(sf)) == staging
     assert os.path.realpath(link) == str(events.resolve())
     assert os.listdir(staging) == ["events.parquet"]
+
+
+def _land_ids(landing, files: list[list[int]]) -> None:
+    """One parquet file of ``id`` rows per list, with increasing mtimes,
+    so a maxFilesPerTrigger=1 stream reads one file per micro-batch in
+    list order."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    now = time.time()
+    for i, ids in enumerate(files):
+        name = str(landing / f"ids{i}.parquet")
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}), name)
+        os.utime(name, (now - 100 + i, now - 100 + i))
+
+
+def _ids_stream(spark, landing):
+    return (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(landing))
+    )
+
+
+class TestMaintainKernel:
+    """``streaming/sinks.maintain``: the one epoch-sliced loop behind the
+    streaming maintenance builders."""
+
+    def test_steps_read_strictly_older_slices(self, spark, tmp_path):
+        """Three files, one micro-batch each, over a seeded ``seen``
+        output: every step reads the seed plus the earlier batches'
+        slices, and the read-back drops ``epoch``."""
+        from pyspark.sql import functions as F
+
+        from etl_example_spark.streaming.sinks import maintain
+
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        _land_ids(landing, [[1, 2], [3], [4, 5]])
+
+        def step(batch, older):
+            n_older = older("seen").count()
+            return {
+                "seen": batch,
+                "older": batch.select("id", F.lit(n_older).alias("n_older")),
+            }
+
+        out = maintain(
+            _ids_stream(spark, landing),
+            step,
+            {"older": "id long, n_older long"},
+            seed={"seen": spark.createDataFrame([(0,)], "id long")},
+        )
+        assert out["seen"].columns == ["id"]
+        assert sorted(r.id for r in out["seen"].collect()) == list(range(6))
+        assert {r.id: r.n_older for r in out["older"].collect()} == {
+            1: 1, 2: 1, 3: 3, 4: 4, 5: 4,
+        }
+
+    def test_retried_epoch_reads_only_older_slices(self, spark, tmp_path):
+        """The retry shape: a micro-batch run twice under the same epoch
+        overwrites its slice, and the second run's step still sees only
+        the older epochs, never its own first attempt."""
+        from pyspark.sql import functions as F
+
+        from etl_example_spark.streaming.sinks import _epoch_slices
+
+        paths = {"seen": str(tmp_path / "seen")}
+        spark.createDataFrame([(0,)], "id long").write.parquet(
+            os.path.join(paths["seen"], "epoch=-1")
+        )
+        older_ids = []
+
+        def step(batch, older):
+            older_ids.append(sorted(r.id for r in older("seen").collect()))
+            return {"seen": batch}
+
+        run = _epoch_slices(step, paths)
+        batch = spark.createDataFrame([(7,)], "id long")
+        run(batch, 0)
+        run(batch, 0)
+        run(spark.createDataFrame([(8,)], "id long"), 1)
+        assert older_ids == [[0], [0], [0, 7]]
+        ids = spark.read.parquet(paths["seen"]).select(F.col("id"))
+        assert sorted(r.id for r in ids.collect()) == [0, 7, 8]
+
+    def test_empty_source_reads_the_declared_schema(self, spark, tmp_path):
+        """No micro-batch fires over an empty landing dir: an unseeded
+        output reads back as the empty frame of its declared schema, and
+        a seeded one as its seed."""
+        from etl_example_spark.streaming.sinks import maintain
+
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        out = maintain(
+            _ids_stream(spark, landing),
+            lambda batch, older: {"doubled": batch.selectExpr("id * 2 AS v")},
+            {"doubled": "v long"},
+            seed={"base": spark.createDataFrame([(1,)], "id long")},
+        )
+        assert out["doubled"].schema.simpleString() == "struct<v:bigint>"
+        assert out["doubled"].count() == 0
+        assert [r.id for r in out["base"].collect()] == [1]
+
+    def test_scratch_root_is_removed_at_exit(self, tmp_path, monkeypatch):
+        """Every scratch dir sits under one root, made once; the exit
+        hook registered with it removes the root. The live root is
+        swapped out, so the suite's lazily-read slices stay."""
+        import atexit
+        import tempfile
+
+        from etl_example_spark.streaming import sinks
+
+        hooks = []
+        monkeypatch.setattr(sinks, "_scratch_root", None)
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        monkeypatch.setattr(
+            atexit, "register", lambda fn, *a: hooks.append((fn, a))
+        )
+        first = sinks.scratch_dir("a_")
+        second = sinks.scratch_dir("b_")
+        root = os.path.dirname(first)
+        assert os.path.dirname(second) == root
+        assert os.path.dirname(root) == str(tmp_path)
+        assert len(hooks) == 1
+
+        fn, args = hooks[0]
+        fn(*args)
+        assert not os.path.exists(root)
+
+    def test_scratch_root_is_made_once_under_threads(
+        self, tmp_path, monkeypatch
+    ):
+        """Builders take scratch dirs from many threads at once: the
+        root is made and registered for removal exactly once, and every
+        dir is distinct."""
+        import atexit
+        import sys
+        import tempfile
+        from concurrent.futures import ThreadPoolExecutor
+
+        from etl_example_spark.streaming import sinks
+
+        hooks = []
+        monkeypatch.setattr(sinks, "_scratch_root", None)
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        monkeypatch.setattr(
+            atexit, "register", lambda fn, *a: hooks.append((fn, a))
+        )
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with ThreadPoolExecutor(max_workers=16) as pool:
+                dirs = list(
+                    pool.map(sinks.scratch_dir, ["d_"] * 256, timeout=60)
+                )
+        finally:
+            sys.setswitchinterval(interval)
+        assert len(set(dirs)) == 256
+        assert {os.path.dirname(d) for d in dirs} == {
+            os.path.join(str(tmp_path), os.listdir(tmp_path)[0])
+        }
+        assert len(os.listdir(tmp_path)) == 1
+        assert len(hooks) == 1
+
+
+def _functions_naming(attr: str) -> set[str]:
+    """``module::function`` of every engine function (or ``<module>``
+    scope) whose own code names ``attr``."""
+    import ast
+    import pathlib
+
+    import etl_example_spark
+
+    root = pathlib.Path(etl_example_spark.__file__).parent
+    found = set()
+
+    class Finder(ast.NodeVisitor):
+        def __init__(self, module: str) -> None:
+            self.module, self.scope = module, ["<module>"]
+
+        def visit_FunctionDef(self, node) -> None:
+            self.scope.append(node.name)
+            self.generic_visit(node)
+            self.scope.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Attribute(self, node) -> None:
+            if node.attr == attr:
+                found.add(f"{self.module}::{self.scope[-1]}")
+            self.generic_visit(node)
+
+        def visit_Name(self, node) -> None:
+            if node.id == attr:
+                found.add(f"{self.module}::{self.scope[-1]}")
+
+        def visit_alias(self, node) -> None:
+            if node.name == attr:
+                found.add(f"{self.module}::{self.scope[-1]}")
+
+    for path in sorted(root.rglob("*.py")):
+        module = path.relative_to(root).as_posix()
+        Finder(module).visit(ast.parse(path.read_text()))
+    return found
+
+
+def test_one_scratch_root_and_one_drain():
+    """The engine takes every directory it makes for itself from one
+    scratch root, the only ``mkdtemp``, and every streaming query runs
+    through one drain, the only ``writeStream``."""
+    assert _functions_naming("mkdtemp") == {"streaming/sinks.py::scratch_dir"}
+    assert _functions_naming("writeStream") == {"streaming/sinks.py::_drain"}
