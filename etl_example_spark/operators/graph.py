@@ -360,8 +360,8 @@ def label_propagation(
     one (node, label) weight aggregate, one argmax via the packed
     max_by struct, one left join back to the vertex set;
     ``localCheckpoint`` truncates lineage per round (the iterative
-    discipline shared with pagerank/bpe_train/sq8_kmeans). Nothing
-    reaches the driver.
+    discipline shared with pagerank and bpe_train). Nothing reaches
+    the driver.
     """
     fwd = edges.filter(F.col("src") != F.col("dst"))
     adj = (

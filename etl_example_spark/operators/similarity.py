@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from etl_example_spark.functions.localrel import local_df, sql_ident
 
@@ -254,8 +255,9 @@ def ivf_assign_with_centroids(
     replicated exactly, with two documented divergences (ADVICE r13):
     (1) NaN — the old packed round(sim*1e6) CAST collapsed a NaN
     cosine to sim 0.0, while array_max sorts NaN greatest, so a
-    NaN-similarity centroid now WINS with c_sim NaN (matching
-    ivf_train's never-packed max_by semantics); (2) duplicate input
+    NaN-similarity centroid now WINS with c_sim NaN (as in
+    :func:`ivf_train`, which picks through :func:`_ivf_pick` too);
+    (2) duplicate input
     ids — the old per-(id, vec) aggregate collapsed exact-duplicate
     rows to one output row, the in-row map emits one row per INPUT row
     (observable only when the unique-id contract is violated). Ties
@@ -267,7 +269,6 @@ def ivf_assign_with_centroids(
     packed micro-units round-tripped to; an empty centroid table
     yields the empty result the old crossJoin produced. Returns
     (id, vec, centroid_id, c_sim)."""
-    spark = embeddings.sparkSession
     cid_col, cvec_col = centroids.columns[0], centroids.columns[1]
     cid_type = centroids.schema[cid_col].dataType.simpleString()
     cvec_type = centroids.schema[cvec_col].dataType.simpleString()
@@ -276,17 +277,40 @@ def ivf_assign_with_centroids(
     # centroid-count contract the packed max asserted, so the raise is
     # the old behavior, now BEFORE an unbounded collect (round-14)
     cent_rows = sorted(
-        centroids.select(
-            F.col(cid_col).alias("centroid_id"),
-            F.col(cvec_col).alias("centroid_vec"),
-        )
+        centroids.select(cid_col, cvec_col)
         .limit(_MODEL_ROWS_BOUND)
         .collect(),
-        key=lambda r: (r["centroid_id"] is not None, r["centroid_id"]),
+        key=lambda r: _nulls_first(r[0]),
     )
     if len(cent_rows) >= _MODEL_ROWS_BOUND:
         raise ValueError("too many centroids")
-    if not cent_rows:
+    return _ivf_pick(
+        embeddings, cent_rows, cvec_type, cid_type, id_col, vec_col
+    )
+
+
+def _nulls_first(key):
+    """Sort key putting a NULL (None) first, as Spark's ASC order does."""
+    return (key is not None, key)
+
+
+def _ivf_pick(
+    embeddings: DataFrame,
+    cents,
+    cvec_type: str,
+    cid_type: str,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, vec, centroid_id, c_sim): each vector's max-cosine centroid
+    among the driver-held ``cents``, (centroid_id, vector) pairs in
+    centroid_id order NULLS FIRST, packed as ONE broadcast row of
+    ``cvec_type`` vectors and ``cid_type`` ids. The pick
+    happens inside the row: the first maximum wins, so ties go to the
+    lower id; an all-NULL similarity row gets NULL centroid_id and
+    c_sim; no centroids give no rows. :func:`ivf_assign_with_centroids`
+    and :func:`ivf_train`'s assign step both pick here."""
+    if not cents:
         return (
             embeddings.select(F.col(id_col), F.col(vec_col))
             .filter(F.lit(False))
@@ -294,18 +318,8 @@ def ivf_assign_with_centroids(
             .withColumn("c_sim", F.lit(None).cast("double"))
         )
     packed = local_df(
-        spark,
-        [
-            (
-                [
-                    list(r["centroid_vec"])
-                    if r["centroid_vec"] is not None
-                    else None
-                    for r in cent_rows
-                ],
-                [r["centroid_id"] for r in cent_rows],
-            )
-        ],
+        embeddings.sparkSession,
+        [([v for _, v in cents], [c for c, _ in cents])],
         f"cvs array<{cvec_type}>, cds array<{cid_type}>",
     )
     pos = F.expr(
@@ -471,6 +485,56 @@ def _train_sample(
     )
 
 
+def _lloyd(
+    state: dict, assign, keys: tuple[str, ...], vec_col: str, iters: int
+) -> dict:
+    """Lloyd's k-means over a driver-held model: the one training loop
+    of :func:`ivf_train`, :func:`pq_train` and :func:`sq8_kmeans`.
+
+    ``state`` maps each cell's key (the values of ``keys``, a tuple when
+    there are several) to its vector. ``assign(state)`` returns the
+    training rows with ``keys`` naming each row's nearest cell and
+    ``vec_col`` its vector. Each of the ``iters`` rounds is one
+    posexplode → per-(cell, dim) mean → bounded driver collect of the
+    model-sized means, and updates ``state`` in place: a group with a
+    NULL key is skipped, and a cell with no members keeps its vector.
+
+    The mean follows the vector's element type: ``avg`` over doubles,
+    and over integers the sum/count division truncated toward zero
+    (Spark's ``DIV``), so an integer model stays integer-exact. The
+    float summation order is fixed by this assign → posexplode →
+    groupBy pipeline over the same frame, so a trained model is
+    reproducible bit for bit."""
+    n = len(keys)
+    for _ in range(iters):
+        assigned = assign(state)
+        elem = assigned.schema[vec_col].dataType.elementType
+        integral = isinstance(elem, IntegralType)
+        vec = F.col(vec_col) if integral else _as_double(vec_col)
+        fold = (
+            [F.sum(F.col("x").cast("long")), F.count("*")]
+            if integral
+            else [F.avg("x")]
+        )
+        upd: dict = {}
+        for r in (
+            assigned.select(*keys, F.posexplode(vec).alias("dim", "x"))
+            .groupBy(*keys, "dim")
+            .agg(*fold)
+            .collect()
+        ):
+            if any(k is None for k in r[:n]):
+                continue
+            mean = r[n + 1]
+            if integral and mean is not None:
+                # sum DIV count, truncated toward zero for either sign
+                mean = abs(mean) // r[n + 2] * (1 if mean >= 0 else -1)
+            upd.setdefault(r[0] if n == 1 else tuple(r[:n]), {})[r[n]] = mean
+        for key, dims in upd.items():
+            state[key] = [dims[d] for d in sorted(dims)]
+    return state
+
+
 def ivf_train(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -479,132 +543,53 @@ def ivf_train(
     vec_col: str = "embedding",
     max_train_rows: int | None = None,
 ) -> DataFrame:
-    """Lloyd iterations over the IVF coarse quantizer: assign every
-    training vector to its nearest centroid (in-row argmax over the
-    packed driver-held centroid state — see the loop comment), then
-    recompute each centroid as the element-wise mean of its members
-    (posexplode → per-(cell, dim) average → bounded driver collect of
-    model-sized means). One shuffle per iteration on (centroid, dim).
-    Empty cells keep their previous centroid. Returns (centroid_id,
+    """The IVF coarse quantizer: ``n_centroids`` centroids seeded with
+    the lowest-id training vectors and refined by ``iters`` rounds of
+    :func:`_lloyd` (element-wise double means). A vector joins its
+    max-cosine centroid (the :func:`ivf_assign_with_centroids` pick,
+    ties to the lower id); a zero-norm vector, whose every cosine is
+    NULL, joins the lowest non-NULL centroid id. Returns (centroid_id,
     centroid_vec) ready to feed the probe/rerank stages.
 
-    ``max_train_rows`` bounds EVERY Lloyd pass (and the seed pick) to a
-    deterministic hash-bottom sample of that many rows — FAISS practice
-    (coarse quantizers train on ~100k–1M vectors regardless of corpus
-    size; only the assignment/encode pass touches the full corpus). At
-    100 TB, full-corpus Lloyd is the ANN training-cost wall: per
-    iteration it is a corpus × centroids scan, while the sampled
-    trainer is O(max_train_rows × centroids) — flat in corpus size.
-    The sampled quantizer still certifies the recall floor (the s64
-    registration externalizes it, SCALING.md carries the measurement).
-    Default ``None`` trains on the full corpus, byte-identical to the
-    historical behavior.
-
-    Iteration materialization (round-13 optimization): centroids are
-    MODEL-SIZED (≤ n_centroids rows by contract), so each Lloyd round
-    ends in a bounded driver collect and re-enters the next round as a
-    literal local relation — the d106 parameter-server discipline,
-    replacing the per-round ``localCheckpoint`` job (checkpoint
-    materialization + old-centroid left join). The assign + per-(cell,
-    dim) mean pipeline — the float-summation-order-bearing part — is
-    unchanged, so trained centroids are bit-identical; the collect /
-    literal round trip through Python floats is exact (IEEE-754
-    doubles both sides)."""
+    ``max_train_rows`` seeds and trains on a deterministic hash-bottom
+    sample of that many rows (:func:`_train_sample`), as FAISS trains
+    coarse quantizers on ~100k–1M vectors whatever the corpus size:
+    training cost is then flat in corpus size, and only the assignment
+    pass touches the whole corpus. The sampled quantizer still
+    certifies the recall floor (s64; SCALING.md has the measurement).
+    ``None`` trains on the whole corpus."""
     train = (
         embeddings
         if max_train_rows is None
         else _train_sample(embeddings, id_col, max_train_rows)
     )
-    spark = embeddings.sparkSession
     id_type = embeddings.schema[id_col].dataType.simpleString()
-    cent_schema = f"centroid_id {id_type}, centroid_vec array<double>"
-    # driver-held model state: {centroid_id: vec as a Python list}
-    cent_state: dict = {
-        r["centroid_id"]: (
-            list(r["centroid_vec"])
-            if r["centroid_vec"] is not None
-            else None
-        )
-        for r in train.orderBy(id_col)
+    state = dict(
+        train.orderBy(id_col)
         .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            _as_double(vec_col).alias("centroid_vec"),
-        )
+        .select(id_col, _as_double(vec_col))
         .collect()
-    }
-
-    def cents_df() -> DataFrame:
-        rows = [
-            (cid, cent_state[cid])
-            for cid in sorted(
-                cent_state, key=lambda c: (c is not None, c)
-            )
-        ]
-        return local_df(spark, rows, cent_schema)
-
-    # in-row argmax (round-13 optimization, guide §2.4/§3.1): the Lloyd
-    # assign previously expanded train × centroids through a
-    # broadcast-crossJoin and folded back with
-    # max_by(centroid_id, struct(c_sim, -centroid_id)) — measured on
-    # the PQ sibling, the expansion + per-id fold was the iteration
-    # cost, not the cosine arithmetic. Centroids are driver-held
-    # state, so pack them as ONE broadcast row (vectors + ids ordered
-    # by centroid_id ASC NULLS FIRST) and take the argmax inside the
-    # row. max_by's exact semantics are replicated: highest rounded
-    # cosine wins, similarity ties break to the LOWEST centroid id
-    # (array_position returns the first match in id order — the old
-    # -centroid_id tiebreak), NaN sorts greatest and wins (array_max
-    # shares the SQL double ordering), and an all-NULL similarity row
-    # (degenerate vector) falls to the lowest NON-NULL centroid id —
-    # which is what struct(NULL, -cid) maximization did (NULL ids lose
-    # ties; all ids NULL -> NULL), precomputed here as a literal.
-    cid_vals = sorted(cent_state, key=lambda c: (c is not None, c))
-    fallback_cid = next((c for c in cid_vals if c is not None), None)
-
-    def packed_df() -> DataFrame:
-        return local_df(
-            spark,
-            [([cent_state[c] for c in cid_vals], cid_vals)],
-            f"cvs array<array<double>>, cds array<{id_type}>",
-        )
-
-    pos = F.expr(
-        "CAST(array_position(_ss, array_max(_ss)) AS INT)"
     )
-    for _ in range(iters):
-        assign = (
-            train.crossJoin(F.broadcast(packed_df()))
-            .withColumn("_ss", _cosine_sims(vec_col))
-            .withColumn(
-                "centroid_id",
-                F.when(
-                    F.expr("array_max(_ss)").isNull(),
-                    F.lit(fallback_cid).cast(id_type),
-                ).otherwise(F.expr("cds")[pos - 1]),
-            )
+    cids = sorted(state, key=_nulls_first)
+    fallback = next((c for c in cids if c is not None), None)
+
+    def assign(state: dict) -> DataFrame:
+        picked = _ivf_pick(
+            train, [(c, state[c]) for c in cids], "array<double>", id_type,
+            id_col, vec_col,
         )
-        mean_rows = (
-            assign.select(
-                "centroid_id",
-                F.posexplode(_as_double(vec_col)).alias("dim", "x"),
-            )
-            .groupBy("centroid_id", "dim")
-            .agg(F.avg("x").alias("m"))
-            .collect()
+        return picked.withColumn(
+            "centroid_id",
+            F.when(F.col("c_sim").isNull(), F.lit(fallback).cast(id_type))
+            .otherwise(F.col("centroid_id")),
         )
-        upd: dict = {}
-        for r in mean_rows:
-            # a NULL centroid_id mean (all-degenerate cell) never
-            # equi-joined the old centroid table — skip, as before
-            if r["centroid_id"] is None:
-                continue
-            upd.setdefault(r["centroid_id"], {})[r["dim"]] = r["m"]
-        # empty cells keep their previous centroid (the old left-join
-        # + coalesce semantics)
-        for cid, dims in upd.items():
-            cent_state[cid] = [dims[d] for d in sorted(dims)]
-    return cents_df()
+
+    _lloyd(state, assign, ("centroid_id",), vec_col, iters)
+    return local_df(
+        embeddings.sparkSession,
+        [(c, state[c]) for c in cids],
+        f"centroid_id {id_type}, centroid_vec array<double>",
+    )
 
 
 def ivf_topk(
@@ -926,6 +911,23 @@ def _probe_dim(vectors) -> int:
     return len(v)
 
 
+def _corpus_dim(df: DataFrame, vec_col: str) -> int | None:
+    """:func:`_probe_dim` of ``df``'s vectors, or None when ``df`` has
+    no rows. One ``limit(1)`` read; a NULL first vector costs a second
+    read that skips the NULLs."""
+    first = df.select(vec_col).limit(1).collect()
+    if not first:
+        return None
+    if first[0][0] is None:
+        first = (
+            df.select(vec_col)
+            .filter(F.col(vec_col).isNotNull())
+            .limit(1)
+            .collect()
+        )
+    return _probe_dim(r[0] for r in first)
+
+
 def pq_train(
     embeddings: DataFrame,
     m: int = 8,
@@ -937,16 +939,13 @@ def pq_train(
     max_train_rows: int | None = None,
 ) -> DataFrame:
     """Product-quantization codebooks: per subspace j (of ``m`` equal
-    vector slices), ``n_codes`` centroids trained by Lloyd iterations —
-    all subspaces trained TOGETHER in one plan (rows are (id, j,
-    subvector); assignment and re-estimation group by j, so adding
-    subspaces adds rows, not stages).
-
-    Seeds are the ``n_codes`` lowest-id vectors' slices (deterministic).
-    Returns (j, code, cv) with ``cv`` the centroid subvector. Same
-    iterative discipline as ``ivf_train``: one shuffle per iteration,
-    localCheckpoint truncates the growing lineage, empty codes keep
-    their previous centroid.
+    vector slices), ``n_codes`` centroids seeded with the lowest-id
+    training vectors' slices and refined by ``iters`` rounds of
+    :func:`_lloyd` over (id, j, subvector) rows, all subspaces in one
+    plan (adding subspaces adds rows, not stages). A subvector joins
+    its nearest code by squared L2, through the per-subspace pick
+    :func:`pq_encode` runs (a NULL distance wins, ties to the lower
+    code). Returns (j, code, cv) with ``cv`` the centroid subvector.
 
     ``normalize=False`` trains on the input vectors AS GIVEN — the
     residual-encoding path (:func:`ivfpq_residual_topk`): residuals
@@ -954,146 +953,54 @@ def pq_train(
     signal; unit-normalizing them would destroy exactly what PQ is
     quantizing there.
 
-    ``max_train_rows`` bounds the Lloyd passes (and the seed pick) to
-    a deterministic hash-bottom sample — the :func:`ivf_train`
-    contract: codebook training cost goes flat in corpus size (FAISS
-    trains PQ codebooks on a bounded sample; only the ENCODE pass is
-    corpus-sized), the sampled codebooks still certify the recall
-    floor (s64). Default ``None`` trains on the full corpus,
-    byte-identical to the historical behavior.
-
-    Iteration materialization (round-13 optimization): the codebook is
-    MODEL-SIZED state (≤ m·n_codes rows by contract), so each round
-    ends in a bounded driver collect and the next round's broadcast is
-    a literal local relation — the d106 parameter-server discipline.
-    This replaces the previous per-iteration ``localCheckpoint`` of the
-    codebook frame (an extra cluster job per round: the checkpoint
-    materialization plus the old-codebook left join it fed) while the
-    per-round ASSIGN + per-(j, code, dim) mean pipeline — the part
-    whose float summation order determines the trained values — is
-    unchanged, so the trained codebooks are bit-identical (asserted by
-    the s63/s65/s66 equality laws and the oracle hash of s55).
-    Python's float IS an IEEE-754 double, so the collect/literal round
-    trip is exact. Plan-sized win at any scale: one fewer pass per
-    Lloyd round over state that was never cluster-sized to begin with.
-    """
+    ``max_train_rows`` seeds and trains on a deterministic hash-bottom
+    sample, as in :func:`ivf_train`: only the ENCODE pass is
+    corpus-sized. ``None`` trains on the whole corpus."""
     normalized = (
         l2_normalize(embeddings, vec_col) if normalize else embeddings
     )
     if max_train_rows is not None:
         normalized = _train_sample(normalized, id_col, max_train_rows)
-    # Seeds come from the TRAINING set (the sample, when one is
-    # requested): a seed outside it would have no subvectors in ``sub``
-    # and its codebook row would silently vanish. One MODEL-SIZED
-    # collect (n_codes lowest-id training vectors) supplies the seed
-    # order, the initial codebook values (sliced driver-side with the
-    # exact indexing :func:`_subvectors` uses — a pure slice, no
-    # arithmetic: Python ``v[a:b]`` and Spark ``slice`` agree on
-    # short/empty/NULL inputs), the empty-corpus check, AND the vector
-    # dimension — round-14: the separate ``limit(1)`` dim-probe was a
-    # second corpus-touching job for a value the seed collect already
-    # carries (guide §5 bounded collects; empty seeds ⟺ empty corpus).
-    spark = embeddings.sparkSession
-    seed_rows = (
-        normalized.orderBy(id_col)
+    # Seeds come from the TRAINING set (a seed outside it would have no
+    # subvectors in ``sub``). The one seed collect also gives the
+    # empty-corpus check and the dimension; seeds are sliced on the
+    # driver with the indexing :func:`_subvectors` uses.
+    seeds = [
+        r[0]
+        for r in normalized.orderBy(id_col)
         .limit(n_codes)
-        .select(F.col(id_col), _as_double(vec_col).alias("_v"))
+        .select(_as_double(vec_col))
         .collect()
-    )
-    if not seed_rows:  # empty corpus -> empty codebook, right schema
+    ]
+    if not seeds:  # empty corpus -> empty codebook, right schema
         return embeddings.sparkSession.createDataFrame(
             [], "j int, code int, cv array<double>"
         )
-    dim = _probe_dim(r["_v"] for r in seed_rows)
+    dim = _probe_dim(seeds)
     sub = _subvectors(normalized, m, dim, id_col, vec_col).localCheckpoint(
         eager=True
     )
     sub_d = dim // m
-    # driver-held model state: {(j, code): cv as a Python list}
-    cb_state: dict[tuple, list] = {}
-    for code, r in enumerate(seed_rows):
-        v = r["_v"]
-        for j in range(m):
-            cb_state[(j, code)] = (
-                None if v is None else list(v[j * sub_d : (j + 1) * sub_d])
-            )
-
-    def cb_df() -> DataFrame:
-        rows = [(j, c, cb_state[(j, c)]) for (j, c) in sorted(cb_state)]
-        return local_df(
-            spark, rows, "j int, code int, cv array<double>"
-        )
-
-    # in-row argmin (round-13 optimization, guide §2.4/§3.1): the Lloyd
-    # assign previously expanded sub × codebook (rows·n_codes joined
-    # rows) through a broadcast join and folded back with
-    # min_by(struct(d2, code)) — measured, the iteration cost was the
-    # row EXPANSION plus that struct-keyed min_by (no mutable buffer,
-    # so it compiled to Sort + Exchange + SortAggregate), not the
-    # distance arithmetic. The codebook is driver-held state, so pack
-    # it per subspace (one array<array<double>> row per j, m rows,
-    # broadcast) and pick the nearest code inside the row over the
-    # packed array. The argmin replicates min_by's exact semantics:
-    # NULL d2 sorts FIRST (the exists() branch picks the first NULL,
-    # i.e. the lowest code), distance ties break to the lower code
-    # (array_position returns the first match; cvs is ordered by code,
-    # codes contiguous 0..n-1 from the seed enumeration, so position-1
-    # IS the code), NaN sorts greatest (array_min shares the SQL
-    # double ordering). The per-pair distance stays the exact
-    # _sq_l2 fold (bit-identical floats); an UNROLLED per-code variant
-    # was measured and rejected — at n_codes CASE branches per row the
-    # Catalyst analysis of the big tree cost more per iteration than
-    # the interpreted fold it saved (plans are rebuilt every
-    # iteration). One row per input (id, j) comes out, exactly the
-    # rows the old groupBy produced — ``id_col`` keys the code
-    # artifact throughout this module (pq_append/ivf_append join on
-    # it), same as before.
-    codes_present = list(range(len(seed_rows)))
-    js_present = list(range(m))
-
-    def cbj_df() -> DataFrame:
-        rows = [
-            (j, [cb_state[(j, c)] for c in codes_present])
-            for j in js_present
-        ]
-        return local_df(
-            spark, rows, "j int, cvs array<array<double>>"
-        )
-
-    d2s = F.expr(
-        "transform(cvs, cv -> aggregate(zip_with(sv, cv, "
-        "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v))"
+    state = {
+        (j, code): None if v is None else v[j * sub_d : (j + 1) * sub_d]
+        for code, v in enumerate(seeds)
+        for j in range(m)
+    }
+    types = ("int", "int", "array<double>")
+    _lloyd(
+        state,
+        lambda state: _pq_pick(
+            sub, [(j, c, cv) for (j, c), cv in state.items()], types, None
+        ),
+        ("j", "code"),
+        "sv",
+        iters,
     )
-    best_code = F.expr(
-        "CASE WHEN exists(_ds, x -> x IS NULL) THEN "
-        "CAST(array_position("
-        "transform(_ds, x -> CAST(x IS NULL AS INT)), 1) AS INT) - 1 "
-        "ELSE CAST(array_position(_ds, array_min(_ds)) AS INT) - 1 END"
+    return local_df(
+        embeddings.sparkSession,
+        [(j, c, state[(j, c)]) for (j, c) in sorted(state)],
+        "j int, code int, cv array<double>",
     )
-    for _ in range(iters):
-        assign = (
-            sub.join(F.broadcast(cbj_df()), "j")
-            .withColumn("_ds", d2s)
-            .withColumn("code", best_code)
-        )
-        mean_rows = (
-            assign.select("j", "code", F.posexplode("sv").alias("dim", "x"))
-            .groupBy("j", "code", "dim")
-            .agg(F.avg("x").alias("mx"))
-            .collect()
-        )
-        upd: dict[tuple, dict[int, float]] = {}
-        for r in mean_rows:
-            # a NULL code (all-null-distance group) never equi-joined
-            # the old codebook — skip, as the old left join did
-            if r["code"] is None:
-                continue
-            upd.setdefault((r["j"], r["code"]), {})[r["dim"]] = r["mx"]
-        # empty codes ((j, code) absent from the means) keep their
-        # previous centroid — the old left-join + coalesce semantics
-        for key, dims in upd.items():
-            cb_state[key] = [dims[d] for d in sorted(dims)]
-    return cb_df()
 
 
 def pq_encode(
@@ -1140,27 +1047,20 @@ def pq_encode(
     contributes 2m per-subspace rows and would assemble a length-2m
     array; the unique-id contract is assumed, as the join-era fold
     assumed it."""
-    cb_rows = _collect_codebook(codebooks)
-    types = (
-        codebooks.schema["j"].dataType.simpleString(),
-        codebooks.schema["code"].dataType.simpleString(),
-        codebooks.schema["cv"].dataType.simpleString(),
-    )
+    cb_rows, types = _collect_codebook(codebooks)
     return _pq_encode_rows(sub, cb_rows, types, id_col, round_digits)
 
 
 def _collect_codebook(codebooks: DataFrame):
-    """The model-sized (j, code, cv) rows, probe-bounded (round-14): a
-    limit(bound) keeps an over-contract codebook from flooding the
-    driver — it raises the clear model-size error instead."""
-    rows = (
-        codebooks.select("j", "code", "cv")
-        .limit(_MODEL_ROWS_BOUND)
-        .collect()
-    )
+    """The model-sized (j, code, cv) rows and the names of their three
+    types, probe-bounded (round-14): a limit(bound) keeps an
+    over-contract codebook from flooding the driver — it raises the
+    clear model-size error instead."""
+    cb = codebooks.select("j", "code", "cv")
+    rows = cb.limit(_MODEL_ROWS_BOUND).collect()
     if len(rows) >= _MODEL_ROWS_BOUND:
         raise ValueError("codebook exceeds the model-size bound")
-    return rows
+    return rows, tuple(f.dataType.simpleString() for f in cb.schema)
 
 
 def _pq_encode_rows(
@@ -1175,72 +1075,77 @@ def _pq_encode_rows(
     the pack) instead of once per consumer (round-14: the second
     parquet read of a stored codebook was one full job per streaming
     micro-batch in st50/st61)."""
-    spark = sub.sparkSession
+    return _pq_pick(sub, cb_rows, types, round_digits).groupBy(id_col).agg(
+        F.expr(
+            "transform(array_sort(collect_list(struct(j, code))), "
+            "s -> s.code)"
+        ).alias("codes")
+    )
+
+
+def _pq_pick(
+    sub: DataFrame,
+    cb_rows,
+    types: tuple[str, str, str],
+    round_digits: int | None,
+) -> DataFrame:
+    """``sub``'s (id, j, sv) rows plus ``code``, the nearest code of
+    subspace j over the driver-held (j, code, cv) ``cb_rows`` of
+    ``types``: packed as one broadcast row per j in code order NULLS
+    FIRST, with the pick inside the row (see :func:`pq_encode` for the
+    semantics of both modes). :func:`pq_train`'s assign step picks
+    here too."""
     j_type, code_type, cv_type = types
     by_j: dict = {}
-    for r in cb_rows:
-        if r["j"] is None:  # a NULL j never equi-joined sub
-            continue
-        by_j.setdefault(r["j"], []).append(
-            (r["code"], list(r["cv"]) if r["cv"] is not None else None)
-        )
+    for j, code, cv in cb_rows:
+        if j is not None:  # a NULL j never equi-joined sub
+            by_j.setdefault(j, []).append((code, cv))
     if round_digits is not None:
-        n_codes = 1 << 21  # matches the ivf packing bound
         for entries in by_j.values():
             for c, _ in entries:
-                if c is None or not (0 <= c < n_codes):
+                if c is None or not (0 <= c < _MODEL_ROWS_BOUND):
                     raise ValueError("code out of packing range")
-    packed = [
-        (
-            j,
-            [cv for _, cv in sorted(es, key=lambda e: (e[0] is not None, e[0]))],
-            [c for c, _ in sorted(es, key=lambda e: (e[0] is not None, e[0]))],
-        )
-        for j, es in sorted(by_j.items())
-    ]
+    packed = []
+    for j, es in sorted(by_j.items()):
+        es.sort(key=lambda e: _nulls_first(e[0]))
+        packed.append((j, [cv for _, cv in es], [c for c, _ in es]))
     cbp = local_df(
-        spark, packed,
+        sub.sparkSession, packed,
         f"j {j_type}, cvs array<{cv_type}>, cds array<{code_type}>",
     )
     ds = F.expr(
         "transform(cvs, cv -> aggregate(zip_with(sv, cv, "
         "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v))"
     )
-    if round_digits is not None:
-        scale = repr(10.0**round_digits)
-        us = F.expr(
-            f"transform(_ds, d -> CAST(round(round(d, {round_digits}) "
-            f"* {scale}D) AS LONG))"
+    picked = sub.join(F.broadcast(cbp), "j").withColumn("_ds", ds)
+    if round_digits is None:
+        return picked.withColumn("_bp", _nulls_first_argmin()).withColumn(
+            "code", F.expr("cds[_bp - 1]")
         )
-        code = F.expr(
-            "CASE WHEN array_min(_us) IS NULL THEN CAST(NULL AS INT) "
-            "ELSE CAST(cds[CAST(array_position(_us, array_min(_us)) "
-            "AS INT) - 1] AS INT) END"
-        )
-        per_subspace = (
-            sub.join(F.broadcast(cbp), "j")
-            .withColumn("_ds", ds)
-            .withColumn("_us", us)
-            .select(F.col(id_col), "j", code.alias("code"))
-        )
-    else:
-        code = F.expr(
-            "CASE WHEN exists(_ds, x -> x IS NULL) THEN "
-            "cds[CAST(array_position("
-            "transform(_ds, x -> CAST(x IS NULL AS INT)), 1) AS INT) - 1] "
-            "ELSE cds[CAST(array_position(_ds, array_min(_ds)) "
-            "AS INT) - 1] END"
-        )
-        per_subspace = (
-            sub.join(F.broadcast(cbp), "j")
-            .withColumn("_ds", ds)
-            .select(F.col(id_col), "j", code.alias("code"))
-        )
-    return per_subspace.groupBy(id_col).agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(j, code))), "
-            "s -> s.code)"
-        ).alias("codes")
+    scale = repr(10.0**round_digits)
+    us = F.expr(
+        f"transform(_ds, d -> CAST(round(round(d, {round_digits}) "
+        f"* {scale}D) AS LONG))"
+    )
+    code = F.expr(
+        "CASE WHEN array_min(_us) IS NULL THEN CAST(NULL AS INT) "
+        "ELSE CAST(cds[CAST(array_position(_us, array_min(_us)) "
+        "AS INT) - 1] AS INT) END"
+    )
+    return picked.withColumn("_us", us).withColumn("code", code)
+
+
+def _nulls_first_argmin(ds: str = "_ds") -> Column:
+    """1-based position of the least element of the array column
+    ``ds``, where a NULL counts as least: the first NULL if there is
+    one, else the first minimum. This is ``min_by(struct(d, pos))``
+    folded inside the row (NULL sorts first, ties to the lower
+    position, NaN greatest). NULL for an empty array."""
+    return F.expr(
+        f"CASE WHEN exists({ds}, x -> x IS NULL) THEN "
+        f"CAST(array_position(transform({ds}, x -> CAST(x IS NULL AS INT)), "
+        f"1) AS INT) ELSE CAST(array_position({ds}, array_min({ds})) AS INT) "
+        "END"
     )
 
 
@@ -1266,25 +1171,20 @@ def pq_encode_vectors(
     (st50/st61). An empty/degenerate codebook falls back to the old
     input dim probe."""
     normalized = l2_normalize(vectors, vec_col)
-    cb_rows = _collect_codebook(codebooks)
-    types = (
-        codebooks.schema["j"].dataType.simpleString(),
-        codebooks.schema["code"].dataType.simpleString(),
-        codebooks.schema["cv"].dataType.simpleString(),
-    )
+    cb_rows, types = _collect_codebook(codebooks)
     sub_d = next(
         (len(r["cv"]) for r in cb_rows if r["cv"] is not None), None
     )
     if sub_d is None:
-        first = normalized.select(vec_col).limit(1).collect()
-        if not first:  # empty input -> empty artifact, right schema
+        dim = _corpus_dim(normalized, vec_col)
+        if dim is None:  # empty input -> empty artifact, right schema
             # id type from the input so the empty artifact unions
             # cleanly with real codes for non-long id columns
             id_type = vectors.schema[id_col].dataType.simpleString()
             return vectors.sparkSession.createDataFrame(
                 [], f"{id_col} {id_type}, codes array<int>"
             )
-        sub_d = len(first[0][0]) // m
+        sub_d = dim // m
     sub = normalized.select(
         F.col(id_col),
         F.posexplode(
@@ -1353,12 +1253,11 @@ def pq_topk(
     normalized = l2_normalize(embeddings, vec_col).localCheckpoint(
         eager=True
     )
-    first = normalized.select(vec_col).limit(1).collect()
-    if not first:  # empty corpus -> empty result with the output schema
+    dim = _corpus_dim(normalized, vec_col)
+    if dim is None:  # empty corpus -> empty result with the output schema
         return embeddings.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine_sim double"
         )
-    dim = len(first[0][0])
     cb = pq_train(embeddings, m, n_codes, iters, id_col, vec_col)
     sub = _subvectors(normalized, m, dim, id_col, vec_col)
     codes = pq_encode(sub, cb, id_col)
@@ -1497,12 +1396,11 @@ def ivfpq_topk(
             f"centroid_id {id_type}, centroid_vec array<double>",
         )
     else:
-        first = normalized.select(vec_col).limit(1).collect()
-        if not first:  # empty corpus -> empty result, output schema
+        dim = _corpus_dim(normalized, vec_col)
+        if dim is None:  # empty corpus -> empty result, output schema
             return embeddings.sparkSession.createDataFrame(
                 [], "query_id long, neighbor_id long, cosine_sim double"
             )
-        dim = len(first[0][0])
         centroids = centroids.select(
             F.col(centroids.columns[0]).alias("centroid_id"),
             F.col(centroids.columns[1]).alias("centroid_vec"),
@@ -1769,12 +1667,11 @@ def ivfpq_residual_topk(
         )
     else:
         cent_rows = None
-        first = normalized.select(vec_col).limit(1).collect()
-        if not first:  # empty corpus -> empty result, output schema
+        dim = _corpus_dim(normalized, vec_col)
+        if dim is None:  # empty corpus -> empty result, output schema
             return embeddings.sparkSession.createDataFrame(
                 [], "query_id long, neighbor_id long, cosine_sim double"
             )
-        dim = len(first[0][0])
         centroids = centroids.select(
             F.col(centroids.columns[0]).alias("centroid_id"),
             F.col(centroids.columns[1]).alias("centroid_vec"),
@@ -1883,11 +1780,7 @@ def ivfpq_residual_topk(
     # the exact per-(j) inner join the in-plan build did (NULL j never
     # equi-joined; j outside the slice set had no q_sub row).
     sub_d = dim // m
-    cb_rows = (
-        cb.select("j", "code", "cv").limit(_MODEL_ROWS_BOUND).collect()
-    )
-    if len(cb_rows) >= _MODEL_ROWS_BOUND:
-        raise ValueError("codebook exceeds the model-size bound")
+    cb_rows, (j_type, code_type, _) = _collect_codebook(cb)
     adc_rows = []
     for pr in probe_rows:
         qres = _zip_sub_py(pr["query_vec"], pr["centroid_vec"])
@@ -1912,8 +1805,6 @@ def ivfpq_residual_topk(
                     ),
                 )
             )
-    j_type = cb.schema["j"].dataType.simpleString()
-    code_type = cb.schema["code"].dataType.simpleString()
     adc_table = local_df(
         spark,
         adc_rows,
@@ -2021,24 +1912,19 @@ def ivfpq_residual_encode(
     micro-batch (st61). An empty/degenerate codebook falls back to the
     old input dim probe."""
     normalized = l2_normalize(vectors, vec_col)
-    cb_rows = _collect_codebook(codebooks)
-    types = (
-        codebooks.schema["j"].dataType.simpleString(),
-        codebooks.schema["code"].dataType.simpleString(),
-        codebooks.schema["cv"].dataType.simpleString(),
-    )
+    cb_rows, types = _collect_codebook(codebooks)
     sub_d = next(
         (len(r["cv"]) for r in cb_rows if r["cv"] is not None), None
     )
     if sub_d is None:
-        first = normalized.select(vec_col).limit(1).collect()
-        if not first:
+        dim = _corpus_dim(normalized, vec_col)
+        if dim is None:
             id_type = vectors.schema[id_col].dataType.simpleString()
             return vectors.sparkSession.createDataFrame(
                 [],
                 f"{id_col} {id_type}, centroid_id long, codes array<int>",
             )
-        sub_d = len(first[0][0]) // m
+        sub_d = dim // m
     cents = centroids.select(
         F.col(centroids.columns[0]).alias("centroid_id"),
         F.col(centroids.columns[1]).alias("centroid_vec"),
@@ -2574,32 +2460,18 @@ def sq8_kmeans(
     """Lloyd's k-means over SQ8-QUANTIZED vectors, integer-exact end to
     end — the FAISS-style coarse-quantizer training step (train the
     cluster structure on compressed codes, not raw floats) made
-    externally hash-verifiable: distances are 64-bit integer squared
-    L2 between code arrays, ties break to the lower centroid id, and
-    the centroid update is the per-dimension FLOOR mean (integer
-    division) — no float ever enters, so an oracle can replay every
-    iteration (the ivf_train float path can only be rows-only/recall
-    checked; this is the quantized twin that hashes).
+    externally hash-verifiable. ``k`` centroids are seeded with the
+    lowest-id codes (re-keyed 0..k-1 in id order) and refined by
+    ``iters`` rounds of :func:`_lloyd`, whose integer mean is the
+    per-dimension sum DIV count. A code array joins its nearest
+    centroid by 64-bit integer squared L2 (a NULL distance wins, ties
+    to the lower centroid id), so no float ever enters and an oracle
+    can replay every round. Codes are 4× smaller than float32, so the
+    one corpus scan per round reads a quarter of the raw-vector bytes.
 
-    Seeding is the ``k`` lowest-id vectors' codes (the ivf_assign
-    discipline: deterministic, engine-portable). Empty cells keep
-    their previous centroid.
-
-    Plan per iteration: the driver-held centroid state (k rows)
-    broadcasts as one packed row into the code scan, the assign argmin
-    folds IN-ROW over the k-term distance array (no corpus × centroid
-    expansion, no per-id aggregate — see assign_to's comment), and the
-    update shuffles (cid, dim, partial-sum) triples — ≤ k·dims groups
-    after map-side partials — into a bounded driver collect (the d106
-    parameter-server discipline shared with ivf_train/pq_train).
-    Codes are 4× smaller than float32, so even the one corpus-wide
-    scan per iteration reads a quarter of the raw-vector bytes.
-
-    ``max_train_rows`` bounds the Lloyd passes (and the seed pick) to
-    a deterministic hash-bottom sample (:func:`_train_sample` — the
-    ivf_train/pq_train contract, completing sampled training across
-    ALL of the engine's quantizer trainers); the returned assignment
-    still covers the FULL input under the final centroids.
+    ``max_train_rows`` seeds and trains on a deterministic hash-bottom
+    sample, as in :func:`ivf_train`; the returned assignment still
+    covers the FULL input under the final centroids.
 
     Returns ``(centroids, assignment)``: (centroid_id, cent) with
     cent an int array, and (vec_id, centroid_id, d2) under the FINAL
@@ -2609,54 +2481,32 @@ def sq8_kmeans(
         if max_train_rows is None
         else _train_sample(codes, id_col, max_train_rows)
     )
-
-    # in-row argmin (round-13 optimization, guide §2.4/§3.1): previously
-    # a broadcast-crossJoin expanded src × centroids and a struct-keyed
-    # min_by folded it back per id (Sort + Exchange + SortAggregate —
-    # measured on the PQ sibling as the real iteration cost). The
-    # centroids are driver-held state, so pack them as ONE broadcast
-    # row (cent arrays + dense ids, id order) and take the argmin
-    # inside the row. min_by(struct(d2, centroid_id)) semantics
-    # replicated exactly: NULL d2 sorts FIRST (the exists() branch
-    # picks the first NULL, i.e. the lowest centroid id), distance
-    # ties break to the lower id (array_position returns the first
-    # match in id order), the winning d2 rides along (NULL in the
-    # NULL-win case, as min_by carried it). Integer arithmetic is the
-    # same CAST/fold, so distances are exact either way. One output
-    # row per input row — ids key the artifact, as before.
     spark = codes.sparkSession
     elem = train.schema[codes_col].dataType.simpleString()  # array<...>
+    ds = F.expr(
+        f"transform(cvs, cv -> aggregate(zip_with({codes_col}, cv, "
+        "(a, b) -> CAST((a - b) AS BIGINT) * CAST((a - b) AS BIGINT)), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x))"
+    )
 
-    def assign_to(src: DataFrame = codes) -> DataFrame:
-        cds = sorted(cent_state)
-        if not cds:  # empty training set: the old crossJoin with an
-            # empty centroid table produced no rows at all
+    def assign(state: dict, src: DataFrame = train) -> DataFrame:
+        if not state:  # an empty training set has no centroids
             return (
                 src.select(F.col(id_col), F.col(codes_col))
                 .filter(F.lit(False))
                 .withColumn("centroid_id", F.lit(None).cast("long"))
                 .withColumn("d2", F.lit(None).cast("long"))
             )
+        cids = sorted(state)
         packed = local_df(
             spark,
-            [([cent_state[c] for c in cds], [int(c) for c in cds])],
+            [([state[c] for c in cids], cids)],
             f"cvs array<{elem}>, cds array<bigint>",
-        )
-        ds = F.expr(
-            f"transform(cvs, cv -> aggregate(zip_with({codes_col}, cv, "
-            "(a, b) -> CAST((a - b) AS BIGINT) * CAST((a - b) AS BIGINT)), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x))"
-        )
-        pos = F.expr(
-            "CASE WHEN exists(_ds, x -> x IS NULL) THEN "
-            "CAST(array_position("
-            "transform(_ds, x -> CAST(x IS NULL AS INT)), 1) AS INT) "
-            "ELSE CAST(array_position(_ds, array_min(_ds)) AS INT) END"
         )
         return (
             src.crossJoin(F.broadcast(packed))
             .withColumn("_ds", ds)
-            .withColumn("_bp", pos)
+            .withColumn("_bp", _nulls_first_argmin())
             .select(
                 id_col,
                 codes_col,
@@ -2665,58 +2515,20 @@ def sq8_kmeans(
             )
         )
 
-    # seeds: the k lowest-id codes, re-keyed 0..k-1 in id order (the
-    # previous row_number window, done on the driver over k rows —
-    # model-sized state, the d106 parameter-server discipline; NULL ids
-    # sort first, matching Spark's ASC nulls-first window order)
-    seed_rows = sorted(
+    seeds = sorted(
         train.orderBy(id_col)
         .limit(k)
-        .select(
-            F.col(id_col).cast("long").alias("cid0"),
-            F.col(codes_col).alias("cent"),
-        )
+        .select(F.col(id_col).cast("long"), codes_col)
         .collect(),
-        key=lambda r: (r["cid0"] is not None, r["cid0"]),
+        key=lambda r: _nulls_first(r[0]),
     )
-    cent_state: dict[int, list | None] = {
-        i: (list(r["cent"]) if r["cent"] is not None else None)
-        for i, r in enumerate(seed_rows)
-    }
-
-    def cents_df() -> DataFrame:
-        rows = [(cid, cent_state[cid]) for cid in sorted(cent_state)]
-        return local_df(
-            spark, rows, f"centroid_id long, cent {elem}"
-        )
-
-    for _ in range(iters):
-        assign = assign_to(train)
-        mean_rows = (
-            assign.select(
-                "centroid_id",
-                F.posexplode(codes_col).alias("dim", "x"),
-            )
-            .groupBy("centroid_id", "dim")
-            .agg(
-                F.sum(F.col("x").cast("long")).alias("sx"),
-                F.count("*").alias("n"),
-            )
-            .collect()
-        )
-        upd: dict[int, dict[int, int]] = {}
-        for r in mean_rows:
-            if r["centroid_id"] is None:
-                continue
-            sx, n = r["sx"], r["n"]
-            # Spark's `sx DIV n` truncates toward zero; replicate for
-            # any sign (codes are nonnegative in practice, where this
-            # equals floor division)
-            q = abs(sx) // n if sx is not None else None
-            m = None if q is None else (q if sx >= 0 else -q)
-            upd.setdefault(r["centroid_id"], {})[r["dim"]] = m
-        # empty cells keep their previous centroid (old left-join +
-        # coalesce semantics)
-        for cid, dims in upd.items():
-            cent_state[cid] = [dims[d] for d in sorted(dims)]
-    return cents_df(), assign_to()
+    state = {i: r[1] for i, r in enumerate(seeds)}
+    _lloyd(state, assign, ("centroid_id",), codes_col, iters)
+    return (
+        local_df(
+            spark,
+            [(c, state[c]) for c in sorted(state)],
+            f"centroid_id long, cent {elem}",
+        ),
+        assign(state, codes),
+    )

@@ -94,16 +94,55 @@ def test_every_embeddings_query_survives_zero_vectors(
     )
 
 
+def _stored_centroids(emb):
+    return emb.sparkSession.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 1.0]), (1, [0.0, 1.0, 1.0, 0.0])],
+        "centroid_id bigint, centroid_vec array<double>",
+    )
+
+
+def _empty_codebook(emb):
+    return emb.sparkSession.createDataFrame(
+        [], "j int, code int, cv array<double>"
+    )
+
+
+#: the entry points that read the corpus's vector dimension (the
+#: encoders only when the codebook has no vector to read it from)
+DIM_PROBING_CALLS = {
+    "pq_train": lambda emb, sim: sim.pq_train(emb, m=2, n_codes=2, iters=1),
+    "pq_topk": lambda emb, sim: sim.pq_topk(
+        emb, k=2, m=2, n_codes=2, query_id=2
+    ),
+    "ivfpq_topk": lambda emb, sim: sim.ivfpq_topk(
+        emb, k=2, n_centroids=2, m=2
+    ),
+    "ivfpq_topk-centroids": lambda emb, sim: sim.ivfpq_topk(
+        emb, k=2, m=2, query_id=2, centroids=_stored_centroids(emb)
+    ),
+    "ivfpq_residual_topk": lambda emb, sim: sim.ivfpq_residual_topk(
+        emb, k=2, n_centroids=2, m=2
+    ),
+    "ivfpq_residual_topk-centroids": lambda emb, sim: (
+        sim.ivfpq_residual_topk(
+            emb, k=2, m=2, query_id=2, centroids=_stored_centroids(emb)
+        )
+    ),
+    "pq_encode_vectors-empty-codebook": lambda emb, sim: (
+        sim.pq_encode_vectors(emb, _empty_codebook(emb), m=2)
+    ),
+    "ivfpq_residual_encode-empty-codebook": lambda emb, sim: (
+        sim.ivfpq_residual_encode(
+            emb, _stored_centroids(emb), _empty_codebook(emb), m=2
+        )
+    ),
+}
+
+
 @pytest.mark.parametrize(
     "call",
-    [
-        lambda emb, sim: sim.pq_train(emb, m=2, n_codes=2, iters=1),
-        lambda emb, sim: sim.ivfpq_topk(emb, k=2, n_centroids=2, m=2),
-        lambda emb, sim: sim.ivfpq_residual_topk(
-            emb, k=2, n_centroids=2, m=2
-        ),
-    ],
-    ids=["pq_train", "ivfpq_topk", "ivfpq_residual_topk"],
+    list(DIM_PROBING_CALLS.values()),
+    ids=list(DIM_PROBING_CALLS),
 )
 def test_all_null_vectors_raise_a_named_error(spark, call):
     """The dimension probe of an all-NULL corpus has nothing to read:
@@ -116,6 +155,30 @@ def test_all_null_vectors_raise_a_named_error(spark, call):
     )
     with pytest.raises(ValueError, match="no non-null vectors to infer dim"):
         call(emb, similarity).collect()
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pq_topk", "ivfpq_topk-centroids", "ivfpq_residual_topk-centroids"],
+)
+def test_null_first_vector_still_serves(spark, name):
+    """A NULL vector on the row the dimension probe reads first must
+    not hide the valid vectors behind it."""
+    from etl_example_spark.operators import similarity
+
+    emb = spark.createDataFrame(
+        [
+            (1, None),
+            (2, [1.0, 0.0, 0.0, 1.0]),
+            (3, [0.0, 1.0, 1.0, 0.0]),
+            (4, [1.0, 1.0, 0.0, 0.0]),
+            (5, [0.0, 0.0, 1.0, 1.0]),
+        ],
+        "vec_id bigint, embedding array<float>",
+    ).coalesce(1)
+    rows = DIM_PROBING_CALLS[name](emb, similarity).collect()
+    assert rows
+    assert {r["query_id"] for r in rows} == {2}
 
 
 @pytest.mark.parametrize(

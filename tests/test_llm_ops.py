@@ -1765,6 +1765,123 @@ class TestSq8Kmeans:
         assert assign.select("vec_id").distinct().count() == n
 
 
+def _ivf_model(spark, rows, k, iters):
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cents = similarity.ivf_train(emb, n_centroids=k, iters=iters)
+    return {r["centroid_id"]: r["centroid_vec"] for r in cents.collect()}
+
+
+def _pq_model(spark, rows, k, iters):
+    """One subspace (m=1), no normalization: each code's cv is a cell
+    vector over the rows as given."""
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    cb = similarity.pq_train(emb, m=1, n_codes=k, iters=iters, normalize=False)
+    return {r["code"]: r["cv"] for r in cb.collect()}
+
+
+def _sq8_model(spark, rows, k, iters):
+    codes = spark.createDataFrame(rows, "vec_id bigint, codes array<int>")
+    cents, _ = similarity.sq8_kmeans(codes, k=k, iters=iters)
+    return {r["centroid_id"]: r["cent"] for r in cents.collect()}
+
+
+LLOYD_TRAINERS = {"ivf": _ivf_model, "pq": _pq_model, "sq8": _sq8_model}
+
+#: (trainer, rows, k, iters, model): hand-derived models on inputs the
+#: fixtures never contain. Seeds are the k lowest ids; ties go to the
+#: lower cell.
+LLOYD_CASES = {
+    "ivf-iters0-returns-seeds": (
+        "ivf", [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])], 2, 0,
+        {1: [1.0, 0.0], 2: [0.0, 1.0]},
+    ),
+    "pq-iters0-returns-seeds": (
+        "pq", [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])], 2, 0,
+        {0: [1.0, 0.0], 1: [0.0, 1.0]},
+    ),
+    "sq8-iters0-returns-seeds": (
+        "sq8", [(1, [0, 0]), (2, [100, 100]), (3, [50, 51])], 2, 0,
+        {0: [0, 0], 1: [100, 100]},
+    ),
+    # identical seeds: every row ties, joins the lower cell, and the
+    # other cell has no members
+    "ivf-empty-cell-keeps-its-vector": (
+        "ivf", [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [2.0, 0.0])], 2, 1,
+        {1: [4.0 / 3, 0.0], 2: [1.0, 0.0]},
+    ),
+    "pq-empty-cell-keeps-its-vector": (
+        "pq", [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [2.0, 0.0])], 2, 1,
+        {0: [4.0 / 3, 0.0], 1: [1.0, 0.0]},
+    ),
+    "sq8-empty-cell-keeps-its-vector": (
+        "sq8", [(1, [7, 7]), (2, [7, 7]), (3, [10, 10])], 2, 1,
+        {0: [8, 8], 1: [7, 7]},
+    ),
+    # the NULL-id seed's cell draws [1, 0] and [3, 0]: its mean [2, 0]
+    # is never written back
+    "ivf-null-key-group-is-skipped": (
+        "ivf",
+        [(None, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [0.0, 2.0]), (3, [3.0, 0.0])],
+        2, 1,
+        {None: [1.0, 0.0], 1: [0.0, 1.5]},
+    ),
+    # the zero vector's cosines are all NULL: it joins centroid 1, the
+    # lowest non-NULL id, and pulls that mean to [0, 4/3] (not [0, 2])
+    "ivf-zero-vector-joins-lowest-non-null-id": (
+        "ivf",
+        [(None, [1.0, 1.0]), (1, [0.0, 1.0]), (2, [1.0, 0.0]),
+         (3, [0.0, 0.0]), (4, [0.0, 3.0])],
+        3, 1,
+        {None: [1.0, 1.0], 1: [0.0, 4.0 / 3], 2: [1.0, 0.0]},
+    ),
+    # cell 0 sums to [-7, -8] over 3 rows: truncation gives [-2, -2]
+    # where a floor would give [-3, -3]
+    "sq8-negative-mean-truncates-toward-zero": (
+        "sq8", [(1, [0, 0]), (2, [100, 100]), (3, [-3, -4]), (4, [-4, -4])],
+        2, 1,
+        {0: [-2, -2], 1: [100, 100]},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(LLOYD_CASES))
+def test_lloyd_trainer_semantics(spark, case):
+    """The Lloyd rules ivf_train, pq_train and sq8_kmeans share: iters=0
+    is the seeds, a cell with no members keeps its vector, a NULL-key
+    group is skipped, ivf_train sends an all-NULL-similarity vector to
+    the lowest non-NULL centroid id, and sq8's integer mean truncates
+    toward zero."""
+    trainer, rows, k, iters, model = LLOYD_CASES[case]
+    assert LLOYD_TRAINERS[trainer](spark, rows, k, iters) == model
+
+
+@pytest.mark.parametrize("trainer", ["ivf_train", "pq_train", "sq8_kmeans"])
+def test_lloyd_round_job_budget(spark, sf_correctness_dir, trainer):
+    """Each extra Lloyd round costs at most 3 Spark jobs: the assign +
+    per-(cell, dim) mean shuffle and its one bounded collect. Measured
+    at 3 per round for all three trainers on the sf0.01 embeddings."""
+    from tests.jobs import launched_jobs
+
+    emb = load_table(spark, sf_correctness_dir, "embeddings")
+    if trainer == "sq8_kmeans":
+        emb = similarity.sq8_encode(emb, similarity.sq8_train(emb))
+        emb = emb.localCheckpoint(eager=True)
+    train = getattr(similarity, trainer)
+
+    def jobs(iters):
+        with launched_jobs(spark) as launched:
+            train(emb, iters=iters)
+        return len(launched)
+
+    jobs(1)  # warm
+    shallow, deep = jobs(1), jobs(3)
+    per_round = (deep - shallow) / 2
+    assert per_round <= 3, (
+        f"{trainer}: {per_round:.1f} jobs per extra round "
+        f"({shallow} at 1 round, {deep} at 3)"
+    )
+
+
 class TestDftBinEnergy:
     """Fixed-point DFT-bin energy (operators/multimodal.dft_bin_energy)."""
 

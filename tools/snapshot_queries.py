@@ -1,7 +1,7 @@
 """Row-for-row snapshots of the no-oracle approximate queries.
 
 The oracle contract covers SQL-expressible queries; the approximates
-(s33/s40/s58/s60) are verified across code changes by comparing rows
+(s33/s40/s42/s58/s60) are verified across code changes by comparing rows
 bit-for-bit between the pre-change and post-change implementations —
 the discipline OPTIMIZATION_r13.md records for every similarity.py
 change.
@@ -18,7 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-DEFAULT = ["s33_ann_topk", "s40_ivf_topk", "s58_ivfpq_topk",
+DEFAULT = ["s33_ann_topk", "s40_ivf_topk", "s42_pq_topk", "s58_ivfpq_topk",
            "s60_ivfpq_residual_topk", "s31_cosine_topk"]
 SFS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
