@@ -29,13 +29,11 @@ from etl_example_spark.functions.localrel import local_df, sql_ident
 
 
 def _as_double(col: Column | str) -> Column:
-    """``CAST(col AS array<double>)`` — element-wise, exactly the
-    per-element ``transform(x -> CAST(x AS double))`` it replaces
-    (round-14: the transform-lambda build cost ~4 py4j round trips per
-    call and an ArrayTransform at runtime where a single Cast suffices;
-    float→double widening is exact either way, NULL arrays/elements
-    pass through identically — :func:`_cosine_sims` already documented
-    the CAST form as the same arithmetic)."""
+    """``CAST(col AS array<double>)``: the same values as a per-element
+    ``transform(x -> CAST(x AS double))`` (float→double widening is
+    exact, NULL arrays and elements pass through), as one Cast instead
+    of a lambda that costs py4j round trips to build and an
+    ArrayTransform to run."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
 
@@ -57,7 +55,7 @@ def _cosine_sql(a: str, b: str) -> str:
     """The :func:`cosine` arithmetic as SQL text over two column NAMES —
     term-for-term the Python-builder form (same casts, same fold seeds,
     same operand order), so values are bit-identical; one F.expr parse
-    instead of ~10 py4j lambda-builder round trips (round-14)."""
+    instead of ~10 py4j lambda-builder round trips."""
     da, db = (f"CAST({sql_ident(c)} AS array<double>)" for c in (a, b))
     return (
         f"try_divide(aggregate(zip_with({da}, {db}, (x, y) -> x * y), "
@@ -84,9 +82,9 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 def _cosine_sims(vec_col: str, cvs_col: str = "cvs") -> Column:
     """``transform(cvs, cv -> round(cosine(vec, cv), 6))`` as one
     SQL-text expression — the in-row form of the rounded :func:`cosine`
-    column, evaluated against a PACKED array of centroid vectors
-    (round-13: the trainers/assigners pick the nearest centroid inside
-    the row instead of expanding corpus × centroids through a join).
+    column, evaluated against a PACKED array of centroid vectors (the
+    trainers and assigners pick the nearest centroid inside the row
+    instead of expanding corpus × centroids through a join).
     Identical arithmetic to ``round(cosine(...), 6)`` term for term
     (same casts, same fold seeds, same operand order), so the
     similarity values are bit-identical; SQL-text lambdas, not
@@ -105,6 +103,48 @@ def _cosine_sims(vec_col: str, cvs_col: str = "cvs") -> Column:
     )
 
 
+#: The schema of an empty single-query top-k result.
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine_sim double"
+
+
+def _pick_query(
+    df: DataFrame,
+    query_id: int | None,
+    id_col: str,
+    vec_col: str,
+    *extra: Column,
+) -> DataFrame:
+    """(query_id, query_vec, *extra): the row of ``df`` whose id is
+    ``query_id``, or by default the lowest-id row whose vector is not
+    NULL — deterministic without parameters, and never a NULL query
+    that would score every neighbor NULL."""
+    if query_id is None:
+        query = df.filter(F.col(vec_col).isNotNull()).orderBy(id_col).limit(1)
+    else:
+        query = df.filter(F.col(id_col) == query_id)
+    return query.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"),
+        *extra,
+    )
+
+
+def _rerank(cands: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """The exact tail of every single-query top-k: (query_id,
+    neighbor_id, cosine_sim) for the candidate rows, which carry the
+    query's ``query_id``/``query_vec`` next to their own id and vector;
+    cosine rounded to 6 places, the ``k`` most similar first, ties to
+    the lower neighbor id."""
+    return (
+        cands.select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            F.round(cosine(vec_col, "query_vec"), 6).alias("cosine_sim"),
+        )
+        .orderBy(F.desc("cosine_sim"), "neighbor_id")
+        .limit(k)
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     query_id: int | None = None,
@@ -113,24 +153,14 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k neighbors of one corpus vector (default: the
-    min-id vector, so the query is deterministic without parameters)."""
-    if query_id is None:
-        query = embeddings.orderBy(id_col).limit(1)
-    else:
-        query = embeddings.filter(F.col(id_col) == query_id)
-    q = query.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    return (
-        embeddings.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(vec_col, "query_vec"), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), "neighbor_id")
-        .limit(k)
+    lowest-id non-NULL vector, so the query is deterministic without
+    parameters)."""
+    q = _pick_query(embeddings, query_id, id_col, vec_col)
+    return _rerank(
+        embeddings.crossJoin(F.broadcast(q)).filter(
+            F.col(id_col) != F.col("query_id")
+        ),
+        k, id_col, vec_col,
     )
 
 
@@ -238,48 +268,33 @@ def ivf_assign_with_centroids(
     :func:`ivf_assign` (seeded centroids) and :func:`ivf_append`
     (stored centroids).
 
-    In-row argmax (round-13 optimization, guide §2.4/§3.1): previously a
-    broadcast-crossJoin expanded corpus × centroids and a packed-bigint
-    max folded it back per (id, vec) — correct and HashAggregate-
-    shaped, but the expansion plus the corpus-keyed aggregate (the
-    full VECTOR was a group key) measured as the whole cost. The
-    centroid table is MODEL-SIZED by contract (it broadcast before),
-    so collect it, pack it as ONE row (centroid vectors + ids ordered
-    by centroid_id ASC NULLS FIRST — the order the old dense
-    row_number codes encoded), and take the argmax inside the row:
-    the corpus is a pure map now — no expansion, no aggregate, no
-    shuffle at any scale. The centroid table is EAGERLY collected at
-    plan-construction time (a limit(2^21-row) probe bounds what can
-    reach the driver; an over-contract table raises the old "too many
-    centroids" error before materializing — round-14). Old semantics
-    replicated exactly, with two documented divergences (ADVICE r13):
-    (1) NaN — the old packed round(sim*1e6) CAST collapsed a NaN
-    cosine to sim 0.0, while array_max sorts NaN greatest, so a
-    NaN-similarity centroid now WINS with c_sim NaN (as in
-    :func:`ivf_train`, which picks through :func:`_ivf_pick` too);
-    (2) duplicate input
-    ids — the old per-(id, vec) aggregate collapsed exact-duplicate
-    rows to one output row, the in-row map emits one row per INPUT row
-    (observable only when the unique-id contract is violated). Ties
-    break to the lower centroid id (array_position returns the first
-    match in id order, == the old complement-code max); degenerate
-    (zero-norm) vectors have every cosine NULL, array_max ignores
-    NULLs so an all-NULL row yields NULL centroid_id/c_sim — the old
-    LEFT-join survival; c_sim is the same round(cosine, 6) double the
-    packed micro-units round-tripped to; an empty centroid table
-    yields the empty result the old crossJoin produced. Returns
+    The pick happens inside the row (guide §2.4/§3.1): the centroid
+    table is MODEL-SIZED by contract, so it is collected on the driver
+    at plan-construction time and packed as ONE broadcast row (vectors
+    and ids in centroid_id order, NULLS FIRST), and the corpus side is
+    a pure map — no corpus × centroids expansion, no corpus-keyed
+    aggregate, no shuffle at any scale. A ``limit(2^21)`` probe bounds
+    what can reach the driver: an over-contract table raises "too many
+    centroids" before anything larger is collected.
+
+    Semantics: ties break to the lower centroid id (array_position
+    returns the first match in id order); a degenerate (zero-norm)
+    vector has every cosine NULL, array_max ignores NULLs, so its row
+    keeps NULL centroid_id/c_sim; c_sim is the round(cosine, 6)
+    double; an empty centroid table gives an empty result. Two edges
+    (ADVICE r13): (1) a NaN-similarity centroid WINS with c_sim NaN,
+    as array_max sorts NaN greatest (as in :func:`ivf_train`, which
+    picks through :func:`_ivf_pick` too); (2) every INPUT row gives
+    one output row, so exact-duplicate rows stay duplicated (only
+    visible when the unique-id contract is violated). Returns
     (id, vec, centroid_id, c_sim)."""
-    cid_col, cvec_col = centroids.columns[0], centroids.columns[1]
-    cid_type = centroids.schema[cid_col].dataType.simpleString()
-    cvec_type = centroids.schema[cvec_col].dataType.simpleString()
-    # limit(bound) probe: at most bound rows ever reach the driver —
-    # hitting the bound means the artifact is over the same 2^21
-    # centroid-count contract the packed max asserted, so the raise is
-    # the old behavior, now BEFORE an unbounded collect (round-14)
+    cents = _centroid_block(centroids)
+    cid_type, cvec_type = (f.dataType.simpleString() for f in cents.schema)
+    # limit(bound) probe: at most bound rows ever reach the driver;
+    # reaching the bound means the artifact is over the 2^21
+    # centroid-count contract
     cent_rows = sorted(
-        centroids.select(cid_col, cvec_col)
-        .limit(_MODEL_ROWS_BOUND)
-        .collect(),
+        cents.limit(_MODEL_ROWS_BOUND).collect(),
         key=lambda r: _nulls_first(r[0]),
     )
     if len(cent_rows) >= _MODEL_ROWS_BOUND:
@@ -339,6 +354,30 @@ def _ivf_pick(
     )
 
 
+def seed_centroids(
+    df: DataFrame,
+    n: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The ``n`` lowest-id vectors of ``df`` as (centroid_id,
+    centroid_vec): the deterministic, SQL-replayable coarse seeding
+    the IVF paths share. Lazy; a NULL id sorts first."""
+    return df.orderBy(id_col).limit(n).select(
+        F.col(id_col).alias("centroid_id"),
+        F.col(vec_col).alias("centroid_vec"),
+    )
+
+
+def _centroid_block(centroids: DataFrame) -> DataFrame:
+    """A stored centroid artifact with its first two columns renamed
+    (centroid_id, centroid_vec), whatever the artifact called them."""
+    return centroids.select(
+        F.col(centroids.columns[0]).alias("centroid_id"),
+        F.col(centroids.columns[1]).alias("centroid_vec"),
+    )
+
+
 def ivf_assign(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -352,14 +391,7 @@ def ivf_assign(
     deterministic seeding; production IVF runs a few Lloyd iterations
     (or pyspark.ml KMeans) over the same assign step, which changes only
     centroid *values*, not the plan shape."""
-    centroids = (
-        embeddings.orderBy(id_col)
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            F.col(vec_col).alias("centroid_vec"),
-        )
-    )
+    centroids = seed_centroids(embeddings, n_centroids, id_col, vec_col)
     return ivf_assign_with_centroids(embeddings, centroids, id_col, vec_col)
 
 
@@ -592,6 +624,35 @@ def ivf_train(
     )
 
 
+def _require(artifact: str, given, **quantizers) -> None:
+    """Raise when the per-vector ``artifact`` is ``given`` without the
+    quantizers it was built with: serving it against a self-trained
+    quantizer would silently mix two indexes."""
+    if given is not None and any(q is None for q in quantizers.values()):
+        names = " and ".join(f"{name}=" for name in quantizers)
+        raise ValueError(
+            f"{artifact}= serving requires the quantizer artifacts it was "
+            f"built with ({names}); a self-trained quantizer would not "
+            "match it"
+        )
+
+
+def _probe(
+    centroids: DataFrame, q: DataFrame, nprobe: int, *cols: str
+) -> DataFrame:
+    """``cols`` and ``q_sim`` of the ``nprobe`` centroids nearest the
+    query ``q`` by rounded cosine, ties to the lower centroid id."""
+    return (
+        centroids.crossJoin(F.broadcast(q))
+        .select(
+            *cols,
+            F.round(cosine("centroid_vec", "query_vec"), 6).alias("q_sim"),
+        )
+        .orderBy(F.desc("q_sim"), "centroid_id")
+        .limit(nprobe)
+    )
+
+
 def ivf_topk(
     embeddings: DataFrame,
     query_id: int | None = None,
@@ -619,58 +680,30 @@ def ivf_topk(
     query time (at 100 TB the per-query coarse assignment IS a corpus
     pass; the stored table turns it into a semi-join against
     nprobe/n_centroids of the artifact). Passing neither self-assigns
-    per call (the demo composition, byte-identical to the historical
-    behavior). Law: artifact-served == in-query for the same centroid
-    set (the s59a registration certifies it externally the way s61
-    does for IVF-PQ)."""
-    if centroids is None:
-        centroids = (
-            embeddings.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-        )
-    else:
-        centroids = centroids.select(
-            F.col(centroids.columns[0]).alias("centroid_id"),
-            F.col(centroids.columns[1]).alias("centroid_vec"),
-        )
-    if assignments is None:
-        assign = ivf_assign_with_centroids(
-            embeddings, centroids, id_col, vec_col
-        )
-    else:
-        assign = assignments
-    if query_id is None:
-        query = assign.orderBy(id_col).limit(1)
-    else:
-        query = assign.filter(F.col(id_col) == query_id)
-    q = query.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    per call (the demo composition); ``assignments`` without its
+    ``centroids`` raises ValueError. Law: artifact-served == in-query
+    for the same centroid set (the s59a registration certifies it
+    externally the way s61 does for IVF-PQ)."""
+    _require("assignments", assignments, centroids=centroids)
+    centroids = (
+        seed_centroids(embeddings, n_centroids, id_col, vec_col)
+        if centroids is None
+        else _centroid_block(centroids)
     )
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(q))
-        .select(
-            "centroid_id",
-            F.round(cosine("centroid_vec", "query_vec"), 6).alias("q_sim"),
-        )
-        .orderBy(F.desc("q_sim"), "centroid_id")
-        .limit(nprobe)
-        .select("centroid_id")
+    assign = (
+        assignments
+        if assignments is not None
+        else ivf_assign_with_centroids(embeddings, centroids, id_col, vec_col)
     )
-    return (
+    q = _pick_query(assign, query_id, id_col, vec_col)
+    probe_cells = _probe(centroids, q, nprobe, "centroid_id").select(
+        "centroid_id"
+    )
+    return _rerank(
         assign.join(F.broadcast(probe_cells), "centroid_id")
         .crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(vec_col, "query_vec"), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), "neighbor_id")
-        .limit(k)
+        .filter(F.col(id_col) != F.col("query_id")),
+        k, id_col, vec_col,
     )
 
 
@@ -703,10 +736,7 @@ def ivf_topk_batch(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
     )
-    cents = centroids.select(
-        F.col(centroids.columns[0]).alias("centroid_id"),
-        F.col(centroids.columns[1]).alias("centroid_vec"),
-    )
+    cents = _centroid_block(centroids)
     w_probe = Window.partitionBy("query_id").orderBy(
         F.desc("q_sim"), F.asc("centroid_id")
     )
@@ -754,13 +784,8 @@ def ann_topk(
     The candidate set is corpus_size / 2^bits per probe on average —
     sub-linear scan at scale, same TakeOrdered tail as brute force."""
     bucketed = signed_projection_buckets(embeddings, bits, dims, id_col, vec_col)
-    if query_id is None:
-        query = bucketed.orderBy(id_col).limit(1)
-    else:
-        query = bucketed.filter(F.col(id_col) == query_id)
-    q = query.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
+    q = _pick_query(
+        bucketed, query_id, id_col, vec_col,
         F.col("bucket").alias("query_bucket"),
     )
     # Hamming ≤ 1: equal, or differing in exactly one bit position.
@@ -773,16 +798,11 @@ def ann_topk(
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    return (
-        bucketed.crossJoin(F.broadcast(q))
-        .filter((F.col(id_col) != F.col("query_id")) & (hamming <= 1))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(vec_col, "query_vec"), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), "neighbor_id")
-        .limit(k)
+    return _rerank(
+        bucketed.crossJoin(F.broadcast(q)).filter(
+            (F.col(id_col) != F.col("query_id")) & (hamming <= 1)
+        ),
+        k, id_col, vec_col,
     )
 
 
@@ -822,7 +842,7 @@ def l2_normalize(df: DataFrame, vec_col: str) -> DataFrame:
 def _slices_sql(vec_sql: str, m: int, sub_d: int) -> str:
     """``array(slice(v, 1, d), slice(v, d+1, d), ...)`` as SQL text over
     a vector EXPRESSION — one parsed expression instead of m py4j
-    slice-builder round trips (round-14); identical slice arithmetic."""
+    slice-builder round trips; identical slice arithmetic."""
     return (
         "array("
         + ", ".join(
@@ -833,12 +853,11 @@ def _slices_sql(vec_sql: str, m: int, sub_d: int) -> str:
 
 
 #: Model-size bound on driver-collected quantizer state (centroid
-#: tables, codebooks) — the packing bound the join-era kernels asserted
-#: in-plan (2^21 codes). Round-14: enforced with a ``limit(bound)``
-#: probe BEFORE the collect materializes (an over-contract artifact
-#: fails fast with a clear error instead of flooding the driver —
-#: ADVICE r13), and the SQL render of a near-bound model falls back to
-#: binary createDataFrame transport inside local_df (VERDICT r13 #3).
+#: tables, codebooks): 2^21 codes. Enforced with a ``limit(bound)``
+#: probe, so an over-contract artifact fails fast with a clear error
+#: instead of flooding the driver (ADVICE r13); the SQL render of a
+#: near-bound model falls back to binary createDataFrame transport
+#: inside local_df (VERDICT r13 #3).
 _MODEL_ROWS_BOUND = 1 << 21
 
 
@@ -882,9 +901,9 @@ def _sq_l2_py(a, b):
 
 
 def _residual(vec_col: str, cent_col: str = "centroid_vec") -> Column:
-    """``v − c`` element-wise in double — the Python-lambda zip_with it
-    replaces, as one parsed expression (round-14 py4j-chatter cut);
-    identical arithmetic (same casts, same subtraction order)."""
+    """``v − c`` element-wise in double, as one parsed expression
+    rather than a Python-lambda zip_with (fewer py4j round trips, the
+    same casts and subtraction order)."""
     return F.expr(
         f"zip_with(CAST({sql_ident(vec_col)} AS array<double>), "
         f"CAST({sql_ident(cent_col)} AS array<double>), (x, y) -> x - y)"
@@ -1015,47 +1034,35 @@ def pq_encode(
     the oracle-checked s48 registration uses, mirroring the rounded-
     cosine convention of the search queries.
 
-    In-row argmin (round-13 optimization, guide §2.4/§3.1): the encode
-    previously expanded sub × codebook (rows·n_codes joined rows)
-    through a broadcast join and folded back per (id, j) — min over a
-    packed bigint (rounded mode) or a struct-keyed min_by that
-    compiled to Sort + Exchange + SortAggregate (unrounded mode).
-    Measured, that expansion + fold dominated the encode. The codebook
-    is MODEL-SIZED by contract (m·n_codes rows — the same contract
-    that lets pq_train hold it in driver state), so collect it EAGERLY
-    at plan-construction time (round-14: a limit(2^21-row) probe
-    bounds what can reach the driver; an over-contract codebook raises
-    a clear model-size error before materializing), pack
-    it per subspace ordered by code (NULL codes first, mirroring how a
-    NULL code won the old struct min_by on a distance tie), and pick
-    the nearest code inside the row: one output row per input (id, j),
-    no expansion, no per-(id, j) shuffle fold. Old-fold semantics are
-    replicated exactly: per-pair distance is the same _sq_l2 fold
-    (bit-identical floats), NULL distance sorts first in the unrounded
-    mode (exists() branch -> first NULL position -> lowest code) but
-    is SKIPPED by the rounded mode's min (array_min ignores NULLs; all
-    NULL -> NULL code, as min over an all-NULL column was), ties break
-    to the lower code (array_position returns the first match in
-    code order), NaN sorts greatest, a NULL-j codebook row never
-    equi-joins (excluded from the pack), and a j absent from the
-    codebook drops its sub rows (the packed table only carries js with
-    entries, and the inner join stays). The rounded mode's in-plan
-    packing-range assert becomes a driver-side check on the collected
-    artifact (same contract: int codes in [0, 2^21)). Duplicate-id
-    caveat (ADVICE r13): the final groupBy(id) assembles ONE codes
-    array per id from every (id, j) row — a duplicated input id
-    contributes 2m per-subspace rows and would assemble a length-2m
-    array; the unique-id contract is assumed, as the join-era fold
-    assumed it."""
+    In-row argmin (guide §2.4/§3.1): the codebook is MODEL-SIZED by
+    contract (m·n_codes rows, the contract that lets pq_train hold it
+    in driver state), so it is collected EAGERLY at plan-construction
+    time, behind a limit(2^21-row) probe that raises a clear
+    model-size error for an over-contract codebook. It is packed per
+    subspace in code order (NULL codes first) and the nearest code is
+    picked inside the row: one output row per input (id, j), no sub ×
+    codebook expansion, no per-(id, j) shuffle fold. Semantics: the
+    per-pair distance is the _sq_l2 fold (bit-identical floats); a
+    NULL distance wins in the unrounded mode (exists() branch -> first
+    NULL position -> lowest code) but is SKIPPED by the rounded mode's
+    min (array_min ignores NULLs; all NULL -> NULL code); ties break to
+    the lower code (array_position returns the first match in code
+    order); NaN sorts greatest; a NULL-j codebook row is left out of
+    the pack, and a j absent from the codebook drops its sub rows (the
+    inner join on j). The rounded mode checks on the driver that every
+    code is an int in [0, 2^21). Duplicate-id caveat (ADVICE r13): the
+    final groupBy(id) assembles ONE codes array per id from every
+    (id, j) row, so a duplicated input id would assemble a length-2m
+    array; the unique-id contract is assumed."""
     cb_rows, types = _collect_codebook(codebooks)
     return _pq_encode_rows(sub, cb_rows, types, id_col, round_digits)
 
 
 def _collect_codebook(codebooks: DataFrame):
     """The model-sized (j, code, cv) rows and the names of their three
-    types, probe-bounded (round-14): a limit(bound) keeps an
-    over-contract codebook from flooding the driver — it raises the
-    clear model-size error instead."""
+    types, probe-bounded: a limit(bound) keeps an over-contract
+    codebook from flooding the driver — it raises the clear model-size
+    error instead."""
     cb = codebooks.select("j", "code", "cv")
     rows = cb.limit(_MODEL_ROWS_BOUND).collect()
     if len(rows) >= _MODEL_ROWS_BOUND:
@@ -1071,10 +1078,9 @@ def _pq_encode_rows(
     round_digits: int | None,
 ) -> DataFrame:
     """:func:`pq_encode` body over PRE-COLLECTED codebook rows — the
-    encode-path entry points collect the codebook once (for sub_d and
-    the pack) instead of once per consumer (round-14: the second
-    parquet read of a stored codebook was one full job per streaming
-    micro-batch in st50/st61)."""
+    encode-path entry points collect the codebook once, for both sub_d
+    and the pack: a second read of a stored codebook would cost one
+    full job per streaming micro-batch (st50/st61)."""
     return _pq_pick(sub, cb_rows, types, round_digits).groupBy(id_col).agg(
         F.expr(
             "transform(array_sort(collect_list(struct(j, code))), "
@@ -1162,14 +1168,13 @@ def pq_encode_vectors(
     subspace. The (id, codes) artifact this emits is what a PQ index
     stores per vector.
 
-    Round-14: the codebook is collected ONCE (probe-bounded) and
-    supplies both the slicing width (sub_d = the stored subvector
-    length — the artifact defines the geometry, == dim//m for any
-    consistently-trained pair) and the encode pack — previously a
-    batch-side limit(1) dim probe plus a second codebook read cost two
-    extra jobs per call, one full job each per streaming micro-batch
-    (st50/st61). An empty/degenerate codebook falls back to the old
-    input dim probe."""
+    The codebook is collected ONCE (probe-bounded) and supplies both
+    the slicing width (sub_d = the stored subvector length — the
+    artifact defines the geometry, == dim//m for any consistently-
+    trained pair) and the encode pack, so a call costs no dim-probe job
+    and no second codebook read (one full job each per streaming
+    micro-batch, st50/st61). An empty/degenerate codebook falls back to
+    the input dim probe."""
     normalized = l2_normalize(vectors, vec_col)
     cb_rows, types = _collect_codebook(codebooks)
     sub_d = next(
@@ -1227,6 +1232,93 @@ def pq_append(
     )
 
 
+def _local_vectors(spark, rows, names: tuple[str, str], id_type: str):
+    """Driver-held (id, vector) rows as a literal frame of ``names``,
+    the vectors as ``array<double>``."""
+    return local_df(
+        spark,
+        [(i, None if v is None else list(v)) for i, v in rows],
+        f"{names[0]} {id_type}, {names[1]} array<double>",
+    )
+
+
+def _coarse_centroids(
+    normalized: DataFrame,
+    centroids: DataFrame | None,
+    n_centroids: int,
+    id_col: str,
+    vec_col: str,
+):
+    """The coarse quantizer of the IVF-PQ serving paths as
+    ``(centroids, cent_rows, dim)``, or None for an empty corpus.
+
+    Given ``centroids`` come back renamed, with ``cent_rows`` None and
+    ``dim`` read from the corpus. Self-trained ones are the
+    :func:`seed_centroids` of ``normalized``, collected once: the rows
+    (``cent_rows``) give the empty-corpus check (no centroids ⟺ no
+    rows), the dimension, and a literal LocalRelation for every
+    downstream centroid reference, so the seeding subtree does not
+    re-execute inside the probe, the residual join and the candidate
+    restriction."""
+    spark = normalized.sparkSession
+    if centroids is not None:
+        dim = _corpus_dim(normalized, vec_col)
+        return None if dim is None else (_centroid_block(centroids), None, dim)
+    cent_rows = seed_centroids(
+        normalized, n_centroids, id_col, vec_col
+    ).collect()
+    if not cent_rows:
+        return None
+    dim = _probe_dim(r["centroid_vec"] for r in cent_rows)
+    id_type = normalized.schema[id_col].dataType.simpleString()
+    block = _local_vectors(
+        spark, cent_rows, ("centroid_id", "centroid_vec"), id_type
+    )
+    return block, cent_rows, dim
+
+
+def _adc_table(cb: DataFrame, q: DataFrame, m: int, dim: int) -> DataFrame:
+    """(query_id, j, code, d2): the ADC lookup table, the squared L2
+    from the query's subvector j to every code of subspace j."""
+    q_sub = _subvectors(q, m, dim, "query_id", "query_vec").select(
+        "query_id", "j", F.col("sv").alias("qv")
+    )
+    return (
+        cb.join(F.broadcast(q_sub), "j")
+        .withColumn("d2", _sq_l2("qv", "cv"))
+        .select("query_id", "j", "code", "d2")
+    )
+
+
+def _adc_shortlist(
+    codes: DataFrame,
+    adc_table: DataFrame,
+    q: DataFrame,
+    corpus: DataFrame,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The ``shortlist`` rows of ``codes`` (id, *keys, codes) nearest
+    the query by ADC — each code looked up in ``adc_table`` on
+    (*keys, j, code) and the distances summed, the query itself left
+    out, ties to the lower id — joined to their ``corpus`` vectors and
+    to ``q``, ready for the exact :func:`_rerank`."""
+    approx = (
+        codes.select(id_col, *keys, F.posexplode("codes").alias("j", "code"))
+        .join(F.broadcast(adc_table), [*keys, "j", "code"])
+        .groupBy(id_col, "query_id")
+        .agg(F.sum("d2").alias("approx_d2"))
+        .filter(F.col(id_col) != F.col("query_id"))
+        .orderBy("approx_d2", id_col)
+        .limit(shortlist)
+    )
+    return approx.join(corpus.select(id_col, vec_col), id_col).join(
+        F.broadcast(q), "query_id"
+    )
+
+
 def pq_topk(
     embeddings: DataFrame,
     k: int = 10,
@@ -1255,50 +1347,17 @@ def pq_topk(
     )
     dim = _corpus_dim(normalized, vec_col)
     if dim is None:  # empty corpus -> empty result with the output schema
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine_sim double"
-        )
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
     cb = pq_train(embeddings, m, n_codes, iters, id_col, vec_col)
-    sub = _subvectors(normalized, m, dim, id_col, vec_col)
-    codes = pq_encode(sub, cb, id_col)
-
-    if query_id is None:
-        query = normalized.orderBy(id_col).limit(1)
-    else:
-        query = normalized.filter(F.col(id_col) == query_id)
-    q_sub = _subvectors(query, m, dim, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        "j",
-        F.col("sv").alias("qv"),
+    codes = pq_encode(
+        _subvectors(normalized, m, dim, id_col, vec_col), cb, id_col
     )
-    adc_table = (
-        cb.join(F.broadcast(q_sub), "j")
-        .withColumn("d2", _sq_l2("qv", "cv"))
-        .select("query_id", "j", "code", "d2")
+    q = _pick_query(normalized, query_id, id_col, vec_col)
+    cands = _adc_shortlist(
+        codes, _adc_table(cb, q, m, dim), q, normalized, shortlist,
+        id_col, vec_col,
     )
-    approx = (
-        codes.select(id_col, F.posexplode("codes").alias("j", "code"))
-        .join(F.broadcast(adc_table), ["j", "code"])
-        .groupBy(id_col, "query_id")
-        .agg(F.sum("d2").alias("approx_d2"))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .orderBy("approx_d2", id_col)
-        .limit(shortlist)
-    )
-    q_vec = query.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    return (
-        approx.join(normalized.select(id_col, vec_col), id_col)
-        .join(F.broadcast(q_vec), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(vec_col, "query_vec"), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), "neighbor_id")
-        .limit(k)
-    )
+    return _rerank(cands, k, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -1355,56 +1414,23 @@ def ivfpq_topk(
     NO candidate re-encoding at query time, which at 100 TB is the
     difference between an index probe and a per-query encode pass over
     nprobe/n_centroids of the corpus. The s65 registration certifies
-    fully-served == self-trained externally.
+    fully-served == self-trained externally. ``assignments`` without
+    ``centroids``, or ``codes`` without ``codebooks``, raises
+    ValueError.
 
     Output schema matches ``brute_force_topk`` (query_id, neighbor_id,
     cosine_sim)."""
+    _require("assignments", assignments, centroids=centroids)
+    _require("codes", codes, codebooks=codebooks)
     normalized = l2_normalize(embeddings, vec_col).localCheckpoint(
         eager=True
     )
-    if centroids is None:
-        # Round-14: one model-sized collect supplies the empty-corpus
-        # check (empty centroids ⟺ empty corpus), the vector dimension
-        # and a literal LocalRelation for every downstream centroid
-        # reference — see ivfpq_residual_topk for the rationale.
-        cent_rows = (
-            normalized.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-            .collect()
-        )
-        if not cent_rows:  # empty corpus -> empty result, output schema
-            return embeddings.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine_sim double"
-            )
-        dim = _probe_dim(r["centroid_vec"] for r in cent_rows)
-        id_type = normalized.schema[id_col].dataType.simpleString()
-        centroids = local_df(
-            embeddings.sparkSession,
-            [
-                (
-                    r["centroid_id"],
-                    list(r["centroid_vec"])
-                    if r["centroid_vec"] is not None
-                    else None,
-                )
-                for r in cent_rows
-            ],
-            f"centroid_id {id_type}, centroid_vec array<double>",
-        )
-    else:
-        dim = _corpus_dim(normalized, vec_col)
-        if dim is None:  # empty corpus -> empty result, output schema
-            return embeddings.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine_sim double"
-            )
-        centroids = centroids.select(
-            F.col(centroids.columns[0]).alias("centroid_id"),
-            F.col(centroids.columns[1]).alias("centroid_vec"),
-        )
+    coarse = _coarse_centroids(
+        normalized, centroids, n_centroids, id_col, vec_col
+    )
+    if coarse is None:  # empty corpus -> empty result, output schema
+        return embeddings.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    centroids, _, dim = coarse
     assign = (
         assignments
         if assignments is not None
@@ -1412,22 +1438,9 @@ def ivfpq_topk(
             normalized, centroids, id_col, vec_col
         )
     )
-    if query_id is None:
-        query = assign.orderBy(id_col).limit(1)
-    else:
-        query = assign.filter(F.col(id_col) == query_id)
-    q = query.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    probe_cells = (
-        centroids.crossJoin(F.broadcast(q))
-        .select(
-            "centroid_id",
-            F.round(cosine("centroid_vec", "query_vec"), 6).alias("q_sim"),
-        )
-        .orderBy(F.desc("q_sim"), "centroid_id")
-        .limit(nprobe)
-        .select("centroid_id")
+    q = _pick_query(assign, query_id, id_col, vec_col)
+    probe_cells = _probe(centroids, q, nprobe, "centroid_id").select(
+        "centroid_id"
     )
     cand = assign.join(F.broadcast(probe_cells), "centroid_id").select(
         id_col, vec_col
@@ -1454,36 +1467,11 @@ def ivfpq_topk(
         cand_codes = pq_encode(
             _subvectors(cand, m, dim, id_col, vec_col), cb, id_col
         )
-    q_sub = _subvectors(
-        query.select(id_col, vec_col), m, dim, id_col, vec_col
-    ).select(
-        F.col(id_col).alias("query_id"), "j", F.col("sv").alias("qv")
+    cands = _adc_shortlist(
+        cand_codes, _adc_table(cb, q, m, dim), q, normalized, shortlist,
+        id_col, vec_col,
     )
-    adc_table = (
-        cb.join(F.broadcast(q_sub), "j")
-        .withColumn("d2", _sq_l2("qv", "cv"))
-        .select("query_id", "j", "code", "d2")
-    )
-    approx = (
-        cand_codes.select(id_col, F.posexplode("codes").alias("j", "code"))
-        .join(F.broadcast(adc_table), ["j", "code"])
-        .groupBy(id_col, "query_id")
-        .agg(F.sum("d2").alias("approx_d2"))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .orderBy("approx_d2", id_col)
-        .limit(shortlist)
-    )
-    return (
-        approx.join(normalized.select(id_col, vec_col), id_col)
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(vec_col, "query_vec"), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), "neighbor_id")
-        .limit(k)
-    )
+    return _rerank(cands, k, id_col, vec_col)
 
 
 def ivfpq_residual_train(
@@ -1516,14 +1504,7 @@ def ivfpq_residual_train(
     normalized = l2_normalize(embeddings, vec_col).localCheckpoint(
         eager=True
     )
-    centroids = (
-        normalized.orderBy(id_col)
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            F.col(vec_col).alias("centroid_vec"),
-        )
-    )
+    centroids = seed_centroids(normalized, n_centroids, id_col, vec_col)
     train = (
         normalized
         if max_train_rows is None
@@ -1608,74 +1589,29 @@ def ivfpq_residual_topk(
     query time (the s66 registration certifies fully-served ==
     self-trained externally).
 
-    Eager-collect behavior (round-14): the query row, the probe
-    ranking, the codebook (bounded by a limit(2^21-row) probe) and the
-    ADC table are model-sized and are materialized on the DRIVER at
-    plan-construction time — build-time Spark jobs fire even if the
-    returned frame is never acted on, and an over-contract codebook
-    raises before materializing.
+    The query row, the probe ranking, the codebook (bounded by a
+    limit(2^21-row) probe) and the ADC table are model-sized and are
+    materialized on the DRIVER at plan-construction time: build-time
+    Spark jobs fire even if the returned frame is never acted on, and
+    an over-contract codebook raises before materializing.
 
     Output schema matches ``brute_force_topk`` (query_id, neighbor_id,
     cosine_sim)."""
-    if codes is not None and (centroids is None or codebooks is None):
-        raise ValueError(
-            "codes= serving requires the matching centroids= and "
-            "codebooks= artifacts (the probe and the ADC table are "
-            "built from them)"
-        )
+    _require("codes", codes, centroids=centroids, codebooks=codebooks)
     normalized = l2_normalize(embeddings, vec_col).localCheckpoint(
         eager=True
     )
     spark = embeddings.sparkSession
-    if centroids is None:
-        # Round-14: ONE model-sized collect of the self-trained coarse
-        # centroids supplies the empty-corpus check (empty centroids ⟺
-        # empty corpus — they are the n_centroids lowest-id corpus
-        # vectors), the vector dimension, AND a literal LocalRelation
-        # serving every downstream centroid reference — previously the
-        # orderBy/limit subtree over the checkpointed corpus
-        # re-executed inside the probe, the residual join and the
-        # candidate restriction, plus a separate limit(1) dim-probe
-        # job (guide §2.4/§5).
-        cent_rows = (
-            normalized.orderBy(id_col)
-            .limit(n_centroids)
-            .select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-            .collect()
-        )
-        if not cent_rows:  # empty corpus -> empty result, output schema
-            return embeddings.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine_sim double"
-            )
-        dim = _probe_dim(r["centroid_vec"] for r in cent_rows)
-        id_type = normalized.schema[id_col].dataType.simpleString()
-        centroids = local_df(
-            spark,
-            [
-                (
-                    r["centroid_id"],
-                    list(r["centroid_vec"])
-                    if r["centroid_vec"] is not None
-                    else None,
-                )
-                for r in cent_rows
-            ],
-            f"centroid_id {id_type}, centroid_vec array<double>",
-        )
-    else:
-        cent_rows = None
-        dim = _corpus_dim(normalized, vec_col)
-        if dim is None:  # empty corpus -> empty result, output schema
-            return embeddings.sparkSession.createDataFrame(
-                [], "query_id long, neighbor_id long, cosine_sim double"
-            )
-        centroids = centroids.select(
-            F.col(centroids.columns[0]).alias("centroid_id"),
-            F.col(centroids.columns[1]).alias("centroid_vec"),
-        )
+    coarse = _coarse_centroids(
+        normalized, centroids, n_centroids, id_col, vec_col
+    )
+    if coarse is None:  # empty corpus -> empty result, output schema
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    centroids, cent_rows, dim = coarse
+    cb = codebooks
+    # Fully served, the stored (id, centroid_id, codes) artifact
+    # supplies both the cell membership and the codes: no corpus
+    # assignment, no residual formation at query time.
     if codes is None:
         assign = ivf_assign_with_centroids(
             normalized, centroids, id_col, vec_col
@@ -1692,93 +1628,47 @@ def ivfpq_residual_topk(
             )
             .localCheckpoint(eager=True)
         )
-        cb = (
-            codebooks
-            if codebooks is not None
-            else pq_train(
-                res.select(id_col, F.col("_res")),
-                m,
-                n_codes,
-                iters,
-                id_col,
-                "_res",
-                normalize=False,
+        if cb is None:
+            cb = pq_train(
+                res.select(id_col, "_res"), m, n_codes, iters, id_col,
+                "_res", normalize=False,
             )
-        )
-    else:
-        # fully-served path: the stored (id, centroid_id, codes)
-        # artifact supplies both the cell membership and the codes —
-        # no corpus assignment, no residual formation at query time
-        res = None
-        cb = codebooks
 
-    # Round-14 (guide §2.4/§5): the query block, the probe and the ADC
-    # table are MODEL-SIZED (1 row, ≤ nprobe rows, ≤ nprobe·m·n_codes
-    # rows) but were built as plan subtrees whose corpus-touching
-    # limit scans re-executed inside every downstream reference (two
-    # broadcast builds of the probe, one of q, one of q_sub — each an
-    # AQE stage job of the final plan). Collect the query row once —
-    # in the self-trained default-query case it IS the first collected
-    # centroid row (both are the lowest-id normalized vector), zero
-    # extra jobs — rank the probe with a tiny Spark plan over the
-    # collected blocks (the round/try_divide arithmetic stays Spark's,
-    # bit for bit), replay the query-residual subtraction and the
-    # _sq_l2 fold on the driver (exact IEEE double ops — no rounding
-    # or division in that chain), and hand every consumer a literal
-    # LocalRelation.
+    # The query block, the probe and the ADC table are MODEL-SIZED
+    # (1 row, ≤ nprobe rows, ≤ nprobe·m·n_codes rows), and as plan
+    # subtrees their corpus-touching limit scans would re-execute
+    # inside every downstream reference (guide §2.4/§5). So the query
+    # row is collected once — by default, self-trained, it IS the
+    # first collected centroid with a non-NULL vector (both are the
+    # lowest-id non-NULL normalized vector), zero extra jobs — the
+    # probe is ranked by a tiny Spark plan over the collected blocks
+    # (the round/try_divide arithmetic stays Spark's, bit for bit),
+    # the query-residual subtraction and the _sq_l2 fold are replayed
+    # on the driver (exact IEEE double ops — no rounding or division
+    # in that chain), and every consumer reads a literal LocalRelation.
     id_type = normalized.schema[id_col].dataType.simpleString()
-    if query_id is None and cent_rows is not None and n_centroids > 0:
-        q_rows = [
-            {
-                "query_id": cent_rows[0]["centroid_id"],
-                "query_vec": cent_rows[0]["centroid_vec"],
-            }
-        ]
+    first = next((r for r in cent_rows or () if r[1] is not None), None)
+    if query_id is None and first is not None:
+        q_rows = [first]
     else:
-        if query_id is None:
-            query = normalized.orderBy(id_col).limit(1)
-        else:
-            query = normalized.filter(F.col(id_col) == query_id)
-        q_rows = query.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("query_vec"),
-        ).collect()
-    q = local_df(
-        spark,
-        [
-            (
-                r["query_id"],
-                list(r["query_vec"])
-                if r["query_vec"] is not None
-                else None,
-            )
-            for r in q_rows
-        ],
-        f"query_id {id_type}, query_vec array<double>",
-    )
-    probe_rows = (
-        centroids.crossJoin(F.broadcast(q))
-        .select(
-            "centroid_id",
-            "centroid_vec",
-            "query_id",
-            "query_vec",
-            F.round(cosine("centroid_vec", "query_vec"), 6).alias("q_sim"),
+        q_rows = _pick_query(normalized, query_id, id_col, vec_col).collect()
+    q = _local_vectors(spark, q_rows, ("query_id", "query_vec"), id_type)
+    probe_rows = _probe(
+        centroids, q, nprobe,
+        "centroid_id", "centroid_vec", "query_id", "query_vec",
+    ).collect()
+    probed = F.broadcast(
+        local_df(
+            spark,
+            [(r["centroid_id"],) for r in probe_rows],
+            f"centroid_id {id_type}",
         )
-        .orderBy(F.desc("q_sim"), "centroid_id")
-        .limit(nprobe)
-        .collect()
-    )
-    probe_cells = local_df(
-        spark,
-        [(r["centroid_id"],) for r in probe_rows],
-        f"centroid_id {id_type}",
     )
     # ADC lookup rows per (cell, subspace, code), replayed driver-side:
     # q_res = query − centroid (zip_with subtraction), _subvectors'
     # pure slices, then the _sq_l2 fold against each codebook entry —
-    # the exact per-(j) inner join the in-plan build did (NULL j never
-    # equi-joined; j outside the slice set had no q_sub row).
+    # the rows a per-j inner join gives (a NULL j never joins; a j
+    # outside the slice set has no query subvector).
     sub_d = dim // m
     cb_rows, (j_type, code_type, _) = _collect_codebook(cb)
     adc_rows = []
@@ -1814,66 +1704,23 @@ def ivfpq_residual_topk(
     # candidates: residual codes of the probed cells only — from the
     # stored per-vector artifact when given (a pure semi-join, nothing
     # re-encoded), else encoded here from the residual frame
-    if codes is not None:
-        exploded = (
-            codes.join(
-                F.broadcast(probe_cells.select("centroid_id")),
-                "centroid_id",
-            )
-            .select(
-                F.col(id_col),
-                F.col("centroid_id"),
-                F.posexplode("codes").alias("j", "code"),
-            )
-        )
-    else:
+    if codes is None:
         cand_codes = pq_encode(
-            res.join(
-                F.broadcast(probe_cells.select("centroid_id")),
-                "centroid_id",
-            ).select(
+            res.join(probed, "centroid_id").select(
                 F.col(id_col),
-                F.col("centroid_id").alias("_cell"),
                 F.posexplode(
                     F.expr(_slices_sql("`_res`", m, sub_d))
                 ).alias("j", "sv"),
-            ).select(id_col, "j", "sv"),
+            ),
             cb,
             id_col,
         )
-        cells = res.select(id_col, F.col("centroid_id"))
-        exploded = (
-            cand_codes.join(cells, id_col)
-            .join(
-                F.broadcast(probe_cells.select("centroid_id")),
-                "centroid_id",
-            )
-            .select(
-                id_col,
-                "centroid_id",
-                F.posexplode("codes").alias("j", "code"),
-            )
-        )
-    approx = (
-        exploded
-        .join(F.broadcast(adc_table), ["centroid_id", "j", "code"])
-        .groupBy(id_col, "query_id")
-        .agg(F.sum("d2").alias("approx_d2"))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .orderBy("approx_d2", id_col)
-        .limit(shortlist)
+        codes = cand_codes.join(res.select(id_col, "centroid_id"), id_col)
+    cands = _adc_shortlist(
+        codes.join(probed, "centroid_id"), adc_table, q, normalized,
+        shortlist, id_col, vec_col, keys=("centroid_id",),
     )
-    return (
-        approx.join(normalized.select(id_col, vec_col), id_col)
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(vec_col, "query_vec"), 6).alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), "neighbor_id")
-        .limit(k)
-    )
+    return _rerank(cands, k, id_col, vec_col)
 
 
 def ivfpq_residual_encode(
@@ -1904,13 +1751,12 @@ def ivfpq_residual_encode(
     Degenerate (zero-norm) vectors get NULL centroid assignment and
     drop out, matching :func:`ivfpq_residual_topk`'s corpus side.
 
-    Round-14: the codebook is collected ONCE (probe-bounded) and
-    supplies both the slicing width (sub_d = the stored subvector
-    length — the artifact defines the geometry) and the encode pack —
-    previously a batch-side limit(1) dim probe plus a second codebook
-    read cost two extra jobs per call, one full job each per streaming
-    micro-batch (st61). An empty/degenerate codebook falls back to the
-    old input dim probe."""
+    The codebook is collected ONCE (probe-bounded) and supplies both
+    the slicing width (sub_d = the stored subvector length — the
+    artifact defines the geometry) and the encode pack, so a call
+    costs no dim-probe job and no second codebook read (one full job
+    each per streaming micro-batch, st61). An empty/degenerate codebook
+    falls back to the input dim probe."""
     normalized = l2_normalize(vectors, vec_col)
     cb_rows, types = _collect_codebook(codebooks)
     sub_d = next(
@@ -1925,10 +1771,7 @@ def ivfpq_residual_encode(
                 f"{id_col} {id_type}, centroid_id long, codes array<int>",
             )
         sub_d = dim // m
-    cents = centroids.select(
-        F.col(centroids.columns[0]).alias("centroid_id"),
-        F.col(centroids.columns[1]).alias("centroid_vec"),
-    )
+    cents = _centroid_block(centroids)
     assign = ivf_assign_with_centroids(normalized, cents, id_col, vec_col)
     res = assign.join(F.broadcast(cents), "centroid_id").select(
         F.col(id_col),
@@ -2007,7 +1850,8 @@ def hybrid_search_rrf(
 ) -> DataFrame:
     """Hybrid retrieval with reciprocal-rank fusion: a keyword ranking
     (query-term occurrence count over the text) and a semantic ranking
-    (cosine vs the min-id corpus vector as the deterministic query) are
+    (cosine vs the lowest-id non-NULL corpus vector as the
+    deterministic query) are
     fused as Σ 1_000_000 // (rrf_k + rank) — RRF in exact integer
     arithmetic, so the fused ordering is engine-portable.
 
@@ -2035,11 +1879,7 @@ def hybrid_search_rrf(
     scored_kw = docs.select(
         F.col(id_col).alias("doc_id"), kw_score.alias("kw_score")
     )
-    query = (
-        embeddings.orderBy(vec_id_col)
-        .limit(1)
-        .select(F.col(vec_col).alias("query_vec"))
-    )
+    query = _pick_query(embeddings, None, vec_id_col, vec_col)
     scored_sem = (
         embeddings.crossJoin(F.broadcast(query))
         .select(
@@ -2172,9 +2012,10 @@ def mmr_rerank(
     spends the budget on coverage).
 
     Architecture: the two corpus-scale steps are distributed — the
-    relevance scan (broadcast query × corpus, TakeOrderedAndProject to
-    ``pool``) and the pool's pairwise similarity matrix (pool² rows,
-    same fixed-order :func:`cosine` fold as every similarity op). Only
+    relevance scan against the lowest-id non-NULL vector (broadcast
+    query × corpus, TakeOrderedAndProject to ``pool``) and the pool's
+    pairwise similarity matrix (pool² rows, same fixed-order
+    :func:`cosine` fold as every similarity op). Only
     the greedy k-step argmax runs on the driver, over the ≤ pool²
     collected scalars — the bounded re-rank stage every production
     retrieval stack runs driver-side. ``lam``/``mu`` are independent
@@ -2183,10 +2024,7 @@ def mmr_rerank(
     (:func:`mmr_oracle_sql`); relevances and similarities enter it
     rounded to 6 decimals; ties break on the id.
     """
-    query = embeddings.orderBy(id_col).limit(1)
-    q = query.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
+    q = _pick_query(embeddings, None, id_col, vec_col)
     cand = (
         embeddings.crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != F.col("query_id"))
@@ -2260,7 +2098,8 @@ def mmr_oracle_sql(
     head = f"""
         q AS (
             SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-            FROM embeddings ORDER BY vec_id LIMIT 1
+            FROM embeddings WHERE embedding IS NOT NULL
+            ORDER BY vec_id LIMIT 1
         ),
         cand AS (
             SELECT e.vec_id AS cid, CAST(e.embedding AS DOUBLE[]) AS cv,

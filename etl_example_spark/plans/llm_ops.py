@@ -522,7 +522,8 @@ def d39_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH q AS (
             SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-            FROM embeddings ORDER BY vec_id LIMIT 1
+            FROM embeddings WHERE embedding IS NOT NULL
+            ORDER BY vec_id LIMIT 1
         )
         SELECT qid AS query_id,
                e.vec_id AS neighbor_id,
@@ -601,6 +602,14 @@ def s40_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(emb, k=10, n_centroids=16, nprobe=8)
 
 
+#: The registered IVF-PQ serving configuration (s58, s60 and their
+#: recall and serve-law twins): 16 cells probed 8 at a time, 16
+#: subspaces of 32 codes trained for 4 rounds, a 200-row ADC shortlist.
+IVFPQ_SERVE = dict(
+    k=10, n_centroids=16, nprobe=8, m=16, n_codes=32, iters=4, shortlist=200
+)
+
+
 @register(
     "s58_ivfpq_topk",
     "COMPOSED IVF-PQ approximate nearest neighbors — the production "
@@ -619,10 +628,7 @@ def s40_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s58_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_topk(
-        emb, k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-        iters=4, shortlist=200,
-    )
+    return similarity.ivfpq_topk(emb, **IVFPQ_SERVE)
 
 
 @register(
@@ -642,10 +648,7 @@ def s58a_ivfpq_recall_bound(
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     exact = similarity.brute_force_topk(emb, k=10)
-    approx = similarity.ivfpq_topk(
-        emb, k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-        iters=4, shortlist=200,
-    )
+    approx = similarity.ivfpq_topk(emb, **IVFPQ_SERVE)
     return _recall_certificate(exact, approx, min_hits=5)
 
 
@@ -673,10 +676,7 @@ def s60_ivfpq_residual_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_residual_topk(
-        emb, k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-        iters=4, shortlist=200,
-    )
+    return similarity.ivfpq_residual_topk(emb, **IVFPQ_SERVE)
 
 
 @register(
@@ -697,10 +697,7 @@ def s60a_ivfpq_residual_recall_bound(
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     exact = similarity.brute_force_topk(emb, k=10)
-    approx = similarity.ivfpq_residual_topk(
-        emb, k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-        iters=4, shortlist=200,
-    )
+    approx = similarity.ivfpq_residual_topk(emb, **IVFPQ_SERVE)
     return _recall_certificate(exact, approx, min_hits=8)
 
 
@@ -725,32 +722,13 @@ def s60a_ivfpq_residual_recall_bound(
 def s61_ivfpq_artifact_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     norm = similarity.l2_normalize(emb, "embedding")
-    cents = (
-        norm.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
+    cents = similarity.seed_centroids(norm, 16)
     cb = similarity.pq_train(norm, 16, 32, 4, "vec_id", "embedding")
-    kw = dict(k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-              iters=4, shortlist=200)
-    served = similarity.ivfpq_topk(emb, centroids=cents, codebooks=cb, **kw)
-    self_trained = similarity.ivfpq_topk(emb, **kw)
-    agree = served.join(
-        self_trained, ["query_id", "neighbor_id", "cosine_sim"]
+    served = similarity.ivfpq_topk(
+        emb, centroids=cents, codebooks=cb, **IVFPQ_SERVE
     )
-    return (
-        served.agg(F.count("*").alias("n_served"))
-        .crossJoin(agree.agg(F.count("*").alias("_n_agree")))
-        .select(
-            "n_served",
-            (F.col("_n_agree") == F.col("n_served")).alias(
-                "artifact_serve_ok"
-            ),
-        )
-    )
+    self_trained = similarity.ivfpq_topk(emb, **IVFPQ_SERVE)
+    return _serve_law_certificate(served, self_trained)
 
 
 @register(
@@ -780,25 +758,11 @@ def s63_ivfpq_residual_artifact_law(
     cents, cb = similarity.ivfpq_residual_train(
         emb, n_centroids=16, m=16, n_codes=32, iters=4
     )
-    kw = dict(k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-              iters=4, shortlist=200)
     served = similarity.ivfpq_residual_topk(
-        emb, centroids=cents, codebooks=cb, **kw
+        emb, centroids=cents, codebooks=cb, **IVFPQ_SERVE
     )
-    self_trained = similarity.ivfpq_residual_topk(emb, **kw)
-    agree = served.join(
-        self_trained, ["query_id", "neighbor_id", "cosine_sim"]
-    )
-    return (
-        served.agg(F.count("*").alias("n_served"))
-        .crossJoin(agree.agg(F.count("*").alias("_n_agree")))
-        .select(
-            "n_served",
-            (F.col("_n_agree") == F.col("n_served")).alias(
-                "artifact_serve_ok"
-            ),
-        )
-    )
+    self_trained = similarity.ivfpq_residual_topk(emb, **IVFPQ_SERVE)
+    return _serve_law_certificate(served, self_trained)
 
 
 @register(
@@ -898,37 +862,16 @@ def s65_ivfpq_fully_served_law(
 ) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     norm = similarity.l2_normalize(emb, "embedding")
-    cents = (
-        norm.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
+    cents = similarity.seed_centroids(norm, 16)
     cb = similarity.pq_train(norm, 16, 32, 4, "vec_id", "embedding")
     assignments = similarity.ivf_assign_with_centroids(norm, cents)
     code_table = similarity.pq_encode_vectors(emb, cb, m=16)
-    kw = dict(k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-              iters=4, shortlist=200)
     served = similarity.ivfpq_topk(
         emb, centroids=cents, codebooks=cb,
-        assignments=assignments, codes=code_table, **kw
+        assignments=assignments, codes=code_table, **IVFPQ_SERVE
     )
-    self_trained = similarity.ivfpq_topk(emb, **kw)
-    agree = served.join(
-        self_trained, ["query_id", "neighbor_id", "cosine_sim"]
-    )
-    return (
-        served.agg(F.count("*").alias("n_served"))
-        .crossJoin(agree.agg(F.count("*").alias("_n_agree")))
-        .select(
-            "n_served",
-            (F.col("_n_agree") == F.col("n_served")).alias(
-                "artifact_serve_ok"
-            ),
-        )
-    )
+    self_trained = similarity.ivfpq_topk(emb, **IVFPQ_SERVE)
+    return _serve_law_certificate(served, self_trained)
 
 
 @register(
@@ -957,25 +900,11 @@ def s66_residual_fully_served_law(
         emb, n_centroids=16, m=16, n_codes=32, iters=4
     )
     code_table = similarity.ivfpq_residual_encode(emb, cents, cb, m=16)
-    kw = dict(k=10, n_centroids=16, nprobe=8, m=16, n_codes=32,
-              iters=4, shortlist=200)
     served = similarity.ivfpq_residual_topk(
-        emb, centroids=cents, codebooks=cb, codes=code_table, **kw
+        emb, centroids=cents, codebooks=cb, codes=code_table, **IVFPQ_SERVE
     )
-    self_trained = similarity.ivfpq_residual_topk(emb, **kw)
-    agree = served.join(
-        self_trained, ["query_id", "neighbor_id", "cosine_sim"]
-    )
-    return (
-        served.agg(F.count("*").alias("n_served"))
-        .crossJoin(agree.agg(F.count("*").alias("_n_agree")))
-        .select(
-            "n_served",
-            (F.col("_n_agree") == F.col("n_served")).alias(
-                "artifact_serve_ok"
-            ),
-        )
-    )
+    self_trained = similarity.ivfpq_residual_topk(emb, **IVFPQ_SERVE)
+    return _serve_law_certificate(served, self_trained)
 
 
 @register(
@@ -1642,6 +1571,28 @@ def _recall_certificate(
     )
 
 
+def _serve_law_certificate(
+    served: DataFrame, reference: DataFrame
+) -> DataFrame:
+    """1-row serve-law certificate: (n_served, artifact_serve_ok) where
+    artifact_serve_ok = every served top-k row is in the ``reference``
+    top-k on every output column. The counterpart of
+    :func:`_recall_certificate` for the "served == self-trained" laws:
+    the oracle emits the expected (k, TRUE) row, so any drift between
+    the stored-artifact path and the algorithm turns a driver row red."""
+    agree = served.join(reference, ["query_id", "neighbor_id", "cosine_sim"])
+    return (
+        served.agg(F.count("*").alias("n_served"))
+        .crossJoin(agree.agg(F.count("*").alias("_n_agree")))
+        .select(
+            "n_served",
+            (F.col("_n_agree") == F.col("n_served")).alias(
+                "artifact_serve_ok"
+            ),
+        )
+    )
+
+
 @register(
     "s33a_ann_recall_bound",
     "EXTERNAL recall certificate for s33 sign-LSH ANN: recall@10 vs "
@@ -1813,14 +1764,7 @@ def s47_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     old = emb.filter(F.col("vec_id") % 4 != 0)
     new = emb.filter(F.col("vec_id") % 4 == 0)
-    cents = (
-        old.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
+    cents = similarity.seed_centroids(old, 16)
     stored = similarity.ivf_assign_with_centroids(old, cents)
     incremental = similarity.ivf_append(stored, new, cents)
     return incremental.select("vec_id", "centroid_id", "c_sim").orderBy(
@@ -2652,16 +2596,9 @@ def _stage_ivf_artifacts(
 
     def build() -> tuple[str, str]:
         drop_table_and_location(spark, cents_name)
-        (
-            emb.orderBy("vec_id")
-            .limit(n_centroids)
-            .select(
-                F.col("vec_id").alias("centroid_id"),
-                F.col("embedding").alias("centroid_vec"),
-            )
-            .write.mode("overwrite")
-            .saveAsTable(cents_name)
-        )
+        similarity.seed_centroids(emb, n_centroids).write.mode(
+            "overwrite"
+        ).saveAsTable(cents_name)
         drop_table_and_location(spark, assign_name)
         similarity.ivf_assign_with_centroids(
             emb, spark.table(cents_name)
@@ -2757,7 +2694,7 @@ def _stage_ivf_artifacts(
             FROM e ORDER BY vec_id LIMIT 16
         ),
         qv AS (SELECT vec_id AS query_id, v AS qvec
-               FROM e ORDER BY vec_id LIMIT 1),
+               FROM e WHERE v IS NOT NULL ORDER BY vec_id LIMIT 1),
         probe AS (
             SELECT centroid_id FROM (
                 SELECT c.centroid_id,
@@ -2866,19 +2803,7 @@ def s59a_ivf_artifact_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, centroids=cents, assignments=assignments, **kw
     )
     in_query = similarity.ivf_topk(emb, **kw)
-    agree = served.join(
-        in_query, ["query_id", "neighbor_id", "cosine_sim"]
-    )
-    return (
-        served.agg(F.count("*").alias("n_served"))
-        .crossJoin(agree.agg(F.count("*").alias("_n_agree")))
-        .select(
-            "n_served",
-            (F.col("_n_agree") == F.col("n_served")).alias(
-                "artifact_serve_ok"
-            ),
-        )
-    )
+    return _serve_law_certificate(served, in_query)
 
 
 @register(
@@ -5371,7 +5296,8 @@ def d70_incremental_line_dedup(
     oracle=f"""
         WITH q AS (
             SELECT CAST(embedding AS DOUBLE[]) AS qv
-            FROM embeddings ORDER BY vec_id LIMIT 1
+            FROM embeddings WHERE embedding IS NOT NULL
+            ORDER BY vec_id LIMIT 1
         ),
         kw AS (
             -- each arm ranks over ITS OWN corpus before fusion (the
@@ -10519,14 +10445,7 @@ def s72_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_example_spark.sources.loaders import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-    )
+    cents = similarity.seed_centroids(emb, 16)
     # the stored index: full corpus assigned once under the frozen
     # quantizer (zero-norm rows excluded — never probe candidates)
     index = similarity.ivf_assign_with_centroids(emb, cents).filter(

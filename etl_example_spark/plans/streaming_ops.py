@@ -363,18 +363,11 @@ def _stream_in_four_files(df: DataFrame, schema) -> DataFrame:
 def _stage_centroids(corpus: DataFrame) -> str:
     """Stage the frozen IVF quantizer to scratch parquet: the corpus's
     16 lowest-id vectors as (centroid_id, centroid_vec)."""
-    from pyspark.sql import functions as F
+    from etl_example_spark.operators import similarity
 
     cents_dir = scratch_dir("ivf_quantizer_")
-    (
-        corpus.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("centroid_vec"),
-        )
-        .write.mode("overwrite")
-        .parquet(cents_dir)
+    similarity.seed_centroids(corpus, 16).write.mode("overwrite").parquet(
+        cents_dir
     )
     return cents_dir
 

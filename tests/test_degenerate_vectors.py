@@ -157,16 +157,9 @@ def test_all_null_vectors_raise_a_named_error(spark, call):
         call(emb, similarity).collect()
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["pq_topk", "ivfpq_topk-centroids", "ivfpq_residual_topk-centroids"],
-)
-def test_null_first_vector_still_serves(spark, name):
-    """A NULL vector on the row the dimension probe reads first must
-    not hide the valid vectors behind it."""
-    from etl_example_spark.operators import similarity
-
-    emb = spark.createDataFrame(
+def _null_first_corpus(spark):
+    """Four valid vectors behind a NULL one on the lowest id."""
+    return spark.createDataFrame(
         [
             (1, None),
             (2, [1.0, 0.0, 0.0, 1.0]),
@@ -176,9 +169,88 @@ def test_null_first_vector_still_serves(spark, name):
         ],
         "vec_id bigint, embedding array<float>",
     ).coalesce(1)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pq_topk", "ivfpq_topk-centroids", "ivfpq_residual_topk-centroids"],
+)
+def test_null_first_vector_still_serves(spark, name):
+    """A NULL vector on the row the dimension probe reads first must
+    not hide the valid vectors behind it."""
+    from etl_example_spark.operators import similarity
+
+    emb = _null_first_corpus(spark)
     rows = DIM_PROBING_CALLS[name](emb, similarity).collect()
     assert rows
     assert {r["query_id"] for r in rows} == {2}
+
+
+def _query_ids(rows) -> set:
+    return {r["query_id"] for r in rows if r["cosine_sim"] is not None}
+
+
+def _hybrid(emb, sim):
+    docs = emb.sparkSession.createDataFrame(
+        [(i, "data table") for i in range(1, 6)], "doc_id bigint, text string"
+    )
+    return sim.hybrid_search_rrf(docs, emb, ["data"], k=5)
+
+
+#: every function that picks a default query: the call, and how its
+#: rows name the query — a top-k row carries it; the hybrid arm keeps
+#: the query itself, the one vector at cosine 1.0; mmr leaves it out,
+#: so with a pool of the three other valid vectors it is the one
+#: valid id missing
+DEFAULT_QUERY_CALLS = {
+    "brute_force_topk": (
+        lambda emb, sim: sim.brute_force_topk(emb, k=2), _query_ids
+    ),
+    "ann_topk": (
+        lambda emb, sim: sim.ann_topk(emb, k=2, bits=1, dims=4), _query_ids
+    ),
+    "ivf_topk": (
+        lambda emb, sim: sim.ivf_topk(emb, k=2, n_centroids=2, nprobe=2),
+        _query_ids,
+    ),
+    "pq_topk": (
+        lambda emb, sim: sim.pq_topk(emb, k=2, m=2, n_codes=2), _query_ids
+    ),
+    "ivfpq_topk": (
+        lambda emb, sim: sim.ivfpq_topk(
+            emb, k=2, n_centroids=2, nprobe=2, m=2, n_codes=2
+        ),
+        _query_ids,
+    ),
+    "ivfpq_residual_topk": (
+        lambda emb, sim: sim.ivfpq_residual_topk(
+            emb, k=2, n_centroids=2, nprobe=2, m=2, n_codes=2
+        ),
+        _query_ids,
+    ),
+    "hybrid_search_rrf": (
+        _hybrid,
+        lambda rows: {r["doc_id"] for r in rows if r["cosine_sim"] == 1.0},
+    ),
+    "mmr_rerank": (
+        lambda emb, sim: sim.mmr_rerank(emb, k=3, pool=3),
+        lambda rows: {2, 3, 4, 5} - {r["vec_id"] for r in rows},
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "name", list(DEFAULT_QUERY_CALLS), ids=list(DEFAULT_QUERY_CALLS)
+)
+def test_default_query_skips_a_null_vector(spark, name):
+    """The default query is the lowest-id row whose vector is not
+    NULL: a NULL query would score every neighbor NULL and answer
+    nothing."""
+    from etl_example_spark.operators import similarity
+
+    call, query_of = DEFAULT_QUERY_CALLS[name]
+    rows = call(_null_first_corpus(spark), similarity).collect()
+    assert query_of(rows) == {2}
 
 
 @pytest.mark.parametrize(

@@ -3,6 +3,8 @@ ANN recall, LSH-vs-exact consistency, multimodal plumbing."""
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1880,6 +1882,185 @@ def test_lloyd_round_job_budget(spark, sf_correctness_dir, trainer):
         f"{trainer}: {per_round:.1f} jobs per extra round "
         f"({shallow} at 1 round, {deep} at 3)"
     )
+
+
+@pytest.fixture(scope="module")
+def served_index(spark, sf_correctness_dir):
+    """The sf0.01 embeddings and every stored serving artifact of the
+    IVF, IVF-PQ and residual IVF-PQ top-k paths, materialized."""
+    emb = load_table(spark, sf_correctness_dir, "embeddings")
+    norm = similarity.l2_normalize(emb, "embedding").localCheckpoint()
+    cents = similarity.ivf_train(emb, n_centroids=8, iters=1)
+    ncents = similarity.ivf_train(norm, n_centroids=8, iters=1)
+    cb = similarity.pq_train(norm, m=8, n_codes=8, iters=1)
+    rcents, rcb = similarity.ivfpq_residual_train(
+        emb, n_centroids=8, m=8, n_codes=8, iters=1
+    )
+    return dict(
+        emb=emb,
+        cents=cents,
+        assign=similarity.ivf_assign_with_centroids(emb, cents)
+        .localCheckpoint(),
+        ncents=ncents,
+        nassign=similarity.ivf_assign_with_centroids(norm, ncents)
+        .localCheckpoint(),
+        cb=cb,
+        codes=similarity.pq_encode_vectors(emb, cb, m=8).localCheckpoint(),
+        rcents=rcents,
+        rcb=rcb,
+        rcodes=similarity.ivfpq_residual_encode(emb, rcents, rcb, m=8)
+        .localCheckpoint(),
+    )
+
+
+_PQ = dict(k=5, m=8, n_codes=8, iters=1)
+_IVF = dict(k=5, n_centroids=8, nprobe=2)
+
+#: (call, build+collect jobs): each serving path self-trained and, where
+#: it has one, fully served from stored artifacts
+SERVING_JOBS = {
+    "ivf_topk-self": (lambda a: similarity.ivf_topk(a["emb"], **_IVF), 7),
+    "ivf_topk-served": (
+        lambda a: similarity.ivf_topk(
+            a["emb"], centroids=a["cents"], assignments=a["assign"], **_IVF
+        ),
+        4,
+    ),
+    "pq_topk-self": (lambda a: similarity.pq_topk(a["emb"], **_PQ), 14),
+    "ivfpq_topk-self": (
+        lambda a: similarity.ivfpq_topk(
+            a["emb"], nprobe=2, n_centroids=8, **_PQ
+        ),
+        18,
+    ),
+    "ivfpq_topk-served": (
+        lambda a: similarity.ivfpq_topk(
+            a["emb"], nprobe=2, n_centroids=8, centroids=a["ncents"],
+            codebooks=a["cb"], assignments=a["nassign"], codes=a["codes"],
+            **_PQ,
+        ),
+        12,
+    ),
+    "ivfpq_residual_topk-self": (
+        lambda a: similarity.ivfpq_residual_topk(
+            a["emb"], nprobe=2, n_centroids=8, **_PQ
+        ),
+        21,
+    ),
+    "ivfpq_residual_topk-served": (
+        lambda a: similarity.ivfpq_residual_topk(
+            a["emb"], nprobe=2, n_centroids=8, centroids=a["rcents"],
+            codebooks=a["rcb"], codes=a["rcodes"], **_PQ,
+        ),
+        11,
+    ),
+}
+
+
+@pytest.mark.parametrize("path", list(SERVING_JOBS), ids=list(SERVING_JOBS))
+def test_serving_path_job_count(spark, served_index, path):
+    """Building a top-k and collecting it launches a fixed number of
+    Spark jobs on the sf0.01 embeddings: the eager build collects plus
+    the execution, each centroid, query and probe block read once. A
+    higher count means a model-sized subtree re-executes again inside
+    every reference to it."""
+    from tests.jobs import launched_jobs
+
+    call, want = SERVING_JOBS[path]
+    with launched_jobs(spark) as launched:
+        rows = call(served_index).collect()
+    assert len(rows) == 5
+    assert len(launched) == want
+
+
+#: per-vector artifacts passed without the quantizer they were built with
+UNMATCHED_ARTIFACT_CALLS = {
+    "ivf_topk-assignments": (
+        "assignments=", lambda e: similarity.ivf_topk(e, assignments=e)
+    ),
+    "ivfpq_topk-assignments": (
+        "assignments=", lambda e: similarity.ivfpq_topk(e, assignments=e)
+    ),
+    "ivfpq_topk-codes": (
+        "codes=", lambda e: similarity.ivfpq_topk(e, centroids=e, codes=e)
+    ),
+    "ivfpq_residual_topk-codes": (
+        "codes=",
+        lambda e: similarity.ivfpq_residual_topk(e, codebooks=e, codes=e),
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "call", list(UNMATCHED_ARTIFACT_CALLS), ids=list(UNMATCHED_ARTIFACT_CALLS)
+)
+def test_artifact_without_its_quantizer_raises(spark, call):
+    """A stored per-vector artifact served next to a self-trained
+    quantizer would silently mix two indexes: the call must raise."""
+    name, serve = UNMATCHED_ARTIFACT_CALLS[call]
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id bigint, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match=name):
+        serve(emb)
+
+
+def _engine_calls(glob: str, match) -> list[str]:
+    """``module::function`` of every call in the engine files ``glob``
+    names that ``match`` accepts, once per call."""
+    import pathlib
+
+    import etl_example_spark
+
+    root = pathlib.Path(etl_example_spark.__file__).parent
+    found = []
+
+    def walk(node, module: str, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            if isinstance(child, ast.Call) and match(child):
+                found.append(f"{module}::{scope}")
+            walk(child, module, inner)
+
+    for path in sorted(root.glob(glob)):
+        module = path.relative_to(root).as_posix()
+        walk(ast.parse(path.read_text()), module, "<module>")
+    return found
+
+
+def _method(call: ast.Call) -> str | None:
+    return call.func.attr if isinstance(call.func, ast.Attribute) else None
+
+
+def _args(call: ast.Call) -> list[str]:
+    return [ast.unparse(a) for a in call.args]
+
+
+def test_one_serving_path_and_one_serve_certificate():
+    """Each serving stage exists once: the exact re-rank order and the
+    default-query ``orderBy(id).limit(1)`` pick in similarity.py live
+    in their helpers, and the serve-law boolean is built only by
+    ``_serve_law_certificate``."""
+    sim = "operators/similarity.py"
+    assert _engine_calls(
+        sim,
+        lambda c: _method(c) == "orderBy"
+        and _args(c) == ["F.desc('cosine_sim')", "'neighbor_id'"],
+    ) == [f"{sim}::_rerank"]
+    assert _engine_calls(
+        sim,
+        lambda c: _method(c) == "limit"
+        and _args(c) == ["1"]
+        and isinstance(c.func.value, ast.Call)
+        and _method(c.func.value) == "orderBy",
+    ) == [f"{sim}::_pick_query"]
+    assert _engine_calls(
+        "**/*.py",
+        lambda c: _method(c) == "alias"
+        and _args(c) == ["'artifact_serve_ok'"],
+    ) == ["plans/llm_ops.py::_serve_law_certificate"]
 
 
 class TestDftBinEnergy:
